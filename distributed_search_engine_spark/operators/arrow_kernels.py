@@ -515,26 +515,33 @@ def hll_registers_arrow(
 
 def _round6_half_up(x):
     """Vectorized twin of Spark's round(double, 6): BigDecimal.valueOf(x)
-    (= shortest decimal repr) setScale(6, HALF_UP). Fast path
-    floor(x*1e6 + 0.5) — exact except within ~1e-8 of a .5 boundary
-    (float-product error ≤ ~2^-53 relative, and shortest-repr vs exact
-    binary differs by < half an ulp) — with a decimal slow path for the
-    |frac-0.5| < 1e-6 guard band. Non-negative domain (squared
-    distances)."""
+    (= shortest decimal repr) setScale(6, HALF_UP); NaN and +-inf pass
+    through. Fast path floor(x*1e6 + 0.5). It can misround only near a
+    .5 boundary of y = x*1e6: the product and the shortest-repr vs exact
+    binary gap are each off by at most ~2^-53 * |y|. A decimal slow path
+    takes the guard band |frac-0.5| < max(1e-6, 1e-12 * |y|), which
+    grows with magnitude (a fixed band misrounds past |x| ~ 4e3) and
+    covers every value once |y| nears 2^52, where y + 0.5 itself rounds,
+    or overflows. Ties go away from zero on either sign, as in Spark."""
     import numpy as np
 
-    y = x * 1e6
-    frac = y - np.floor(y)
-    out = np.floor(y + 0.5) / 1e6
-    mask = np.abs(frac - 0.5) < 1e-6
+    with np.errstate(over="ignore", invalid="ignore"):  # inf/NaN inputs
+        y = x * 1e6
+        frac = y - np.floor(y)
+        out = np.floor(y + 0.5) / 1e6
+        band = np.maximum(1e-6, np.abs(y) * 1e-12)
+        # NaN frac: x*1e6 overflowed for a finite x
+        mask = ~(np.abs(frac - 0.5) >= band) & np.isfinite(x)
     if mask.any():
-        from decimal import ROUND_HALF_UP, Decimal
+        from decimal import ROUND_HALF_UP, Decimal, localcontext
 
         q = Decimal("0.000001")
-        vals = [
-            float(Decimal(repr(float(v))).quantize(q, ROUND_HALF_UP))
-            for v in np.atleast_1d(x[mask])
-        ]
+        with localcontext() as ctx:
+            ctx.prec = 400  # 309 integer digits of the largest double + 6
+            vals = [
+                float(Decimal(repr(float(v))).quantize(q, ROUND_HALF_UP))
+                for v in np.atleast_1d(x[mask])
+            ]
         out[mask] = vals
     return out
 
@@ -581,11 +588,12 @@ def assign_clusters_arrow(
     """(id, [v,] cluster, sqdist): nearest-centroid assignment — the
     clustering._best_expr twin (argmin over raw distances, ties to the
     lowest cluster = numpy first-occurrence argmin; sqdist is the raw
-    double — callers apply F.round like the JVM path)."""
+    double — callers apply F.round like the JVM path). ``id`` passes
+    through with the caller's type, as in the JVM path."""
     dim = len(centroids[0])
     cents = [list(map(float, c)) for c in centroids]
     sel = docs_emb.select(
-        F.col(id_col).cast("long").alias("id"),
+        F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
 
@@ -614,9 +622,9 @@ def assign_clusters_arrow(
                 names += ["cluster", "sqdist"]
                 yield pa.RecordBatch.from_arrays(cols, names=names)
 
-    schema = "id long, " + ("v array<double>, " if keep_vec else "") + (
-        "cluster int, sqdist double"
-    )
+    schema = f"id {sel.schema['id'].dataType.simpleString()}, " + (
+        "v array<double>, " if keep_vec else ""
+    ) + "cluster int, sqdist double"
     return sel.mapInArrow(_kernel, schema=schema)
 
 

@@ -130,6 +130,9 @@ def run_pagerank(
             ranks = docs.sparkSession.read.parquet(ckpt["path"]).persist()
     if ranks is None:
         ranks = nodes.select("doc_id", F.lit(1.0).alias("rank")).persist()
+    # fixed-iteration mode persists only at materialization points, so
+    # ``ranks`` is not always the frame that holds the cache
+    persisted = ranks
     history: list[PageRankStats] = []
 
     n_iter = fixed_iterations if fixed_iterations is not None else max_iterations
@@ -208,7 +211,8 @@ def run_pagerank(
         else:
             if materialize:
                 new_ranks.count()
-                ranks.unpersist()
+                persisted.unpersist()
+                persisted = new_ranks
             ranks = new_ranks
             history.append(PageRankStats(it, float("nan"), float("nan")))
 

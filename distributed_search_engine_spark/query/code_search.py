@@ -25,16 +25,28 @@ signals production code-search engines use instead of <title>:
   deep OFFSET re-sorts and skips rows on every request; a keyset filter
   prunes them before the heap, so page 1000 costs the same as page 2.
 
-100-TB shape: postings/doc-length stats come from one groupBy over the
-identifier postings (precomputed segment stats at scale — documented in
-the call sites); the query filter is a literal IN pushed to the postings
-scan; symbol/path joins touch only the filtered (term, doc) rows; no
-global sort anywhere (the scored frame returns unsorted; pagination uses
-a bounded ordered-limit). DuckDB twins: oracle.code_search_ranked_sql /
-cross_repo_dupes_sql / search_after_sql.
+100-TB shape: the corpus is indexed once per PERSISTED ``code_docs``
+frame. The first request on a frame the caller persisted builds one
+scoring table, one row per (term, doc) with every query-independent
+input of a contribution (tf, df, doc_len, path, is_def, n, avgdl), and
+persists it lazily: that request's scan fills it, with no extra job.
+Every later request is a pruned scan of the cached table (literal IN on
+term), the BM25 x definition x path expression and one per-doc partial
+aggregate: one shuffle, two jobs for a top-k. The table is keyed on the
+frame object and released when the frame is garbage-collected, or on
+the next request after the caller ran ``code_docs.unpersist()``. An
+unpersisted frame is a one-shot input: nothing is cached, and the IN
+filter prunes the identifier postings before the doc-stat and symbol
+joins, so those joins touch only the matching (term, doc) rows. No
+global sort anywhere (the scored frame returns unsorted; pagination
+uses a bounded ordered-limit). DuckDB twins:
+oracle.code_search_ranked_sql / cross_repo_dupes_sql / search_after_sql.
 """
 
 from __future__ import annotations
+
+import threading
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,24 +57,17 @@ from ..operators.code_symbols import extract_symbols
 BM25_K1 = 1.2
 BM25_B = 0.75
 
+# persisted code_docs frame -> (scoring table, its release finalizer)
+_SCORING_TABLES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_SCORING_TABLES_LOCK = threading.Lock()
 
-def code_search_ranked(
-    code_docs: DataFrame,
-    terms: list[str],
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    sym_weight: float = 1.0,
-    path_weight: float = 0.5,
-) -> DataFrame:
-    """(doc_id, score, n_matched): BM25 over the dual identifier index,
-    each term's contribution scaled x(1+sym_weight) on a definition
-    match and x(1+path_weight) on a path match.
 
-    ``code_docs`` needs (doc_id, lang, path, content). Unsorted full
-    frame (the gate hashes order-insensitively; callers top-k with a
-    bounded ordered limit).
-    """
-    terms = [t.lower() for t in terms]
+def _scoring_rows(code_docs: DataFrame, terms: list[str] | None) -> DataFrame:
+    """(term, doc_id, tf, df, doc_len, path, is_def, n, avgdl): the
+    query-independent inputs of each (term, doc) contribution. With
+    ``terms`` the literal IN filter prunes the postings before the joins
+    (one-shot placement); with None it is the full table over every
+    indexed term (the index placement)."""
     postings = code_postings(code_docs, content_col="content")
 
     # per-doc length over the identifier postings; N/avgdl over ALL docs
@@ -82,8 +87,10 @@ def code_search_ranked(
         F.avg("doc_len").alias("avgdl"),
     )
 
-    q = postings.where(F.col("term").isin(terms))
+    q = postings if terms is None else postings.where(F.col("term").isin(terms))
     df_ = q.groupBy("term").agg(F.count(F.lit(1)).cast("int").alias("df"))
+    if terms is not None:
+        df_ = F.broadcast(df_)  # one row per query term
 
     # definition terms per doc: whole lowercased symbol + its subtokens
     defs = (
@@ -103,37 +110,94 @@ def code_search_ranked(
         .withColumn("is_def", F.lit(1))
     )
 
-    scored = (
-        q.join(F.broadcast(df_), "term")
+    return (
+        q.join(df_, "term")
         .join(dstats, "doc_id")
         .join(defs, ["doc_id", "term"], "left")
         .crossJoin(F.broadcast(nstats))
         .select(
-            "doc_id",
-            "term",
-            (
-                F.log(
-                    (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                    + 1.0
-                )
-                * F.col("tf")
-                * (k1 + 1.0)
-                / (
-                    F.col("tf")
-                    + k1
-                    * (1.0 - b + b * F.col("doc_len") / F.col("avgdl"))
-                )
-                * (1.0 + sym_weight * F.coalesce(F.col("is_def"), F.lit(0)))
-                * F.when(
-                    F.col("path").contains(F.col("term")),
-                    1.0 + path_weight,
-                ).otherwise(F.lit(1.0))
-            ).alias("contrib"),
+            "term", "doc_id", "tf", "df", "doc_len", "path", "is_def", "n",
+            "avgdl",
         )
+    )
+
+
+def _release(code_docs: DataFrame) -> None:
+    with _SCORING_TABLES_LOCK:
+        entry = _SCORING_TABLES.pop(code_docs, None)
+    if entry is not None:
+        entry[1]()  # unpersists the table, once
+
+
+def _scoring_table(code_docs: DataFrame) -> DataFrame:
+    """The full scoring table of a persisted ``code_docs``, built on first
+    use. It is persisted lazily (the first request's scan fills it) and
+    released when ``code_docs`` is garbage-collected, or on the next
+    request after the caller unpersisted ``code_docs``."""
+    with _SCORING_TABLES_LOCK:
+        entry = _SCORING_TABLES.get(code_docs)
+        if entry is None:
+            table = _scoring_rows(code_docs, None).persist()
+            release = weakref.finalize(code_docs, table.unpersist)
+            release.atexit = False
+            entry = _SCORING_TABLES[code_docs] = (table, release)
+    return entry[0]
+
+
+def code_search_ranked(
+    code_docs: DataFrame,
+    terms: list[str],
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+    sym_weight: float = 1.0,
+    path_weight: float = 0.5,
+) -> DataFrame:
+    """(doc_id, score, n_matched): BM25 over the dual identifier index,
+    each term's contribution scaled x(1+sym_weight) on a definition
+    match and x(1+path_weight) on a path match.
+
+    ``code_docs`` needs (doc_id, lang, path, content). Unsorted full
+    frame (the gate hashes order-insensitively; callers top-k with a
+    bounded ordered limit). A persisted ``code_docs`` is indexed once:
+    every request on it filters the cached scoring table instead of
+    re-tokenizing the corpus.
+    """
+    terms = [t.lower() for t in terms]
+    if code_docs.is_cached:
+        rows = _scoring_table(code_docs).where(F.col("term").isin(terms))
+        # a plain partial aggregate: one shuffle, where count_distinct
+        # plans a second one
+        n_matched = F.size(F.collect_set("term"))
+    else:
+        _release(code_docs)
+        rows = _scoring_rows(code_docs, terms)
+        n_matched = F.count_distinct("term")
+
+    scored = rows.select(
+        "doc_id",
+        "term",
+        (
+            F.log(
+                (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
+                + 1.0
+            )
+            * F.col("tf")
+            * (k1 + 1.0)
+            / (
+                F.col("tf")
+                + k1
+                * (1.0 - b + b * F.col("doc_len") / F.col("avgdl"))
+            )
+            * (1.0 + sym_weight * F.coalesce(F.col("is_def"), F.lit(0)))
+            * F.when(
+                F.col("path").contains(F.col("term")),
+                1.0 + path_weight,
+            ).otherwise(F.lit(1.0))
+        ).alias("contrib"),
     )
     return scored.groupBy("doc_id").agg(
         F.round(F.sum("contrib"), 6).alias("score"),
-        F.count_distinct("term").cast("int").alias("n_matched"),
+        n_matched.cast("int").alias("n_matched"),
     )
 
 

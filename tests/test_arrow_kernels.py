@@ -212,3 +212,61 @@ def test_round6_half_up_matches_spark_round(spark):
     want = [r["y"] for r in df.select(F.round("x", 6).alias("y")).collect()]
     got = list(_round6_half_up(np.array(vals, dtype=np.float64)))
     assert got == want, list(zip(vals, got, want))
+
+
+def test_round6_half_up_large_magnitudes_match_spark_round(spark):
+    """|x| > 4e3 at .5 boundaries: the float error of x*1e6 outgrows a
+    fixed guard band there, so the band must scale with magnitude. Also
+    negative ties (away from zero), magnitudes where x*1e6 loses the
+    .5 or overflows, and NaN/inf pass-through."""
+    import random
+
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from distributed_search_engine_spark.operators.arrow_kernels import (
+        _round6_half_up,
+    )
+
+    rng = random.Random(11)
+    vals = []
+    for lo, hi in ((4_000, 10**5), (10**5, 10**7), (10**7, 10**9)):
+        for _ in range(100):
+            ip, frac6 = rng.randrange(lo, hi), rng.randrange(10**6)
+            sign = rng.choice(("", "-"))
+            # just below, at and just above the boundary
+            for tail in ("4999999", "5", "5000001"):
+                vals.append(float(f"{sign}{ip}.{frac6:06d}{tail}"))
+    vals += [
+        4500.0000005, 123456789012.3456785, 9007199254.7409915, 1e15 + 0.5,
+        -2.5e-6, -1.0000005, 1e300, -1.7e308, 1.7976931348623157e308,
+        float("inf"), float("-inf"), float("nan"),
+    ]
+    df = spark.createDataFrame([(v,) for v in vals], "x double")
+    want = [r["y"] for r in df.select(F.round("x", 6).alias("y")).collect()]
+    got = list(_round6_half_up(np.array(vals, dtype=np.float64)))
+    bad = [(v, g, w) for v, g, w in zip(vals, got, want) if repr(g) != repr(w)]
+    assert not bad, bad[:10]
+
+
+def test_assign_clusters_kernel_keeps_string_ids(spark, kvecs):
+    """Non-numeric ids pass through the kernel with their type, as in the
+    JVM path (a long cast would fail on them under ANSI)."""
+    from pyspark.sql import functions as F
+
+    from distributed_search_engine_spark.operators.clustering import (
+        assign_clusters,
+        seeded_centroids,
+        update_centroids,
+    )
+
+    svecs = kvecs.select(
+        F.concat(F.lit("v"), F.col("vec_id")).alias("vec_id"), "embedding"
+    )
+    cents = seeded_centroids(8, 16, seed=5)
+    got = assign_clusters(svecs, cents)
+    assert got.schema["vec_id"].dataType.simpleString() == "string"
+    assert _rows(got) == _rows(assign_clusters(svecs, cents, use_arrow=False))
+    assert _rows(update_centroids(svecs, cents)) == _rows(
+        update_centroids(kvecs, cents)
+    )

@@ -5,15 +5,22 @@ The oracle gates (search_code_ranked / dedup_cross_repo /
 search_page_after) cover cross-engine value parity at both SFs; these
 tests pin the SEMANTICS on controlled corpora: the exact multiplier a
 definition match and a path match apply, the >=2-repos filter, and
-keyset-pagination == rank-window-pagination under ties.
+keyset-pagination == rank-window-pagination under ties. A persisted
+corpus frame is served from a cached scoring table; the differential
+tests pin it to the one-shot plan, exactly, and pin its plan, job count
+and release.
 """
 
 from __future__ import annotations
+
+import gc
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from distributed_search_engine_spark.query.code_search import (
+    code_search_collapsed,
     code_search_ranked,
     cross_repo_dupes,
     search_after_page,
@@ -95,10 +102,6 @@ def test_collapsed_keeps_best_copy_and_counts_matched_dupes(spark):
     # repos/paths) + one unique file: the collapsed result has one row
     # per content group; the dup group keeps the lexicographically-first
     # doc on a score tie and reports n_copies=2
-    from distributed_search_engine_spark.query.code_search import (
-        code_search_collapsed,
-    )
-
     rows = [
         ("a", "python", "src/x/m.py", "def parse(a):\n    return a"),
         ("b", "python", "src/y/m.py", "def parse(a):\n    return a"),
@@ -142,3 +145,161 @@ def test_code_ranked_plan_prunes_terms_before_the_agg_and_broadcasts(
             )
     phys = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in phys
+
+
+# ---------------------------------------------------------------------------
+# persisted (indexed) vs unpersisted (one-shot) placement
+# ---------------------------------------------------------------------------
+
+CODE_SCHEMA = "doc_id string, lang string, path string, content string"
+# every doc with content carries `handler`; `e` has NULL content, `f`
+# non-ASCII identifiers; `g` duplicates `a` for the collapsed frame
+DIFF_ROWS = [
+    ("a", "python", "src/parse/lex.py",
+     "def parse_data(buf):\n    return buf\nclass DataHandler:\n    pass"),
+    ("b", "python", "src/util/io.py",
+     "x = parse_data(y)\nparseData = handler(x)\nHTTPHandler(x)"),
+    ("c", "javascript", "lib/handler.js",
+     "function handlerFor(data) {\n  return parse(data)\n}"),
+    ("d", "go", "pkg/data/data.go",
+     "func ParseData(b []byte) error {\n  return handler(b)\n}"),
+    ("e", "python", "src/empty.py", None),
+    ("f", "python", "src/größe/ü.py",
+     "def größe_handler(naïve):\n    return naïve_données"),
+    ("g", "python", "vendor/parse/lex.py",
+     "def parse_data(buf):\n    return buf\nclass DataHandler:\n    pass"),
+]
+TERM_SETS = [
+    ["parse"],
+    ["parse", "data", "handler"],
+    ["Parse", "HANDLER", "DataHandler"],
+    ["parse", "parse", "PARSE"],
+    ["nothingmatchesthis"],
+    ["handler"],
+    ["größe", "naïve", "handler"],
+]
+WEIGHTS = [{}, {"k1": 0.9, "b": 0.3, "sym_weight": 2.5, "path_weight": 0.0}]
+
+
+@pytest.fixture(scope="module")
+def placements(spark):
+    """(one-shot, persisted) frames over the same rows; the persisted one
+    is released at teardown so no cache outlives the module."""
+    plain = spark.createDataFrame(DIFF_ROWS, CODE_SCHEMA)
+    cached = spark.createDataFrame(DIFF_ROWS, CODE_SCHEMA).persist()
+    yield plain, cached
+    cached.unpersist()
+    del cached
+    gc.collect()
+
+
+def _full(df):
+    return sorted(map(tuple, df.collect()))
+
+
+@pytest.mark.parametrize("weights", WEIGHTS, ids=["default", "tuned"])
+@pytest.mark.parametrize("terms", TERM_SETS, ids=lambda t: "+".join(t))
+def test_persisted_frame_ranks_exactly_like_one_shot(placements, terms, weights):
+    plain, cached = placements
+    want = _full(code_search_ranked(plain, terms, **weights))
+    assert _full(code_search_ranked(cached, terms, **weights)) == want
+    if "handler" in terms:
+        assert {r[0] for r in want} == {"a", "b", "c", "d", "f", "g"}
+
+
+@pytest.mark.parametrize("terms", TERM_SETS[:3], ids=lambda t: "+".join(t))
+def test_persisted_frame_collapses_exactly_like_one_shot(placements, terms):
+    plain, cached = placements
+    want = _full(code_search_collapsed(plain, terms))
+    assert _full(code_search_collapsed(cached, terms)) == want
+    assert any(r[3] == 2 for r in want)  # a and g are one content group
+
+
+def _plan_nodes(df):
+    """simpleString of every executed physical node, walking into query
+    stages but not into a cached relation's own plan."""
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        out.append(node.simpleString(1000))
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(node.plan())
+        elif name != "InMemoryTableScan":
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def _top10_jobs(spark, df, group):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        rows = df.orderBy(F.desc("score"), F.asc("doc_id")).limit(10).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    time.sleep(1.0)  # let the listener bus deliver the job events
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_persisted_frame_serves_from_the_cached_table_in_two_jobs(spark):
+    docs = spark.createDataFrame(DIFF_ROWS, CODE_SCHEMA).persist()
+    docs.count()
+    code_search_ranked(docs, ["handler"]).collect()  # builds the table
+    second = code_search_ranked(docs, ["parse", "data"])
+    rows, jobs = _top10_jobs(spark, second, "code-search-indexed")
+    nodes = _plan_nodes(second)
+    assert rows and jobs <= 2, jobs
+    assert any(n.startswith("InMemoryTableScan") for n in nodes)
+    assert not any(n.startswith("Generate") for n in nodes), nodes
+    assert not any("regexp_extract_all" in n for n in nodes), nodes
+    docs.unpersist()
+    code_search_ranked(docs, ["x"])
+
+
+def test_unpersisted_frame_keeps_the_one_shot_plan(spark):
+    docs = spark.createDataFrame(DIFF_ROWS, CODE_SCHEMA)
+    before = _persistent_rdds(spark)
+    df = code_search_ranked(docs, ["parse", "data"])
+    _top10_jobs(spark, df, "code-search-one-shot")
+    nodes = _plan_nodes(df)
+    assert not _persistent_rdds(spark) - before
+    assert not any(n.startswith("InMemoryTableScan") for n in nodes)
+    assert any(n.startswith("Generate") for n in nodes)
+    assert any("regexp_extract_all" in n for n in nodes)
+
+
+def test_scoring_table_released_after_unpersist_and_after_gc(spark):
+    # ids, not counts: other tests' cached RDDs may be cleaned meanwhile
+    src = spark.createDataFrame(DIFF_ROWS, CODE_SCHEMA)
+    baseline = _persistent_rdds(spark)
+
+    docs = src.select("*").persist()
+    docs.count()
+    with_docs = _persistent_rdds(spark)
+    code_search_ranked(docs, ["parse"]).collect()
+    table = _persistent_rdds(spark) - with_docs
+    assert len(table) == 1
+    docs.unpersist()
+    code_search_ranked(docs, ["parse"]).collect()  # the next call releases
+    assert not _persistent_rdds(spark) - baseline
+
+    docs = src.select("*").persist()
+    docs.count()
+    with_docs = _persistent_rdds(spark)
+    code_search_ranked(docs, ["parse"]).collect()
+    table = _persistent_rdds(spark) - with_docs
+    assert len(table) == 1
+    del docs
+    gc.collect()
+    left = _persistent_rdds(spark)
+    assert not table & left
+    assert left - baseline == with_docs - baseline  # the caller's own cache
+    src.select("*").unpersist()
+    assert not _persistent_rdds(spark) - baseline

@@ -136,3 +136,24 @@ def test_resume_past_end_returns_checkpoint(spark, tmp_path):
                            state_dir=state)
     assert hist == []  # nothing left to do
     assert {tuple(r) for r in a.collect()} == {tuple(r) for r in b.collect()}
+
+
+def test_fixed_iterations_keep_only_the_returned_frame_cached(spark):
+    """The fixed-iteration loop persists only at materialization points;
+    each earlier persisted frame (the initial ranks included) must be
+    released, leaving exactly the returned frame cached. Node names of
+    its own: Spark shares one cache between equal plans."""
+    import gc
+
+    docs = spark.createDataFrame([("leak" + n,) for n in NODES], "doc_id string")
+    links = spark.createDataFrame(
+        [("leak" + s, "leak" + d) for s, d in LINKS], "src string, dst string"
+    )
+    gc.collect()
+    # ids, not counts: other tests' cached RDDs may be cleaned meanwhile
+    rdds = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    baseline = rdds()
+    ranks, _ = run_pagerank(docs, links, fixed_iterations=3)
+    assert len(rdds() - baseline) == 1
+    ranks.unpersist()
+    assert not rdds() - baseline
