@@ -191,7 +191,17 @@ def lsh_candidate_pairs(
 
     rows_per_band = n_hashes / bands; band key = concat of that band's
     min-hashes. Bucket join on (band_id, band_key) — the only shuffle —
-    then distinct pairs with doc_a < doc_b."""
+    then distinct pairs with doc_a < doc_b.
+
+    Durability: the signatures are materialized with
+    ``localCheckpoint(eager=True)``, so calling this runs one Spark job
+    at once, even if the returned frame is never used. Local-checkpoint
+    blocks live only on the executor that computed them, with no
+    replica and no lineage back to the input: if that executor is lost
+    before the pairs are consumed, the downstream stages fail instead of
+    recomputing, and the caller must rerun the call. ``persist()`` +
+    ``count()`` would keep the lineage, at the cost of a second
+    signature pass after such a loss."""
     rows_per_band = n_hashes // bands
     # materialize the signatures ONCE before the banded self-join: the
     # join's two sides are separate subtrees to the planner (ReuseExchange
@@ -518,6 +528,11 @@ def pigeonhole_candidates(
     N/256 a single 8-bit chunk key gives. A degenerate hot block (e.g.
     near-empty docs all hashing a zero chunk) no longer creates a quadratic
     bucket: colliders must now agree on ~32 specific bits.
+
+    Durability: like lsh_candidate_pairs, the fingerprints are
+    materialized with ``localCheckpoint(eager=True)`` — one Spark job at
+    call time, and non-replicated blocks that are lost with their
+    executor, failing the downstream stages instead of recomputing.
     """
     m = n_blocks if n_blocks is not None else auto_n_blocks(max_hamming)
     if m <= max_hamming:

@@ -25,20 +25,24 @@ Response dict:
   suggestion   corrected query string or None (only when spellcheck
                fired on zero results — the reference's same trigger)
 
-Composition only — every stage is the already-gated operator (search /
-CachedSearchEngine / snippets / spellcheck_query), so this file adds no
-new math; tests pin the wiring (zero-result spellcheck trigger, cached
+Composition only — every stage is an already-gated operator (search /
+CachedSearchEngine / snippet_text / spellcheck_query), so this file adds
+no new math; tests pin the wiring (zero-result spellcheck trigger, cached
 second page costing zero Spark jobs, snippet attachment on the page
-slice only)."""
+slice only). Page snippets are the reference's per-result point gets:
+one JVM-only job collects the page docs' content, and snippet_text runs
+on the driver, with no Python worker."""
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
+from ..functions.text import tokenize_py
 from .cache import PAGE_SIZE, CachedSearchEngine
 from .engine import SearchIndex, search
-from .suggest import snippets as _snippets
-from .suggest import spellcheck_query
+from .suggest import snippet_text, spellcheck_query
+from .suggest import snippets as _snippets  # noqa: F401  (perfbench/serve.py wraps it)
 
 
 def search_request(
@@ -73,13 +77,13 @@ def search_request(
 
     if page_rows and request.get("snippets") and docs is not None:
         ids = [r["doc_id"] for r in page_rows]
+        doc_id = F.col("doc_id").cast("string")
+        terms, highlight = tokenize_py(q), bool(request.get("highlight"))
         snips = {
-            r["doc_id"]: r["snippet"]
-            for r in _snippets(
-                docs.where(docs["doc_id"].cast("string").isin(ids)),
-                q,
-                highlight=bool(request.get("highlight")),
-            ).collect()
+            r["doc_id"]: snippet_text(r["content"], terms, highlight)
+            for r in docs.where(doc_id.isin(ids))
+            .select(doc_id.alias("doc_id"), "content")
+            .collect()
         }
         for r in page_rows:
             r["snippet"] = snips.get(str(r["doc_id"]), "")

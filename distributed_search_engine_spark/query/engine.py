@@ -11,12 +11,16 @@ Two scorer modes (SURVEY §7.1):
   - "bm25": BM25 (k1=1.2, b=0.75, Robertson idf) blended with PageRank as
     score*(1+pr) — the north-star benchmark scorer.
 
-Spark-first: the expanded-terms set (a few dozen strings) is broadcast; the
-postings join is an equi-join on `term` that Catalyst turns into a
-broadcast-hash join against the (tiny) expansion table, so only matching
-index partitions are read when postings are stored term-hash-partitioned
-(index/segments.py provides the pruned reader). Everything after the first
-join touches only candidate docs — a small DataFrame.
+Spark-first: a reference-mode query is one Spark SQL plan with one shuffle.
+Its expansion and matched-boost tables (a few dozen strings) are inlined
+map literals, so no driver-built relation, and no broadcast job for one,
+enters the plan. The postings scan is filtered to the expanded terms, so
+only matching index partitions are read when postings are stored
+term-hash-partitioned (index/segments.py provides the pruned reader). One
+groupBy(doc_id) does the per-term dedup, the position merge and the
+matched-boost count; everything after it touches only candidate docs — a
+small DataFrame. BM25 mode joins the postings against a broadcast
+expansion table (_candidates).
 
 Deterministic tie-break: (score desc, doc_id asc); the reference leaves ties
 unspecified (SearchEngine.java:616, HashMap order) — SURVEY §4 item 5.
@@ -24,6 +28,10 @@ unspecified (SearchEngine.java:616, HashMap order) — SURVEY §4 item 5.
 
 from __future__ import annotations
 
+import contextlib
+import threading
+import uuid
+import weakref
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -62,20 +70,30 @@ class SearchIndex:
     ranks: DataFrame | None = None  # (doc_id, rank)
     postings_for_terms: object | None = None  # Callable[[list[str]], DataFrame]
     _avgdl: float | None = field(default=None, repr=False)
-    # opt-in driver-side stem -> [terms] map: saves one Spark job per query
-    # on the related-words lookup. Only cache when the vocabulary fits the
-    # driver (the reference holds its whole term dictionary in frontend
-    # memory, SearchEngine.java:893-923 — same tradeoff); leave None at
-    # web scale and the lookup stays a pruned distributed scan.
+    # opt-in driver-side vocabulary maps, filled by cache_term_dict():
+    # stem -> [terms] for the related-words expansion, and term ->
+    # (idf, is_stop) for reference-mode scoring. With them a query plans
+    # with no Spark job (no related-words collect), its idf values are
+    # inlined into the scoring statement (no term_stats join), and a query
+    # of unknown terms returns an empty local relation. Only cache when
+    # the vocabulary fits the driver (the reference holds its whole term
+    # dictionary in frontend memory, SearchEngine.java:893-923 — same
+    # tradeoff); leave None at web scale and both lookups stay
+    # distributed.
     _stem_map: dict | None = field(default=None, repr=False)
+    _term_stats: dict | None = field(default=None, repr=False)
 
     def cache_term_dict(self) -> "SearchIndex":
-        """Collect the (stem -> terms) map once for repeated-query
-        workloads (bench / interactive frontends)."""
+        """Collect the (stem -> terms) and (term -> idf, is_stop) maps once
+        for repeated-query workloads (bench / interactive frontends)."""
         out: dict[str, list[str]] = {}
         for r in self.term_dict.select("stem", "term").collect():
             out.setdefault(r["stem"], []).append(r["term"])
         self._stem_map = out
+        self._term_stats = {
+            r["term"]: (r["idf"], r["is_stop"])
+            for r in self.term_stats.select("term", "idf", "is_stop").collect()
+        }
         return self
 
     def lookup_postings(self, terms: list[str]) -> DataFrame:
@@ -249,6 +267,91 @@ def title_boost_py(title: str, search_terms: list[str]) -> float:
     return base
 
 
+REFERENCE_SCHEMA = "doc_id string, score double, tfidf double, pagerank double, title string"
+TITLE_BOOST_UDF = "dse_title_boost"
+# session -> True once the title-boost UDF is registered in it
+_TITLE_BOOST_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+# index frame -> the temp-view name it is registered under (see _index_view)
+_INDEX_VIEWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_REGISTRY_LOCK = threading.Lock()
+
+
+def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
+    """Zero-row frame of a flat DDL schema ("name type, ..."), planned as an
+    empty local relation: collecting it runs no Spark job, where
+    ``createDataFrame([], schema)`` parallelizes an RDD and costs one."""
+    cols = ", ".join(
+        f"CAST(NULL AS {typ}) AS `{name}`"
+        for name, typ in (c.split() for c in schema.split(","))
+    )
+    return spark.sql(f"SELECT {cols} WHERE false")
+
+
+def _sql_str(s: str) -> str:
+    """Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_double(x: float) -> str:
+    """Exact double literal: Spark SQL reads a bare ``1.5`` as DECIMAL, and
+    repr() round-trips every finite double."""
+    return f"{float(x)!r}D"
+
+
+def _sql_map(entries: list[tuple[str, str]]) -> str:
+    return "map(" + ", ".join(f"{_sql_str(k)}, {v}" for k, v in entries) + ")"
+
+
+def _drop_view(spark: SparkSession, name: str) -> None:
+    # through the session catalog: spark.catalog.dropTempView would also
+    # uncache the view's plan, i.e. the caller's persisted index frame
+    spark._jsparkSession.sessionState().catalog().dropTempView(name)
+
+
+def _index_view(df: DataFrame) -> str:
+    """Temp-view name of a long-lived index frame, registered on first use
+    and dropped when the frame is garbage-collected: registering re-checks
+    the frame's whole plan, ~20 ms per frame per query otherwise."""
+    with _REGISTRY_LOCK:
+        name = _INDEX_VIEWS.get(df)
+        if name is None:
+            name = _INDEX_VIEWS[df] = f"_dse_index_{uuid.uuid4().hex}"
+            df.createOrReplaceTempView(name)
+            weakref.finalize(df, _drop_view, df.sparkSession, name).atexit = False
+    return name
+
+
+@contextlib.contextmanager
+def _query_view(spark: SparkSession, df: DataFrame):
+    """Temp-view name of a per-query frame, dropped on exit."""
+    name = f"_dse_query_{uuid.uuid4().hex}"
+    df.createOrReplaceTempView(name)
+    try:
+        yield name
+    finally:
+        _drop_view(spark, name)
+
+
+def _register_title_boost(spark: SparkSession) -> None:
+    """Session-scoped pandas UDF (title, query terms) -> Q11 boost; the
+    query terms are an argument, so one registration serves every query."""
+    with _REGISTRY_LOCK:
+        if spark in _TITLE_BOOST_SESSIONS:
+            return
+        import pandas as pd
+        from pyspark.sql.types import DoubleType
+
+        # no type hints: `pd` is function-local, so postponed-evaluation
+        # string annotations would not resolve in pandas_udf's inference
+        def _tboost(titles, terms):
+            return pd.Series(
+                [title_boost_py(t or "", list(ts)) for t, ts in zip(titles, terms)]
+            )
+
+        spark.udf.register(TITLE_BOOST_UDF, F.pandas_udf(_tboost, DoubleType()))
+        _TITLE_BOOST_SESSIONS[spark] = True
+
+
 def search(
     spark: SparkSession,
     index: SearchIndex,
@@ -269,14 +372,9 @@ def search(
     scores 1.8/1.2 instead of 7.2/4.8 — SURVEY §5 discrepancy note).
     """
     search_terms = tokenize_query(query)
-    empty = spark.createDataFrame(
-        [], "doc_id string, score double, tfidf double, pagerank double, title string"
-    )
-    if not search_terms:
-        return empty
     # Q2: single-term stop-word short-circuit (SearchEngine.java:117-127)
-    if len(search_terms) == 1 and search_terms[0] in STOP_WORDS:
-        return empty
+    if not search_terms or (len(search_terms) == 1 and search_terms[0] in STOP_WORDS):
+        return empty_frame(spark, REFERENCE_SCHEMA)
 
     stems = {
         porter_stem(t)
@@ -284,119 +382,174 @@ def search(
         if t not in STOP_WORDS and porter_stem(t) != t
     }
     expansion = expand_terms(search_terms, _related_words(index, stems))
-    cand = _candidates(spark, index, expansion)
 
     if mode == "bm25":
+        cand = _candidates(spark, index, expansion)
         return _score_bm25(spark, index, cand, search_terms, k)
+    return _search_reference(
+        spark, index, search_terms, expansion, k, all_matched_boost, use_title_boost
+    )
 
-    # ---- reference mode ----
+
+def _search_reference(
+    spark: SparkSession,
+    index: SearchIndex,
+    search_terms: list[str],
+    expansion: list[tuple[str, str, int]],
+    k: int | None,
+    all_matched_boost: bool,
+    use_title_boost: bool,
+) -> DataFrame:
+    """Reference mode (Q5-Q12) as one Spark SQL plan with one shuffle.
+
+    The postings of the expanded and matched-boost terms are scanned once
+    and grouped by doc_id. Per original term, filtered aggregates take the
+    first VALID expanded posting in expansion order (Q5) and merge the
+    positions of all its expanded postings (Q6); the matched-boost count
+    (Q10) is the number of distinct originals whose raw or stem posting
+    hit the doc. The expansion and boost tables are inlined map literals,
+    so no driver-built relation, and no broadcast job for one, enters the
+    plan. The plan is written as two statements, the scoring core and the
+    blend (ranks, titles, title boost, top-k): analysis iterates to a
+    fixed point over the whole tree, and the ranks and doc_stats lineages
+    are far deeper than the postings', so one statement took ~1.5x longer
+    to plan."""
     n_terms = len(search_terms)
-    distinct_terms = list(dict.fromkeys(search_terms))
+    multi = n_terms > 1
+    origs = list(dict.fromkeys(search_terms))
+    boost = matched_boost_pairs(search_terms) if multi and all_matched_boost else []
+    exp_terms = [t for t, _, _ in expansion]
+    lookup = list(dict.fromkeys(exp_terms + [t for t, _ in boost]))
 
-    # Q5: first VALID expanded posting per (doc, orig) contributes tfidf;
-    # Q6: positions merged across ALL expanded postings (incl. stop entries).
-    valid = (~F.col("is_stop")) & (F.col("normalized_tf") > 0)
-    per_doc_orig = cand.groupBy("doc_id", "orig").agg(
-        F.min(
-            F.when(
-                valid,
-                F.struct(
-                    F.col("priority"), F.col("term"),
-                    (F.col("normalized_tf") * F.col("idf")).alias("contrib"),
-                ),
-            )
-        ).alias("best"),
-        F.array_sort(F.array_distinct(F.flatten(F.collect_list("positions")))).alias("positions"),
-    )
-    per_doc_orig = per_doc_orig.select(
-        "doc_id", "orig", "positions", F.col("best.contrib").alias("contrib")
-    )
+    known = index._term_stats
+    if known is not None:
+        lookup = [t for t in lookup if t in known]
+        # docs enter only through a valid (non-stop) contribution, and the
+        # AND filter needs postings for every original term
+        scorable = any(t in known and not known[t][1] for t in exp_terms)
+        covered = {o for t, o, _ in expansion if t in known}
+        if not scorable or (multi and len(covered) < len(origs)):
+            return empty_frame(spark, REFERENCE_SCHEMA)
 
-    agg = per_doc_orig.groupBy("doc_id").agg(
-        F.sum("contrib").alias("tfidf"),
-        F.count(F.when(F.size("positions") > 0, 1)).alias("terms_with_pos"),
-        F.map_from_entries(F.collect_list(F.struct("orig", "positions"))).alias("posmap"),
-    )
-    # docs enter tfidfSums only via a valid contribution
-    agg = agg.where(F.col("tfidf").isNotNull())
-
-    if n_terms > 1:
-        # Q7 AND filter: every original term must have positions in the doc
-        agg = agg.where(F.col("terms_with_pos") == len(distinct_terms))
-        # Q8 phrase boost: every adjacent pair adjacent somewhere in the doc
-        pair_checks = [
-            F.arrays_overlap(
-                F.transform(F.col("posmap")[w1], lambda p: p + 1),
-                F.col("posmap")[w2],
-            )
-            for w1, w2 in zip(search_terms, search_terms[1:])
-        ]
-        phrase = pair_checks[0]
-        for pc in pair_checks[1:]:
-            phrase = phrase & pc
-        agg = agg.withColumn(
-            "tfidf", F.when(phrase, F.col("tfidf") * 1.5).otherwise(F.col("tfidf"))
-        )
-
-    # Q9: PageRank blend
-    ranks = index.ranks
-    if ranks is not None:
-        agg = agg.join(ranks.select("doc_id", "rank"), "doc_id", "left")
+    # the plain postings frame is filtered inside the statement: a where()
+    # here would be one more eager analysis of its whole lineage
+    plain = index.postings_for_terms is None and index.postings is not None
+    postings = index.postings if plain else index.lookup_postings(lookup)
+    # idf/is_stop: from the segment rows, else from the cached driver map
+    # (inlined into the expansion map), else from a term_stats join
+    stats_on_rows = "idf" in postings.columns
+    inline_stats = not stats_on_rows and known is not None
+    if stats_on_rows:
+        idf, is_stop = "p.idf", "p.is_stop"
+    elif inline_stats:
+        idf, is_stop = "p.x.i", "p.x.s"
     else:
-        agg = agg.withColumn("rank", F.lit(None).cast("double"))
-    agg = agg.withColumn("pagerank", F.coalesce(F.col("rank"), F.lit(0.0)))
-    agg = agg.withColumn("score", F.col("tfidf") * (1.0 + F.col("pagerank")))
+        idf, is_stop = "s.idf", "s.is_stop"
 
-    # Q10: matched-terms boost — counts per-original-term hits in the raw or
-    # stem postings only (NOT related words; SearchEngine.java:495-573).
-    if n_terms > 1 and all_matched_boost:
-        boost_pairs = matched_boost_pairs(search_terms)
-        pairs_df = spark.createDataFrame(boost_pairs, "term string, orig string")
-        matched = (
-            index.lookup_postings([t for t, _ in boost_pairs])
-            .select("term", "doc_id")
-            .join(F.broadcast(pairs_df), "term")
-            .select("doc_id", "orig")
-            .distinct()
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("matched"))
+    def exp_value(term: str, orig: str, priority: int) -> str:
+        fields = f"'o', {_sql_str(orig)}, 'p', {priority}"
+        if inline_stats:
+            i, s = known[term]
+            fields += f", 'i', {_sql_double(i)}, 's', {str(bool(s)).lower()}"
+        return f"named_struct({fields})"
+
+    wanted = set(lookup)
+    exp_map = _sql_map([(t, exp_value(t, o, p)) for t, o, p in expansion if t in wanted])
+    valid = f"NOT {is_stop} AND p.normalized_tf > 0"
+    aggs = []
+    for i, o in enumerate(origs):
+        mine = f"FILTER (WHERE p.x.o = {_sql_str(o)})"
+        aggs.append(
+            f"(min(IF({valid}, named_struct('p', p.x.p, 't', p.term, "
+            f"'c', p.normalized_tf * {idf}), NULL)) {mine}).c AS c{i}"
         )
-        agg = agg.join(matched, "doc_id", "left").withColumn(
-            "matched", F.coalesce(F.col("matched"), F.lit(0))
+        if multi:
+            aggs.append(
+                "array_sort(array_distinct(flatten("
+                f"collect_list(p.positions) {mine}))) AS pos{i}"
+            )
+    if boost:
+        by_term: dict[str, list[str]] = {}
+        for t, o in boost:
+            by_term.setdefault(t, []).append(o)
+        boost_map = _sql_map(
+            [(t, f"array({', '.join(map(_sql_str, os_))})") for t, os_ in by_term.items()]
         )
-        ratio = F.col("matched") / F.lit(float(n_terms))
-        agg = agg.withColumn(
-            "score",
-            F.when(F.col("matched") == n_terms, F.col("score") * 4.0)
-            .when(F.col("matched") > 0, F.col("score") * (0.3 + 0.7 * ratio))
-            .otherwise(F.col("score") * 0.1),
-        )
-
-    # Q11: title boost (pandas UDF over the small candidate set)
-    agg = agg.join(index.doc_stats.select("doc_id", "title"), "doc_id", "left")
-    if use_title_boost:
-        import pandas as pd
-        from pyspark.sql.types import DoubleType
-
-        terms_closure = list(search_terms)
-
-        def _tboost(titles):
-            return titles.map(lambda t: title_boost_py(t or "", terms_closure))
-
-        tboost = F.pandas_udf(_tboost, DoubleType())
-
-        agg = agg.withColumn("tb", tboost(F.col("title"))).withColumn(
-            "score",
-            F.when(F.col("tb") > 1.0, F.col("score") * F.col("tb")).otherwise(
-                F.col("score")
-            ),
+        aggs.append(
+            "size(array_distinct(flatten(collect_list("
+            f"element_at({boost_map}, p.term))))) AS matched"
         )
 
-    # Q12: deterministic top-k (k=None -> full frame, no sort node)
-    out = agg.select("doc_id", "score", "tfidf", "pagerank", "title")
-    if k is None:
-        return out
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    cs = [f"c{i}" for i in range(len(origs))]
+    # a doc enters tfidfSums only through a valid contribution; missing
+    # terms add nothing, as in Spark's sum over per-term rows
+    where = [f"coalesce({', '.join(cs)}) IS NOT NULL"]
+    tfidf = " + ".join(f"coalesce({c}, 0D)" for c in cs) if multi else cs[0]
+    if multi:
+        # Q7 AND filter: every original term has positions in the doc
+        where += [f"size(pos{i}) > 0" for i in range(len(origs))]
+        # Q8 phrase x1.5: every adjacent pair adjacent somewhere in the doc
+        pos = {o: f"pos{i}" for i, o in enumerate(origs)}
+        phrase = " AND ".join(
+            f"arrays_overlap(transform({pos[w1]}, q -> q + 1), {pos[w2]})"
+            for w1, w2 in zip(search_terms, search_terms[1:])
+        )
+        tfidf = f"IF({phrase}, ({tfidf}) * 1.5D, {tfidf})"
+
+    # Q9 PageRank blend
+    pagerank = "coalesce(r.rank, 0D)" if index.ranks is not None else "0D"
+    score = f"g.tfidf * (1.0D + {pagerank})"
+    # Q10 matched-terms boost (raw or stem postings only, not related words)
+    if boost:
+        ratio = f"CAST(g.matched AS DOUBLE) / {_sql_double(n_terms)}"
+        score = (
+            f"CASE WHEN g.matched = {n_terms} THEN {score} * 4.0D "
+            f"WHEN g.matched > 0 THEN {score} * (0.3D + 0.7D * ({ratio})) "
+            f"ELSE {score} * 0.1D END"
+        )
+
+    with contextlib.ExitStack() as views:
+        if plain:
+            p = _index_view(postings)
+            term_filter = f"WHERE p.term IN ({', '.join(map(_sql_str, lookup))})"
+        else:
+            p, term_filter = views.enter_context(_query_view(spark, postings)), ""
+        stats_join = (
+            f"JOIN {_index_view(index.term_stats)} s ON s.term = p.term"
+            if not (stats_on_rows or inline_stats) else ""
+        )
+        core = spark.sql(f"""
+SELECT doc_id, {tfidf} AS tfidf{", matched" if boost else ""}
+FROM (
+  SELECT p.doc_id, {", ".join(aggs)}
+  FROM (SELECT *, element_at({exp_map}, term) AS x FROM {p}) p {stats_join}
+  {term_filter}
+  GROUP BY p.doc_id
+)
+WHERE {" AND ".join(where)}""")
+
+        g = views.enter_context(_query_view(spark, core))
+        ranks_join = (
+            f"LEFT JOIN {_index_view(index.ranks)} r ON r.doc_id = g.doc_id"
+            if index.ranks is not None else ""
+        )
+        sql = f"""
+SELECT g.doc_id, {score} AS score, g.tfidf, {pagerank} AS pagerank, d.title
+FROM {g} g {ranks_join}
+LEFT JOIN {_index_view(index.doc_stats)} d ON d.doc_id = g.doc_id"""
+        # Q11 title boost
+        if use_title_boost:
+            _register_title_boost(spark)
+            terms = f"array({', '.join(map(_sql_str, search_terms))})"
+            sql = (
+                "SELECT doc_id, IF(tb > 1.0D, score * tb, score) AS score, "
+                "tfidf, pagerank, title FROM ("
+                f"SELECT *, {TITLE_BOOST_UDF}(title, {terms}) AS tb FROM ({sql}))"
+            )
+        # Q12 deterministic top-k (k=None -> full frame, no sort node)
+        if k is not None:
+            sql += f" ORDER BY score DESC, doc_id ASC LIMIT {int(k)}"
+        return spark.sql(sql)
 
 
 def search_bm25_batch(
@@ -433,9 +586,7 @@ def search_bm25_batch(
             if t not in STOP_WORDS and porter_stem(t) != t
         }
     if not parsed:
-        return spark.createDataFrame(
-            [], "query string, doc_id string, score double, rank int"
-        )
+        return empty_frame(spark, "query string, doc_id string, score double, rank int")
     related = _related_words(index, all_stems)
     for q, terms in parsed:
         for term, orig, priority in expand_terms(terms, related):
@@ -526,7 +677,7 @@ def search_reference_batch(
         + (", rank int" if k is not None else "")
     )
     if not parsed:
-        return spark.createDataFrame([], empty_schema)
+        return empty_frame(spark, empty_schema)
 
     related = _related_words(index, all_stems)
     exp_rows: list[tuple[str, str, str, int]] = []

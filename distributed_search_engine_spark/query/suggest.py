@@ -177,6 +177,12 @@ def highlight_py(snippet: str, query_terms: list[str]) -> str:
     return out
 
 
+def snippet_text(content: str | None, query_terms: list[str], highlight: bool = False) -> str:
+    """One result's preview: snippet_py, then highlight_py when asked."""
+    out = snippet_py(content or "", query_terms)
+    return highlight_py(out, query_terms) if highlight else out
+
+
 def snippets(
     docs: DataFrame,
     query: str,
@@ -184,18 +190,15 @@ def snippets(
     content_col: str = "content",
     highlight: bool = False,
 ) -> DataFrame:
-    """(doc_id, snippet) via a vectorized pandas UDF — run over the (small)
-    result-page doc set only, like the reference's per-result point gets."""
-    import pandas as pd
+    """(doc_id, snippet) via a vectorized pandas UDF, for frame callers.
+    A result page's snippets come from query/api.search_request, which
+    collects the page docs and applies snippet_text on the driver."""
     from pyspark.sql.types import StringType
 
     terms = tokenize_py(query)
 
     def _snip(s):
-        res = s.map(lambda c: snippet_py(c or "", terms))
-        if highlight:
-            res = res.map(lambda x: highlight_py(x, terms))
-        return res
+        return s.map(lambda c: snippet_text(c, terms, highlight))
 
     udf = F.pandas_udf(_snip, StringType())
     return docs.select(

@@ -10,6 +10,7 @@ from distributed_search_engine_spark.corpus import generate_rows, ingest, make_c
 from distributed_search_engine_spark.operators.postings import build_index
 from distributed_search_engine_spark.query.engine import SearchIndex, search
 from tests.naive_reference import naive_search
+from tests.test_code_search import _plan_nodes
 
 # FIXTURES.md §5 queries (9/10 — spellcheck and autocomplete are covered in
 # test_suggest.py; query 9/10 are not ranking queries)
@@ -130,3 +131,170 @@ def test_cached_term_dict_matches_distributed_lookup(spark):
         a = [tuple(r) for r in search(spark, mk(), q, k=20, mode="reference").collect()]
         b = [tuple(r) for r in search(spark, mk().cache_term_dict(), q, k=20, mode="reference").collect()]
         assert a == b, q
+
+
+# ---------------------------------------------------------------------------
+# reference-mode plan: one statement family, three idf sources, job counts
+# ---------------------------------------------------------------------------
+
+DIFF_QUERIES = [
+    "compute",             # 1 term
+    "engine",              # 1 term, title hits
+    "computing",           # stemmed term with related words
+    "spark shuffle",       # 2 terms
+    "alpha beta gamma",    # 3 terms
+    "spark the shuffle",   # stop word inside a multi-term query
+    "data data",           # repeated term
+    "run running",         # a term whose stem is another query term
+    "zzqxjv",              # unknown word
+    "the",                 # lone stop word
+]
+
+
+@pytest.fixture(scope="module")
+def three_sources(spark, setup, tmp_path_factory):
+    """The same index behind each idf source: a term_stats join
+    (uncached), the cache_term_dict() driver map, and the segment rows of
+    the pruned provider."""
+    from distributed_search_engine_spark.index.segments import (
+        assign_docnums,
+        build_segments,
+        segment_search_index,
+    )
+
+    sidx, corpus = setup
+    cached = SearchIndex(
+        postings=sidx.postings, term_stats=sidx.term_stats,
+        doc_stats=sidx.doc_stats, term_dict=sidx.term_dict,
+        total_docs=sidx.total_docs,
+    ).cache_term_dict()
+    ds = assign_docnums(sidx.doc_stats, n_partitions=4)
+    avgdl = float(ds.agg(F.avg("doc_len")).collect()[0][0])
+    out = str(tmp_path_factory.mktemp("ref_sources") / "index")
+    build_segments(
+        sidx.postings, sidx.term_stats, ds, out, avgdl,
+        n_partitions=8, batch_partitions=8,
+    )
+    segged = segment_search_index(
+        spark, out, ds, sidx.term_stats, sidx.term_dict, sidx.total_docs, 8,
+    )
+    return {"uncached": sidx, "cached": cached, "segments": segged}, corpus
+
+
+def _full_frame(spark, sidx, query):
+    return sorted(
+        tuple(r) for r in search(spark, sidx, query, k=None, mode="reference").collect()
+    )
+
+
+@pytest.mark.parametrize("query", DIFF_QUERIES)
+def test_idf_sources_give_the_same_frame(spark, three_sources, query):
+    sources, corpus = three_sources
+    frames = {name: _full_frame(spark, s, query) for name, s in sources.items()}
+    want = frames["uncached"]
+    single = len(query.split()) == 1
+    for name, got in frames.items():
+        assert [r[0] for r in got] == [r[0] for r in want], (name, query)
+        for g, w in zip(got, want):
+            assert g[4] == w[4], (name, query)  # title
+            for a, b in zip(g[1:4], w[1:4]):
+                if single:
+                    assert a == b, (name, query, g, w)
+                else:
+                    assert abs(a - b) <= 1e-12 * max(abs(b), 1e-300), (name, query)
+        ranked = [
+            r["doc_id"]
+            for r in search(spark, sources[name], query, k=1000, mode="reference").collect()
+        ]
+        assert ranked == [d for d, _ in naive_search(corpus, query, k=1000)], (name, query)
+
+
+def _collect_jobs(spark, df, group):
+    import time
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        rows = df.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    time.sleep(1.0)  # let the listener bus deliver the job events
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def served_index(spark, tmp_path_factory):
+    """A cached index over parquet-read docs, with ranks: the serving shape,
+    with no RDD-backed relation anywhere in its lineage."""
+    path = str(tmp_path_factory.mktemp("served") / "docs")
+    ingest(make_corpus(spark, n_docs=N_DOCS, seed=13)).write.parquet(path)
+    idx = build_index(spark.read.parquet(path))
+    for key in ("postings", "term_stats", "doc_stats"):
+        idx[key] = idx[key].persist()
+        idx[key].count()
+    ranks = idx["doc_stats"].select(
+        "doc_id", (F.length("title") / 100.0).alias("rank")
+    ).persist()
+    ranks.count()
+    return SearchIndex(
+        postings=idx["postings"], term_stats=idx["term_stats"],
+        doc_stats=idx["doc_stats"], term_dict=idx["term_dict"],
+        total_docs=idx["total_docs"], ranks=ranks,
+    ).cache_term_dict()
+
+
+def test_reference_plan_has_one_shuffle_and_no_rdd_scan(spark, served_index):
+    df = search(spark, served_index, "spark shuffle", k=200, mode="reference")
+    assert df.collect()
+    nodes = _plan_nodes(df)
+    assert not any("ExistingRDD" in n or "LogicalRDD" in n for n in nodes), nodes
+    shuffles = [n for n in nodes if n.startswith("Exchange")]
+    assert len(shuffles) == 1 and "hashpartitioning(doc_id" in shuffles[0], shuffles
+
+
+def test_reference_job_counts_on_a_cached_index(spark, served_index):
+    search(spark, served_index, "engine", k=200).collect()  # warm-up
+    rows, jobs = _collect_jobs(
+        spark, search(spark, served_index, "compute", k=200), "ref-one-term"
+    )
+    assert rows and jobs <= 4, jobs
+    for query in ("zzqxjv", "the"):
+        rows, jobs = _collect_jobs(
+            spark, search(spark, served_index, query, k=200), "ref-" + query
+        )
+        assert rows == [] and jobs == 0, (query, jobs)
+
+
+def test_search_leaves_the_index_frames_cached(spark, served_index):
+    """The statement reads the index frames through temp views; releasing
+    a view must not uncache the frame behind it."""
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    for q in ("compute", "spark shuffle"):
+        search(spark, served_index, q, k=20).collect()
+    uncached = SearchIndex(
+        postings=served_index.postings, term_stats=served_index.term_stats,
+        doc_stats=served_index.doc_stats, term_dict=served_index.term_dict,
+        total_docs=served_index.total_docs, ranks=served_index.ranks,
+    )
+    search(spark, uncached, "spark shuffle", k=20).collect()
+    assert before <= set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_empty_results_run_no_job(spark, served_index):
+    from distributed_search_engine_spark.query.engine import (
+        search_bm25_batch,
+        search_reference_batch,
+    )
+
+    empties = {
+        "search": search(spark, served_index, "the"),
+        "search-blank": search(spark, served_index, "  "),
+        "bm25-batch": search_bm25_batch(spark, served_index, ["the", ""]),
+        "reference-batch": search_reference_batch(spark, served_index, ["the"], k=5),
+    }
+    for name, df in empties.items():
+        rows, jobs = _collect_jobs(spark, df, "empty-" + name)
+        assert rows == [] and jobs == 0, (name, jobs)
+    assert search(spark, served_index, "the").columns == [
+        "doc_id", "score", "tfidf", "pagerank", "title"
+    ]

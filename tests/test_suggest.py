@@ -198,3 +198,58 @@ def test_search_request_composes_the_frontend(spark):
         spark, sidx, {"q": "steram", "spellcheck": True},
     )
     assert r3["total"] == 0 and r3["suggestion"] == "stream"
+
+
+@pytest.mark.parametrize("highlight", [False, True])
+def test_page_snippets_match_the_frame_snippets_without_python_workers(
+    spark, highlight, monkeypatch
+):
+    """search_request cuts page snippets on the driver from one JVM-only
+    collect; they must equal snippets() for the same docs, and no
+    ArrowEvalPython may run for them."""
+    from distributed_search_engine_spark.corpus import ingest, make_corpus
+    from distributed_search_engine_spark.query.api import search_request
+    from distributed_search_engine_spark.query.cache import CachedSearchEngine
+    from distributed_search_engine_spark.query.engine import SearchIndex
+
+    docs = ingest(make_corpus(spark, n_docs=40, seed=11))
+    idx = build_index(docs)
+    sidx = SearchIndex(
+        postings=idx["postings"], term_stats=idx["term_stats"],
+        doc_stats=idx["doc_stats"], term_dict=idx["term_dict"],
+        total_docs=idx["total_docs"],
+    )
+    eng = CachedSearchEngine(spark, sidx, k=20)
+    q = "spark compute"
+    eng.search_page(q)  # the request below is a cache hit
+    plans = []
+    frame_type = type(docs)  # the concrete (classic) DataFrame class
+    real_collect = frame_type.collect
+
+    def spy(self):
+        rows = real_collect(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(frame_type, "collect", spy)
+    resp = search_request(
+        spark, sidx,
+        {"q": q, "engine": eng, "page_size": 5, "snippets": True,
+         "highlight": highlight},
+        docs=docs,
+    )
+    monkeypatch.undo()
+    page = resp["results"]
+    assert page and len(plans) == 1
+    assert "ArrowEvalPython" not in plans[0] and "BatchEvalPython" not in plans[0]
+    ids = [r["doc_id"] for r in page]
+    want = {
+        r["doc_id"]: r["snippet"]
+        for r in snippets(
+            docs.where(docs["doc_id"].isin(ids)), q, highlight=highlight
+        ).collect()
+    }
+    assert {r["doc_id"]: r["snippet"] for r in page} == want
+    assert any(want.values())
+    if highlight:
+        assert any("<mark>" in s for s in want.values())
