@@ -17,6 +17,7 @@ single-task sort.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -24,6 +25,7 @@ import time
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..query.engine import BM25_B, BM25_K1
 from .codec import (
@@ -32,14 +34,6 @@ from .codec import (
     encode_docnums,
     encode_positions_flat,
     varint_encode,
-)
-
-SEGMENT_SCHEMA = (
-    "term string, df int, idf double, idf_bm25 double, is_stop boolean, "
-    "n_docs int, "
-    "blocks array<struct<last_docnum: long, max_score: double, "
-    "docs: binary, tfs: binary, dls: binary>>, "
-    "positions binary"
 )
 
 # normalized_tf is NOT persisted: for uniform-weight corpora (weight 1.0 —
@@ -86,6 +80,17 @@ try:  # resolved once per process (driver and python workers alike)
     _PA_SEGMENT_FIELDS = _pa_segment_fields()
 except Exception:  # pragma: no cover
     _PA_SEGMENT_FIELDS = []
+
+
+@functools.lru_cache(maxsize=None)
+def segment_schema() -> StructType:
+    """The stored row as a Spark schema: the encode kernel's output schema,
+    and the read schema (Parquet lists the part= column last either way),
+    so a read infers nothing from the files."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(pa.schema(_pa_segment_fields()))
 
 
 def assign_docnums(doc_stats: DataFrame, n_partitions: int = 32) -> DataFrame:
@@ -367,7 +372,7 @@ def build_segments(
             # row sort of the full posting rows was ~1/3 of the stage
             .mapInArrow(
                 lambda it: _encode_partition(it, avgdl, rows_acc),
-                schema="part int, " + SEGMENT_SCHEMA,
+                schema=segment_schema(),
             )
         )
         (
@@ -486,8 +491,9 @@ def read_segments_for_terms(
     """Partition-pruned read: only the part= directories that can contain
     the query terms are scanned (check .explain: partition filters on part).
     Term->partition hashing runs driver-side (term_partition) so an
-    interactive query launches exactly one Spark job."""
-    df = spark.read.parquet(out_dir + "/data")
+    interactive query launches exactly one Spark job: the read takes the
+    stored schema (segment_schema()), so no job infers it from the files."""
+    df = spark.read.schema(segment_schema()).parquet(out_dir + "/data")
     parts = sorted({term_partition(t, n_partitions) for t in terms})
     return df.where(F.col("part").isin(parts) & F.col("term").isin(terms))
 

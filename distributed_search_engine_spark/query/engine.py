@@ -70,30 +70,36 @@ class SearchIndex:
     ranks: DataFrame | None = None  # (doc_id, rank)
     postings_for_terms: object | None = None  # Callable[[list[str]], DataFrame]
     _avgdl: float | None = field(default=None, repr=False)
-    # opt-in driver-side vocabulary maps, filled by cache_term_dict():
-    # stem -> [terms] for the related-words expansion, and term ->
-    # (idf, is_stop) for reference-mode scoring. With them a query plans
-    # with no Spark job (no related-words collect), its idf values are
-    # inlined into the scoring statement (no term_stats join), and a query
-    # of unknown terms returns an empty local relation. Only cache when
-    # the vocabulary fits the driver (the reference holds its whole term
-    # dictionary in frontend memory, SearchEngine.java:893-923 — same
-    # tradeoff); leave None at web scale and both lookups stay
-    # distributed.
+    # opt-in driver-side vocabulary, filled by cache_term_dict(): stem ->
+    # [terms] for the related-words expansion, term -> (idf, is_stop) for
+    # reference-mode scoring, and (registered in query/suggest.py for the
+    # term_stats frame) the sorted looksReasonable term list. With them a
+    # query plans with no Spark job (no related-words collect), its idf
+    # values are inlined into the scoring statement (no term_stats join), a
+    # query of unknown terms returns an empty local relation, and
+    # autocomplete / spellcheck_query on ``term_stats`` answer on the driver
+    # with no job. Only cache when the vocabulary fits the driver (the
+    # reference holds its whole term dictionary in frontend memory,
+    # SearchEngine.java:893-923 — same tradeoff); leave it uncached at web
+    # scale and every lookup stays distributed.
     _stem_map: dict | None = field(default=None, repr=False)
     _term_stats: dict | None = field(default=None, repr=False)
 
     def cache_term_dict(self) -> "SearchIndex":
-        """Collect the (stem -> terms) and (term -> idf, is_stop) maps once
-        for repeated-query workloads (bench / interactive frontends)."""
+        """Collect the vocabulary once for repeated-query workloads (bench /
+        interactive frontends): the (stem -> terms) and (term -> idf,
+        is_stop) maps, and, from the same term_stats rows, the driver
+        dictionary that autocomplete and spellcheck_query use for this
+        ``term_stats`` frame for as long as it lives."""
+        from .suggest import register_vocabulary
+
         out: dict[str, list[str]] = {}
         for r in self.term_dict.select("stem", "term").collect():
             out.setdefault(r["stem"], []).append(r["term"])
         self._stem_map = out
-        self._term_stats = {
-            r["term"]: (r["idf"], r["is_stop"])
-            for r in self.term_stats.select("term", "idf", "is_stop").collect()
-        }
+        rows = self.term_stats.select("term", "idf", "is_stop").collect()
+        self._term_stats = {r["term"]: (r["idf"], r["is_stop"]) for r in rows}
+        register_vocabulary(self.term_stats, [r["term"] for r in rows])
         return self
 
     def lookup_postings(self, terms: list[str]) -> DataFrame:
@@ -276,15 +282,23 @@ _INDEX_VIEWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _REGISTRY_LOCK = threading.Lock()
 
 
-def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
-    """Zero-row frame of a flat DDL schema ("name type, ..."), planned as an
-    empty local relation: collecting it runs no Spark job, where
-    ``createDataFrame([], schema)`` parallelizes an RDD and costs one."""
-    cols = ", ".join(
-        f"CAST(NULL AS {typ}) AS `{name}`"
-        for name, typ in (c.split() for c in schema.split(","))
+def local_frame(spark: SparkSession, schema: str, rows=()) -> DataFrame:
+    """Frame of a flat DDL schema ("name type, ...") holding ``rows``
+    (tuples of str / int values), planned as a local relation:
+    collecting it runs no Spark job, where ``createDataFrame(rows, schema)``
+    parallelizes an RDD and costs one."""
+    cols = [c.split() for c in schema.split(",")]
+    if not rows:
+        select = ", ".join(f"CAST(NULL AS {typ}) AS `{name}`" for name, typ in cols)
+        return spark.sql(f"SELECT {select} WHERE false")
+    select = ", ".join(
+        f"CAST(col{i} AS {typ}) AS `{name}`" for i, (name, typ) in enumerate(cols, 1)
     )
-    return spark.sql(f"SELECT {cols} WHERE false")
+    values = ", ".join(
+        "(" + ", ".join(_sql_str(v) if isinstance(v, str) else str(int(v)) for v in r) + ")"
+        for r in rows
+    )
+    return spark.sql(f"SELECT {select} FROM VALUES {values}")
 
 
 def _sql_str(s: str) -> str:
@@ -374,7 +388,7 @@ def search(
     search_terms = tokenize_query(query)
     # Q2: single-term stop-word short-circuit (SearchEngine.java:117-127)
     if not search_terms or (len(search_terms) == 1 and search_terms[0] in STOP_WORDS):
-        return empty_frame(spark, REFERENCE_SCHEMA)
+        return local_frame(spark, REFERENCE_SCHEMA)
 
     stems = {
         porter_stem(t)
@@ -429,7 +443,7 @@ def _search_reference(
         scorable = any(t in known and not known[t][1] for t in exp_terms)
         covered = {o for t, o, _ in expansion if t in known}
         if not scorable or (multi and len(covered) < len(origs)):
-            return empty_frame(spark, REFERENCE_SCHEMA)
+            return local_frame(spark, REFERENCE_SCHEMA)
 
     # the plain postings frame is filtered inside the statement: a where()
     # here would be one more eager analysis of its whole lineage
@@ -586,7 +600,7 @@ def search_bm25_batch(
             if t not in STOP_WORDS and porter_stem(t) != t
         }
     if not parsed:
-        return empty_frame(spark, "query string, doc_id string, score double, rank int")
+        return local_frame(spark, "query string, doc_id string, score double, rank int")
     related = _related_words(index, all_stems)
     for q, terms in parsed:
         for term, orig, priority in expand_terms(terms, related):
@@ -677,7 +691,7 @@ def search_reference_batch(
         + (", rank int" if k is not None else "")
     )
     if not parsed:
-        return empty_frame(spark, empty_schema)
+        return local_frame(spark, empty_schema)
 
     related = _related_words(index, all_stems)
     exp_rows: list[tuple[str, str, str, int]] = []
@@ -1508,8 +1522,8 @@ def explain_bm25(
     """
     terms = tokenize_query(query_text)
     if not terms:
-        return spark.createDataFrame(
-            [],
+        return local_frame(
+            spark,
             "doc_id string, term string, tf double, doc_len double, "
             "idf_bm25 double, contrib double, score double",
         )

@@ -14,7 +14,6 @@ and release.
 from __future__ import annotations
 
 import gc
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -25,6 +24,7 @@ from distributed_search_engine_spark.query.code_search import (
     cross_repo_dupes,
     search_after_page,
 )
+from tests.spark_jobs import jobs_of
 
 
 @pytest.fixture(scope="module")
@@ -234,14 +234,9 @@ def _plan_nodes(df):
 
 
 def _top10_jobs(spark, df, group):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        rows = df.orderBy(F.desc("score"), F.asc("doc_id")).limit(10).collect()
-    finally:
-        sc._jsc.clearJobGroup()
-    time.sleep(1.0)  # let the listener bus deliver the job events
-    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+    return jobs_of(
+        spark, lambda: df.orderBy(F.desc("score"), F.asc("doc_id")).limit(10).collect(), group
+    )
 
 
 def _persistent_rdds(spark):

@@ -10,6 +10,7 @@ from distributed_search_engine_spark.corpus import generate_rows, ingest, make_c
 from distributed_search_engine_spark.operators.postings import build_index
 from distributed_search_engine_spark.query.engine import SearchIndex, search
 from tests.naive_reference import naive_search
+from tests.spark_jobs import jobs_of
 from tests.test_code_search import _plan_nodes
 
 # FIXTURES.md §5 queries (9/10 — spellcheck and autocomplete are covered in
@@ -210,16 +211,7 @@ def test_idf_sources_give_the_same_frame(spark, three_sources, query):
 
 
 def _collect_jobs(spark, df, group):
-    import time
-
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        rows = df.collect()
-    finally:
-        sc._jsc.clearJobGroup()
-    time.sleep(1.0)  # let the listener bus deliver the job events
-    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+    return jobs_of(spark, df.collect, group)
 
 
 @pytest.fixture(scope="module")

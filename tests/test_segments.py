@@ -208,6 +208,31 @@ def test_segment_backed_search_plan_is_pruned(spark, built):
     assert "part" in plan.split("PartitionFilters")[1][:200]
 
 
+def test_segment_read_takes_the_stored_schema(spark, built):
+    """A point read runs exactly one Spark job (the scan: the schema comes
+    from segment_schema(), not from the files), has the columns and rows an
+    inferring read gives, and keeps its partition filter on part."""
+    from tests.test_plans import plan_of
+    from tests.spark_jobs import jobs_of
+
+    *_, out = built
+    terms = ["spark", "compute"]
+    rows, jobs = jobs_of(
+        spark,
+        lambda: read_segments_for_terms(spark, out, terms, N_PARTS).collect(),
+        "segments-fetch",
+    )
+    assert rows and jobs == 1, jobs
+    seg = read_segments_for_terms(spark, out, terms, N_PARTS)
+    inferred = spark.read.parquet(out + "/data")
+    assert seg.schema == inferred.schema
+    assert sorted(map(tuple, rows)) == sorted(
+        map(tuple, inferred.where(F.col("term").isin(terms)).collect())
+    )
+    plan = plan_of(seg)
+    assert "part" in plan.split("PartitionFilters")[1][:200]
+
+
 def test_xxhash64_py_matches_spark(spark):
     """Driver-side term->partition hashing must be bit-identical to the
     F.xxhash64 the segment writer partitions by."""
