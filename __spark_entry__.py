@@ -1572,8 +1572,8 @@ def _q_flame_groupby_concat(spark, sf_dir):
 
 
 def _q_events_windowed(spark, sf_dir):
-    # event-time tumbling-window aggregation (batch equivalent of the
-    # streaming token_trends operator)
+    # event-time tumbling-window aggregation: hourly counts and value
+    # totals per event type
     e = _t(spark, sf_dir, "events")
     return e.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("hour"), "event_type"

@@ -9,7 +9,7 @@ Layout:
   functions/  — tokenization, Porter stemmer, stop words, hashing (shared by
                 index-time and query-time code, as the reference requires).
   operators/  — DataFrame operators: doc_stats, postings, term_stats,
-                pagerank, dedup, similarity, text_analysis, multimodal.
+                pagerank, dedup, similarity, text_analysis.
   index/      — physical layer: delta-gap+varint posting codec, partitioned
                 compressed segments with block-max metadata, lineage
                 manifests for checkpointed resume.

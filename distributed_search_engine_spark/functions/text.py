@@ -167,11 +167,6 @@ def is_worth_py(tok: str) -> bool:
     )
 
 
-def worthy_tokens_py(content: str) -> list[str]:
-    """Plain tokenize (I2): worthy tokens only — doc length / maxTf basis."""
-    return [t for t in tokenize_py(content) if is_worth_py(t)]
-
-
 def positioned_tokens_py(content: str) -> list[tuple[str, int]]:
     """(token, 1-based stream position) for worthy tokens only (I7)."""
     return [

@@ -83,11 +83,6 @@ def _dict_encode(flat):
 
 
 @lru_cache(maxsize=1 << 20)
-def _md5_hex(tok: str) -> str:
-    return _md5(tok.encode()).hexdigest()
-
-
-@lru_cache(maxsize=1 << 20)
 def _simhash_fp(tok: str) -> int:
     """64-bit token fingerprint: bit b = bit (b%4) of hex nibble (b//4+1)
     of md5(tok) — the exact bit walk of dedup.simhash / the SQL oracle."""

@@ -558,23 +558,6 @@ FROM banded a JOIN banded b
 """
 
 
-def jaccard_pairs_sql(threshold: float = 0.5) -> str:
-    return _shingle_ctes() + f""",
-sz AS (SELECT doc_id, count(*) AS c FROM sh GROUP BY 1),
-common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-       round(common.c / (sa.c + sb.c - common.c), 6) AS jaccard
-FROM common
-JOIN sz sa ON sa.doc_id = common.doc_a
-JOIN sz sb ON sb.doc_id = common.doc_b
-WHERE common.c / (sa.c + sb.c - common.c) >= {threshold}
-"""
-
-
 def _lsh_band_ctes(n_hashes: int, bands: int) -> str:
     """sig + banded + cand CTE fragment (appended after the shingle CTEs):
     MinHash signatures -> band keys -> distinct candidate pairs. Twin of
@@ -689,23 +672,9 @@ WITH v AS (
   FROM embeddings
 )"""
 
-_DOT_AB = _fold_sum(
-    "list_transform(generate_series(1, len(a.v)), i -> a.v[i] * b.v[i])"
-)
-
 
 def _nrm(side: str) -> str:
     return f"sqrt({_fold_sum(f'list_transform({side}.v, x -> x * x)')})"
-
-
-def embedding_neardup_sql(threshold: float = 0.4) -> str:
-    return _VEC_CTE + f"""
-SELECT id_a, id_b, round(cosine, 6) AS cosine FROM (
-  SELECT a.id AS id_a, b.id AS id_b,
-         {_DOT_AB} / ({_nrm('a')} * {_nrm('b')}) AS cosine
-  FROM v a JOIN v b ON a.id < b.id
-) WHERE cosine >= {threshold}
-"""
 
 
 def _bucket_sql(plane_ws: list[list[float]], vexpr: str = "v") -> str:
