@@ -25,22 +25,29 @@ Two kernels, both pure DataFrame ops:
   O(log^2 n) rounds regardless of diameter — the 100 TB path: a
   propagation kernel needs diameter rounds (a 10^6-long chain of
   near-dups would need 10^6 shuffles), large-star/small-star collapses
-  it in ~40. Per round: one symmetrize + groupBy-min + join. Lineage is
-  cut every round via localCheckpoint, mirroring the PageRank loop
-  discipline (operators/pagerank.py) — each round references the prior
-  frame several times, so an uncut plan grows exponentially.
+  it in ~40. A round is one fused pass with no join, and each round is
+  cut with localCheckpoint so the plan never grows with the round count.
 
-Scale notes: edges are persisted per round and unpersisted after the
-next round materializes (two live edge sets max). Convergence is a
-checksum comparison (count + sum of xxhash64(u,v)) — two scalar aggs,
-no driver-side edge materialization ever. Star operations only shrink
-or redirect edges, so the working set is bounded by the input edge
-count; the final state (a star per component) is O(#non-root nodes).
+Scale notes: a round is three shuffles — large-star's groupBy (min and
+neighbour list), small-star's groupBy (min and neighbour set) and one
+distinct back to canonical (u > v) edges. A neighbour list is one
+collect_list row, so a hub of degree d costs d x 8 bytes in one task.
+Each round's signature (count, bit_xor(xxhash64(u, v))) is observed in
+the job that checkpoints it: no extra job, no edge on the driver. A
+superseded round is released once the next one is materialized. Star
+operations only shrink or redirect edges, so the working set is bounded
+by the input edge count; the final star is O(#non-root nodes).
+
+Durability: rounds are ``localCheckpoint(eager=True)`` frames, whose
+blocks live only on the executor that computed them, with no replica and
+no lineage back to the input: if that executor is lost before the result
+is consumed, the downstream stages fail instead of recomputing, and the
+caller must rerun the call.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -96,57 +103,82 @@ def cc_propagate(
 def _large_star(edges: DataFrame) -> DataFrame:
     """Connect every strictly-larger neighbor of u to min(Γ(u) ∪ {u}).
 
-    Symmetrizes internally (the paper's map phase emits (u,v) AND (v,u))
-    so it composes with small-star's directed output across rounds.
+    Symmetrizes internally (the paper's map phase emits (u,v) AND (v,u));
+    its canonical input (u > v, distinct) needs no distinct for that.
+    Output rows (v, m) have v > m and may repeat: small-star absorbs it.
     """
-    sym = _sym(edges)
-    mins = sym.groupBy("u").agg(F.min("v").alias("mv"))
-    mins = mins.select("u", F.least("u", "mv").alias("m"))
-    # no trailing .distinct(): the output feeds exactly one consumer —
-    # small-star's orientation distinct — which dedups anyway; the
-    # back-to-back distinct exchanges were redundant (one full shuffle
-    # per round). Duplicate (v, m) rows (same target reached via two
-    # centers) are bounded by the input edge count.
+    rev = edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     return (
-        sym.join(mins, "u")
-        .where(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .where(F.col("u") != F.col("v"))
+        edges.select("u", "v").unionByName(rev)
+        .groupBy("u")
+        .agg(F.min("v").alias("mv"), F.collect_list("v").alias("ns"))
+        .select(
+            F.explode(F.filter("ns", lambda n: n > F.col("u"))).alias("u"),
+            F.least("u", "mv").alias("v"),
+        )
     )
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
-    """Orient edges large->small; connect every member of Γ(u) ∪ {u} to
-    the minimum."""
-    oriented = (
+    """For edges oriented large -> small (u > v), connect each member of
+    Γ(u) ∪ {u} to the minimum; the output is canonical (u > v, distinct)."""
+    return (
+        edges.groupBy("u")
+        .agg(F.min("v").alias("m"), F.collect_set("v").alias("ns"))
+        .select(F.explode(F.concat("ns", F.array("u"))).alias("u"), "m")
+        .where(F.col("u") != F.col("m"))
+        .select("u", F.col("m").alias("v"))
+        .distinct()
+    )
+
+
+def _checkpoint_signed(edges: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+    """localCheckpoint an edge set; return it with its convergence
+    signature (count, bit_xor(xxhash64(u, v))), observed in that job."""
+    obs = Observation()
+    done = edges.observe(
+        obs,
+        F.count(F.lit(1)).alias("c"),
+        # bit_xor: order-free, no ANSI overflow; edge sets are distinct,
+        # so xor-cancellation can't collide two sets of one count
+        F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
+    ).localCheckpoint(eager=True)
+    return done, (obs.get["c"], obs.get["h"])
+
+
+def _release(checkpointed: DataFrame) -> None:
+    """Drop a localCheckpoint frame's blocks. DataFrame.unpersist() does
+    nothing here: the blocks belong to the RDD behind its LogicalRDD."""
+    checkpointed._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def _star_edges(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
+    """Converged star edges (member u -> component-min v) of an undirected
+    (u, v) edge list, as a localCheckpoint frame: every node but its
+    component's minimum is a u exactly once."""
+    # canonical orientation (large -> small, distinct): the form
+    # small-star emits, so round-over-round signatures are comparable
+    cur, sig = _checkpoint_signed(
         edges.select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-    mins = oriented.groupBy("u").agg(F.min("v").alias("m"))
-    members = (
-        oriented.join(mins, "u")
-        .select(F.col("v").alias("node"), "m")
-        .unionByName(mins.select(F.col("u").alias("node"), "m"))
+    converged = False
+    try:
+        for _ in range(max_rounds):
+            nxt, nxt_sig = _checkpoint_signed(_small_star(_large_star(cur)))
+            _release(cur)
+            cur, converged, sig = nxt, nxt_sig == sig, nxt_sig
+            if converged:
+                return cur
+    finally:
+        if not converged:
+            _release(cur)
+    raise RuntimeError(
+        f"connected_components did not converge in {max_rounds} rounds"
     )
-    return (
-        members.where(F.col("node") != F.col("m"))
-        .select(F.col("node").alias("u"), F.col("m").alias("v"))
-        .distinct()
-    )
-
-
-def _checksum(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count(F.lit(1)).alias("c"),
-        # bit_xor: order-independent, overflow-free under ANSI mode
-        # (edge sets are distinct, so xor-cancellation can't collide
-        # two different sets that also share a count)
-        F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["c"]), int(row["h"])
 
 
 def connected_components(
@@ -158,65 +190,27 @@ def connected_components(
     list; component = min node id of the connected component.
 
     Alternating large-star/small-star until the edge set is stable
-    (checksum-equal two rounds running) — O(log^2 n) rounds, so a
+    (signature-equal two rounds running) — O(log^2 n) rounds, so a
     corpus-scale pair graph with million-hop chains still converges in
     tens of shuffles. Raises if ``max_rounds`` alternations don't
     converge (50 covers n ~ 2^25 components chains with margin; real
     dedup graphs converge in < 10).
     """
-    all_nodes = nodes_of(edges).persist()
-    # canonical orientation (large -> small, distinct): the same form
-    # small-star emits, so round-over-round checksums are comparable
-    cur = (
-        edges.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .persist()
-    )
-    held: list[DataFrame] = [all_nodes, cur]  # everything persisted/checkpointed
+    star = _star_edges(edges, max_rounds)
     try:
-        prev_sig = _checksum(cur)
-        last: DataFrame | None = None
-        for rnd in range(1, max_rounds + 1):
-            # localCheckpoint EVERY round: each alternation references the
-            # previous round's frame several times (symmetrize + two
-            # neighborhood joins), so an un-truncated lineage grows the
-            # logical plan exponentially and Catalyst analysis time blows
-            # up by round ~4 (measured). The checkpointed edge set is
-            # bounded by the input edge count, O(log^2 n) rounds.
-            nxt = _small_star(_large_star(cur)).localCheckpoint(eager=True)
-            held.append(nxt)
-            sig = _checksum(nxt)
-            if last is not None:
-                last.unpersist()
-                held.remove(last)
-            last, cur = cur, nxt
-            if sig == prev_sig:
-                break
-            prev_sig = sig
-        else:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_rounds} rounds"
-            )
-        # at the fixed point every edge is (member, component-min): the
-        # star. Materialize the (small) label frame eagerly so every
-        # intermediate cache can be released before returning.
-        labels = (
-            all_nodes.join(
-                cur.withColumnRenamed("u", "node"), "node", "left"
-            )
+        # materialize the (small) label frame eagerly so the star's
+        # blocks can be released before returning
+        return (
+            nodes_of(edges)
+            .join(star.withColumnRenamed("u", "node"), "node", "left")
             .select(
                 F.col("node").alias(node_col),
                 F.coalesce("v", "node").alias("component"),
             )
             .localCheckpoint(eager=True)
         )
-        return labels
     finally:
-        for df in held:
-            df.unpersist()
+        _release(star)
 
 
 def components_from_pairs(
@@ -250,8 +244,14 @@ def dedup_keep_canonical(
     non-canonical members — never a join against the pair list itself,
     whose transitivity gaps would make the kept set order-dependent.
     """
-    comp = components_from_pairs(pairs, a_col, b_col, iterations=iterations)
-    losers = comp.where(F.col("doc_id") != F.col("component")).select(
+    if iterations is None:
+        losers = _star_edges(
+            pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+        ).select(F.col("u").alias("doc_id"))
+    else:
+        comp = components_from_pairs(pairs, a_col, b_col, iterations=iterations)
+        losers = comp.where(F.col("doc_id") != F.col("component"))
+    losers = losers.select(
         # pair ids are often strings (hash-keyed pipelines) while the doc
         # table keys are longs: cast to the doc table's dtype so the
         # anti-join is an equi-join, not a both-sides-to-double coercion

@@ -196,8 +196,8 @@ def test_semantic_dedup_join_is_equi_on_cluster(spark):
 
 
 def test_cc_round_is_shuffle_bounded(spark):
-    """One large-star application = symmetrize + one groupBy-min + one
-    join — no cartesian, no global window."""
+    """One fused star round = a groupBy per half + one distinct — no
+    cartesian, no global window, and (in the executed plan) no join."""
     from distributed_search_engine_spark.operators.graph import (
         _large_star,
         _small_star,
@@ -206,9 +206,14 @@ def test_cc_round_is_shuffle_bounded(spark):
     e = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "u long, v long"
     )
-    plan = plan_of(_small_star(_large_star(e)))
+    fused = _small_star(_large_star(e))
+    plan = plan_of(fused)
     assert "CartesianProduct" not in plan
     assert "Window" not in plan
+    fused.collect()
+    executed = plan_of(fused)
+    assert "isFinalPlan=true" in executed
+    assert "Join" not in executed
 
 
 def test_tpch_q5_broadcasts_dims(spark):
