@@ -12,10 +12,11 @@ answer it, trigram postings can:
          trigram under the same normalization, so pruning to any subset
          is lossless); exact containment verify runs only on candidates.
 
-100-TB shape: the build is one Generate (the window projection, all
-JVM-side — ``Column.substr`` over a ``sequence``) + one distinct-style
-exchange keyed by (trigram, doc_id); hot trigrams skew the key space
-far less than token postings (alphabet^3 keys, near-uniform over code).
+100-TB shape: the build is one map-side Arrow kernel (per-doc window
+slicing + dedup over JVM-lowercased text) with no exchange; the store
+write shuffles once, keyed by trigram hash — hot trigrams skew that
+key space far less than token postings (alphabet^3 keys, near-uniform
+over code).
 Query-side the rarest-q selection (a <=len(needle)-row bounded collect
 against the stats table) keeps the candidate join fan-in tiny — the
 Zoekt trick — and the exact verify touches only candidate rows. The
@@ -36,38 +37,20 @@ def trigram_postings(
     docs: DataFrame,
     doc_id_col: str = "doc_id",
     content_col: str = "text",
-    use_arrow: bool = True,
 ) -> DataFrame:
-    """(trigram, doc_id): distinct lowercased 3-char windows per doc.
+    """(doc_id, trigram): distinct lowercased 3-char windows per doc.
 
-    use_arrow=True (default): the window slicing + per-doc dedup runs as
-    one Arrow kernel (operators/arrow_kernels.trigram_postings_arrow);
-    the JVM transform/substr lambda is CodegenFallback and was ~12-15 s
-    at 60k docs vs ~4 s for the kernel. Lowercasing stays JVM-side in
-    both paths (bit-identical case mapping); same rows out."""
-    if use_arrow:
-        from ..operators.arrow_kernels import trigram_postings_arrow
+    The window slicing + per-doc dedup runs as one Arrow kernel
+    (operators/arrow_kernels.trigram_postings_arrow); the JVM
+    transform/substr lambda it replaced is CodegenFallback and was
+    ~12-15 s at 60k docs vs ~4 s for the kernel. Lowercasing stays
+    JVM-side (F.lower), so the case mapping is Spark's on any unicode
+    input. Per-doc dedup makes every emitted pair unique, so the build
+    is a ZERO-exchange map stage (plan-asserted).
+    tests/kernel_reference.trigrams pins its rows."""
+    from ..operators.arrow_kernels import trigram_postings_arrow
 
-        return trigram_postings_arrow(docs, doc_id_col, content_col)
-    text = F.lower(F.col(content_col))
-    # guard: Spark's sequence(1, stop) runs DESCENDING when stop < 1, so
-    # short/null docs must short-circuit to an empty array
-    grams = F.when(
-        text.isNotNull() & (F.length(text) >= 3),
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.length(text) - 2),
-                lambda i: text.substr(i, F.lit(3)),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    # no .distinct(): array_distinct already deduped per doc, so every
-    # exploded (doc_id, trigram) pair is unique by construction — a
-    # distinct here would be a full shuffle of the posting stream for
-    # nothing (the build is a ZERO-exchange projection; plan-asserted)
-    return docs.select(
-        F.col(doc_id_col).alias("doc_id"), F.explode(grams).alias("trigram")
-    ).where(F.length("trigram") == 3)
+    return trigram_postings_arrow(docs, doc_id_col, content_col)
 
 
 def store_trigram_postings(

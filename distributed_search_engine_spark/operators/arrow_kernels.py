@@ -12,11 +12,13 @@ DISTINCT token (cached across batches AND tasks via module-level
 lru_cache + worker reuse), and numpy reduceat/bincount for the per-doc
 aggregation — no per-row Python, no occurrence-stream shuffle.
 
-Every kernel's values are bit-identical to the JVM path it replaces
-(hashlib md5 == JVM md5; tokens are pure ASCII [a-z0-9]+ after the
-cleanup, so utf8_lower == Java lower — same argument as the postings
-kernel); the operators keep a `use_arrow=False` JVM path and the test
-suite runs differential comparisons, on top of the DuckDB oracle gates.
+Every kernel's values are bit-identical to the JVM Column path it
+replaced (hashlib md5 == JVM md5; tokens are pure ASCII [a-z0-9]+ after
+the cleanup, so utf8_lower == Java lower — same argument as the postings
+kernel). Each kernel is its operator's one implementation:
+tests/test_arrow_kernels.py compares it row for row with an independent
+pure-Python reference (tests/kernel_reference.py), on top of the DuckDB
+oracle gates.
 
 Cache discipline: like emit_postings_arrow, every incoming batch is
 zero-copy sliced to CHUNK_DOCS rows so the flat token array + dictionary
@@ -211,7 +213,7 @@ def shingles_arrow(
 
 
 # ---------------------------------------------------------------------------
-# w-token window hashes: (doc_id, pos, whash) — dedup._window_hashes twin
+# w-token window hashes: (doc_id, pos, whash) — dedup.duplicate_windows input
 # ---------------------------------------------------------------------------
 
 
@@ -273,7 +275,7 @@ def window_hashes_arrow(
 
 
 # ---------------------------------------------------------------------------
-# bigram stream: (doc_id, bigram) — text_analysis._bigram_stream twin
+# bigram stream: (doc_id, bigram) — text_analysis._bigram_stream
 # ---------------------------------------------------------------------------
 
 
@@ -380,7 +382,7 @@ def distinct_tokens_arrow(
 
 
 # ---------------------------------------------------------------------------
-# count-min counter table: (row, bucket, c) — text_analysis.cms_build twin
+# count-min counter table: (row, bucket, c) — text_analysis.cms_build
 # ---------------------------------------------------------------------------
 
 
@@ -392,8 +394,8 @@ def cms_counts_arrow(
     content_col: str = "text",
 ) -> DataFrame:
     """Per-chunk partial counters (<= d*width rows each); the caller sums
-    them with one tiny groupBy — same counters as the per-occurrence JVM
-    explode (md5_bucket arithmetic reproduced per DISTINCT token)."""
+    them with one tiny groupBy — the counters of one increment per token
+    occurrence (md5_bucket arithmetic reproduced per DISTINCT token)."""
     sel = docs.select(F.col(content_col).alias("content"))
 
     def _kernel(batch_iter):
@@ -498,7 +500,8 @@ def hll_registers_arrow(
 # ---------------------------------------------------------------------------
 # vector assignment kernels (k-means argmin, IVFADC residual-PQ codes)
 #
-# The JVM path evaluates zip_with+aggregate folds per (row, centroid) —
+# The JVM Column form (clustering._best_expr, similarity._sq_l2)
+# evaluates zip_with+aggregate folds per (row, centroid) —
 # CodegenFallback, interpreted, with a zipped-array allocation each: the
 # PQ code assignment alone is K_coarse*dim + M*K*dsub ≈ 2k interpreted
 # folds per row. These kernels run the SAME float ops in the SAME order
@@ -584,7 +587,7 @@ def assign_clusters_arrow(
     clustering._best_expr twin (argmin over raw distances, ties to the
     lowest cluster = numpy first-occurrence argmin; sqdist is the raw
     double — callers apply F.round like the JVM path). ``id`` passes
-    through with the caller's type, as in the JVM path."""
+    through with the caller's type."""
     dim = len(centroids[0])
     cents = [list(map(float, c)) for c in centroids]
     sel = docs_emb.select(
@@ -687,7 +690,7 @@ def coded_corpus_arrow(
 
 
 # ---------------------------------------------------------------------------
-# trigram postings: (trigram, doc_id) distinct per doc — index/trigram twin
+# trigram postings: (trigram, doc_id) distinct per doc — index/trigram
 # ---------------------------------------------------------------------------
 
 
@@ -697,9 +700,9 @@ def trigram_postings_arrow(
     content_col: str = "text",
 ) -> DataFrame:
     """Distinct lowercased 3-char windows per doc. Lowercasing stays in
-    the JVM (F.lower) so the case mapping is bit-identical to the gated
-    Column path on any unicode input; the kernel does only the window
-    slicing + per-doc dedup (character-based, like Column.substr)."""
+    the JVM (F.lower) so the case mapping is Spark's on any unicode
+    input; the kernel does only the window slicing + per-doc dedup
+    (code-point based, like Column.substr)."""
     sel = docs.select(
         F.col(doc_id_col).alias("doc_id"),
         F.lower(F.col(content_col)).alias("content"),

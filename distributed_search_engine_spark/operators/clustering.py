@@ -10,10 +10,13 @@ k-means the embeddings, then within each cluster drop every point that
 has a sufficiently-cosine-similar lower-id neighbor.
 
 Spark mapping:
-  - assignment: argmin_j ||x - c_j||^2 with the k centroids inlined as
-    literal arrays — a map-only whole-stage-codegen projection
-    (zip_with/aggregate fold per centroid, array_min of (dist, j)
-    structs for the tie-broken argmin). No shuffle, no UDF.
+  - assignment: argmin_j ||x - c_j||^2, map-only, no shuffle.
+    assign_clusters / update_centroids run it as one numpy mapInArrow
+    kernel; kmeans_fit and semantic_dedup inline the k centroids as
+    literal arrays (_best_expr: zip_with/aggregate fold per centroid,
+    array_min of (dist, j) structs for the tie-broken argmin). Both
+    sum squared differences sequentially over dims and break ties to
+    the lowest cluster.
   - update: groupBy(cluster).agg(count + one avg per dimension) — one
     shuffle with map-side partial aggregation; centroids (k x dim
     doubles) are collected to the driver per iteration, exactly like
@@ -103,34 +106,22 @@ def assign_clusters(
     centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """(id, cluster, sqdist) — nearest-centroid assignment, map-only.
 
-    use_arrow=True (default): the argmin scan runs as a numpy kernel
-    (operators/arrow_kernels.assign_clusters_arrow) — identical float op
-    order (sequential over dims), raw-distance argmin with ties to the
-    lowest cluster, 6dp rounding still applied by the JVM F.round. The
-    zip_with/aggregate folds are CodegenFallback, K x dim interpreted
-    folds per row; use_arrow=False keeps them for differential tests."""
-    if use_arrow:
-        from .arrow_kernels import assign_clusters_arrow
+    The argmin scan is a numpy kernel (arrow_kernels.assign_clusters_arrow):
+    squared distances summed sequentially over dims, argmin over raw
+    distances with ties to the lowest cluster, then the 6dp rounding by
+    the JVM F.round. It replaced K x dim interpreted zip_with/aggregate
+    folds per row (CodegenFallback). tests/kernel_reference.assign_clusters
+    pins its rows."""
+    from .arrow_kernels import assign_clusters_arrow
 
-        out = assign_clusters_arrow(emb, centroids, id_col, vec_col)
-        return out.select(
-            F.col("id").alias(id_col),
-            "cluster",
-            F.round(F.col("sqdist"), 6).alias("sqdist"),
-        )
-    best = _best_expr(centroids)
-    return (
-        _vec(emb, id_col, vec_col)
-        .select("id", best.alias("b"))
-        .select(
-            F.col("id").alias(id_col),
-            F.col("b.cluster").alias("cluster"),
-            F.round(F.col("b.sqdist"), 6).alias("sqdist"),
-        )
+    out = assign_clusters_arrow(emb, centroids, id_col, vec_col)
+    return out.select(
+        F.col("id").alias(id_col),
+        "cluster",
+        F.round(F.col("sqdist"), 6).alias("sqdist"),
     )
 
 
@@ -139,29 +130,19 @@ def update_centroids(
     centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """One Lloyd update: (cluster, n, c0..c{dim-1}) — per-cluster member
     count and element-wise mean (rounded 6dp at the comparison
     boundary). One shuffle, map-side partial agg; only clusters with
-    members appear (empty clusters are the driver loop's concern)."""
-    dim = len(centroids[0])
-    # assignment via the numpy kernel (same float ops/order — see
-    # assign_clusters); the per-cluster mean aggregation stays exactly
-    # the JVM path it always was
-    if use_arrow:
-        from .arrow_kernels import assign_clusters_arrow
+    members appear (empty clusters are the driver loop's concern). The
+    assignment is assign_clusters' numpy kernel;
+    tests/kernel_reference.update_centroids pins the result."""
+    from .arrow_kernels import assign_clusters_arrow
 
-        assigned = assign_clusters_arrow(
-            emb, centroids, id_col, vec_col, keep_vec=True
-        ).select("v", "cluster")
-    else:
-        best = _best_expr(centroids)
-        assigned = (
-            _vec(emb, id_col, vec_col)
-            .select("v", best.alias("b"))
-            .select("v", F.col("b.cluster").alias("cluster"))
-        )
+    dim = len(centroids[0])
+    assigned = assign_clusters_arrow(
+        emb, centroids, id_col, vec_col, keep_vec=True
+    ).select("v", "cluster")
     return assigned.groupBy("cluster").agg(
         F.count(F.lit(1)).cast("int").alias("n"),
         *[

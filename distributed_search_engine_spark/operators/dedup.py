@@ -7,7 +7,7 @@ shingles / band buckets, which is the LSH scale path. Exact verification
 
 Operators:
   exact_dedup          — sha256(content) group, keep min doc_id
-  shingles             — word n-gram shingles, zero-shuffle (map-side arrays)
+  shingles             — word n-gram shingles, zero-shuffle (one Arrow kernel)
   minhash_signatures   — H affine min-hashes over one md5 base (portable)
   lsh_candidate_pairs  — banding -> bucket join -> distinct pairs
   jaccard_pairs        — exact n-gram jaccard for candidate (or all) pairs
@@ -95,65 +95,23 @@ def shingles(
     n: int = DEFAULT_SHINGLE_N,
     doc_id_col: str = "doc_id",
     content_col: str = "text",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """(doc_id, shingle): distinct word n-grams, built entirely map-side.
 
-    Each document is ONE input row, so per-row ``array_distinct`` over the
-    shingle array IS global (doc, shingle) distinctness — the whole operator
-    is a zero-shuffle projection (token array -> transform over a 1-based
-    index sequence -> array_distinct -> explode). The previous shape paid a
-    per-doc window sort (full shuffle+sort of the exploded token stream)
-    plus a distinct exchange; at 100 TB those were the two dominant
-    exchanges of the dedup pipeline. DuckDB twin: oracle._shingle_ctes
-    (list_transform + list_distinct + unnest — value-identical).
+    Each document is ONE input row, so per-doc distinctness IS global
+    (doc, shingle) distinctness — the whole operator is a zero-shuffle
+    map stage: one vectorized Arrow kernel per partition
+    (arrow_kernels.shingles_arrow: tokenize on Arrow buffers, window
+    join, per-doc distinct). The JVM HOF lambda chain it replaced
+    (transform + n element_at + concat_ws per window, CodegenFallback)
+    was the dominant per-task cost of every shingle consumer at 60k docs
+    (~5.2 s/pass). Rows come out sorted per doc, an order no consumer
+    observes (aggregations/joins only). DuckDB twin: oracle._shingle_ctes
+    (list_transform + list_distinct + unnest — value-identical);
+    tests/kernel_reference.shingles pins the kernel row for row."""
+    from .arrow_kernels import shingles_arrow
 
-    use_arrow=True (default) emits the same rows from one vectorized
-    Arrow kernel (operators/arrow_kernels.py): the JVM HOF lambda chain
-    (transform + n element_at + concat_ws per window, CodegenFallback —
-    interpreted per window) was the dominant per-task cost of every
-    shingle consumer at 60k docs (~5.2 s/pass). Row ORDER within a
-    partition differs (sorted per doc vs first-occurrence), which no
-    consumer observes (aggregations/joins only). use_arrow=False keeps
-    the Column path for differential tests."""
-    from ..functions import text as T
-
-    if use_arrow:
-        from .arrow_kernels import shingles_arrow
-
-        return shingles_arrow(docs, n, doc_id_col, content_col)
-
-    # The token array MUST be materialized as its own projection: HOF
-    # lambdas are codegen-fallback (no subexpression elimination), so an
-    # element_at over the inline tokenize expression would re-run the whole
-    # regex tokenization per element access — O(tokens^2) per doc.
-    # CollapseProject will not inline the alias back (multi-referenced,
-    # non-cheap), so the lambda sees a plain attribute.
-    t = docs.select(
-        F.col(doc_id_col).cast("string").alias("doc_id"),
-        T.tokens_col(F.col(content_col)).alias("_toks"),
-    )
-    arr = F.col("_toks")
-    idx = F.sequence(F.lit(1), F.size(arr) - F.lit(n - 1))
-    sh_arr = F.array_distinct(
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(arr, i + F.lit(j)) for j in range(n)]
-            ),
-        )
-    )
-    # CaseWhen short-circuits per row, so the sequence/element_at branch
-    # never evaluates for docs shorter than n tokens (where sequence would
-    # run descending and element_at(_, 0) would raise under ANSI).
-    return t.select(
-        "doc_id",
-        F.explode(
-            F.when(F.size(arr) >= n, sh_arr).otherwise(
-                F.array().cast("array<string>")
-            )
-        ).alias("shingle"),
-    )
+    return shingles_arrow(docs, n, doc_id_col, content_col)
 
 
 def minhash_signatures(
@@ -415,7 +373,6 @@ def simhash(
     docs: DataFrame,
     doc_id_col: str = "doc_id",
     content_col: str = "text",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """(doc_id, simhash): 64-bit majority-vote fingerprint over tokens
     (with multiplicity) — the industry-standard width for web-corpus
@@ -423,66 +380,20 @@ def simhash(
     bit (b%4) of hex nibble (b//4 + 1) of md5(token) — portable to the SQL
     oracle via instr(). Bit 63 wraps to the sign bit of the signed int64
     (two's complement) identically in Spark and DuckDB, so XOR/bit_count
-    hamming stays engine-portable.
+    hamming stays engine-portable. Majority vote: bit b set iff
+    2*S_b > n (a tie leaves it 0); a doc with no tokens emits no row.
 
-    Physical shape: ONE groupBy(doc_id) over the token rows, carrying 64
-    shift/mask bit-count partial aggregates plus the token count — no
-    64x row explosion, no per-(doc,bit) shuffle. (The first cut exploded
-    tokens x 64 bit-ids through two groupBys: ~500M rows at a 60k-doc /
-    8M-token corpus; this form keeps 8M rows and was measured 5x faster
-    on that corpus.) Majority vote: bit b set iff 2*S_b > n, identical
-    to the old sum(+1/-1) > 0 including the tie->0 case.
+    Physical shape: ONE vectorized kernel per partition
+    (arrow_kernels.simhash_arrow) — tokenize on Arrow buffers, md5 once
+    per DISTINCT token (worker-lifetime cache), per-doc bit counts via
+    numpy reduceat — emitting (doc_id, simhash) directly: a pure map
+    stage, zero token rows ever shuffled or fed through 64 JVM aggregate
+    expressions (that tokenize+md5 expression tree was ~4.8 s of a 6.8 s
+    stage at 60k docs). tests/kernel_reference.simhash pins the
+    fingerprints bit for bit."""
+    from .arrow_kernels import simhash_arrow
 
-    use_arrow=True (default): ONE vectorized kernel per partition —
-    tokenize on Arrow buffers, md5 once per DISTINCT token (worker-
-    lifetime cache), per-doc bit counts via numpy reduceat — emitting
-    (doc_id, simhash) directly: a pure map stage, zero token rows ever
-    shuffled or fed through 64 JVM aggregate expressions (measured ~4.8 s
-    of the 6.8 s stage was the tokenize+md5 expression tree at 60k docs).
-    Fingerprints are bit-identical (same md5, same nibble walk);
-    use_arrow=False keeps the Column path for differential tests."""
-    if use_arrow:
-        from .arrow_kernels import simhash_arrow
-
-        return simhash_arrow(docs, doc_id_col, content_col)
-    t = _tokens(docs, doc_id_col, content_col).select(
-        "doc_id", F.md5(F.col("tok")).alias("h")
-    )
-    # 64-bit token hash as two 32-bit halves, nibble-REVERSED before the
-    # base-16 parse so hex nibble j (1-based) lands on bits 4(j-1)..4j-1
-    # with LSB-first order inside the nibble — bit b of (lo,hi) equals
-    # bit (b%4) of nibble (b//4 + 1), the exact instr() walk of the SQL
-    # oracle and of the previous implementation (fingerprints unchanged).
-    # Halves keep the ANSI-mode cast in signed-64 range.
-    hv = t.select(
-        "doc_id",
-        F.conv(F.reverse(F.col("h").substr(1, 8)), 16, 10)
-        .cast("long")
-        .alias("_lo"),
-        F.conv(F.reverse(F.col("h").substr(9, 8)), 16, 10)
-        .cast("long")
-        .alias("_hi"),
-    )
-    aggs = [F.count(F.lit(1)).alias("_n")]
-    for b in range(SIMHASH_BITS):
-        src, sh = ("_lo", b) if b < 32 else ("_hi", b - 32)
-        aggs.append(
-            F.sum(F.shiftright(F.col(src), sh).bitwiseAND(F.lit(1))).alias(
-                f"_s{b}"
-            )
-        )
-    per_doc = hv.groupBy("doc_id").agg(*aggs)
-    acc = F.lit(0).cast("long")
-    for b in range(SIMHASH_BITS):
-        w = 1 << b
-        if w >= 1 << 63:  # sign bit: two's-complement wrap for a long lit
-            w -= 1 << 64
-        acc = acc.bitwiseOR(
-            F.when(2 * F.col(f"_s{b}") > F.col("_n"), F.lit(w)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return per_doc.select("doc_id", acc.alias("simhash"))
+    return simhash_arrow(docs, doc_id_col, content_col)
 
 
 def _block_layout(n_blocks: int) -> list[tuple[int, int]]:
@@ -740,38 +651,6 @@ def embedding_neardup(
 DEFAULT_SUBSTRING_W = 8
 
 
-def _window_hashes(toks_df: DataFrame, w: int) -> DataFrame:
-    """(doc_id, pos, whash): md5 of every w-token window, pos = 1-based
-    start index in the token stream. Pure per-doc projection (transform
-    over a start-index sequence + slice) — ZERO shuffle, like shingles.
-
-    The CASE guard matters: Spark's sequence(1, n) DESCENDS when n < 1,
-    which would fabricate windows for short docs.
-
-    The window array expression is passed INLINE to posexplode, never
-    aliased into its own projection first: posexplode over an ATTRIBUTE
-    makes InferFiltersFromGenerate synthesize `size(ws) > 0`, and predicate
-    pushdown then substitutes the whole expression — tokenizer included —
-    into a Filter below the toks projection, re-running the regex
-    tokenization per WINDOW inside the lambda (O(tokens^2) per doc;
-    measured 138 s vs 1.7 s on a 4k-doc corpus). Generators over complex
-    expressions are skipped by that rule (same reason shingles() explodes
-    its CASE expression directly). The toks projection itself survives
-    (multi-referenced, non-cheap — CollapseProject keeps it), so the
-    lambda sees a plain attribute."""
-    arr = F.col("toks")
-    ws = F.when(
-        F.size(arr) >= w,
-        F.transform(
-            F.sequence(F.lit(1), F.size(arr) - F.lit(w - 1)),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(arr, i, w))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return toks_df.select(
-        "doc_id", F.posexplode(ws).alias("pos0", "whash")
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "whash")
-
-
 def _token_arrays(docs: DataFrame, doc_id_col: str, content_col: str) -> DataFrame:
     from ..functions import text as T
 
@@ -787,7 +666,6 @@ def duplicate_windows(
     doc_id_col: str = "doc_id",
     content_col: str = "text",
     min_count: int = 2,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """(doc_id, pos, whash): every w-token window whose hash occurs >=
     min_count times corpus-wide — window-granular exact duplicate-substring
@@ -806,18 +684,15 @@ def duplicate_windows(
     large fraction of all rows) concentrates in one spill-able window
     partition; at that skew, pre-aggregate counts per (whash, salt) first.
 
-    use_arrow=True (default): window hashing runs as one Arrow kernel
-    (tokenize on Arrow buffers + vectorized window join + md5 per window
-    — operators/arrow_kernels.py) instead of the interpreted HOF
-    transform/slice/md5 chain; same (doc_id, pos, whash) rows."""
+    Window hashing is one Arrow kernel (arrow_kernels.window_hashes_arrow:
+    tokenize on Arrow buffers + vectorized window join + md5 per window),
+    not an interpreted HOF transform/slice/md5 chain;
+    tests/kernel_reference.duplicate_windows pins its rows."""
     from pyspark.sql.window import Window
 
-    if use_arrow:
-        from .arrow_kernels import window_hashes_arrow
+    from .arrow_kernels import window_hashes_arrow
 
-        wins = window_hashes_arrow(docs, w, doc_id_col, content_col)
-    else:
-        wins = _window_hashes(_token_arrays(docs, doc_id_col, content_col), w)
+    wins = window_hashes_arrow(docs, w, doc_id_col, content_col)
     cw = Window.partitionBy("whash")
     return (
         wins.withColumn("_c", F.count(F.lit(1)).over(cw))

@@ -190,8 +190,8 @@ def emit_postings_arrow(
 ) -> DataFrame:
     """North-star hot path: ONE vectorized Arrow kernel tokenizes content,
     adds the Porter-stem emissions, and emits finished (term, doc_id,
-    positions, tf, weighted_tf, raw_tf) posting rows — semantically
-    identical to the JVM chain aggregate_raw + with_stem_emissions.
+    positions, tf, weighted_tf, raw_tf) posting rows: each (term, doc)
+    once, stem rows merged into it (jobs/Indexer.java:463-475).
 
     Because every Arrow batch carries whole documents, the per-(term, doc)
     grouping AND the stem merge are complete inside the batch: the
@@ -355,25 +355,6 @@ def aggregate_raw(occ: DataFrame) -> DataFrame:
         F.sort_array(F.collect_list("pos")).alias("positions"),
         F.count(F.lit(1)).cast("int").alias("tf"),
         F.sum("weight").alias("weighted_tf"),
-    )
-
-
-def with_stem_emissions(per_td: DataFrame, term_dict: DataFrame) -> DataFrame:
-    """Add (stem, doc) posting rows for non-stop terms whose stem differs
-    (jobs/Indexer.java:463-475), at the aggregated (term, doc) level —
-    far cheaper than duplicating the occurrence stream. Where a stem
-    collides with a raw term in the same doc (e.g. raw 'index' + stem of
-    'indexing'), positions merge sorted and tf/weighted_tf sum, exactly
-    as the reference's per-doc map accumulates (:471-475)."""
-    joined = per_td.join(F.broadcast(term_dict), "term")
-    stems = joined.where(~F.col("is_stop") & (F.col("stem") != F.col("term"))).select(
-        F.col("stem").alias("term"), "doc_id", "positions", "tf", "weighted_tf"
-    )
-    both = per_td.select("term", "doc_id", "positions", "tf", "weighted_tf").unionByName(stems)
-    return both.groupBy("term", "doc_id").agg(
-        F.array_sort(F.flatten(F.collect_list("positions"))).alias("positions"),
-        F.sum("tf").cast("int").alias("tf"),
-        F.sum("weighted_tf").alias("weighted_tf"),
     )
 
 
@@ -577,42 +558,27 @@ def build_index(
     content_col: str = "content",
     with_stems: bool = True,
     n_salts: int = DEFAULT_SALTS,
-    use_arrow: bool = True,
 ) -> dict[str, DataFrame]:
     """Full logical index build: returns doc_stats, postings, term_stats,
     term_dict DataFrames (FIXTURES.md §4 schemas).
 
-    Physical shape (one pass over the corpus):
-      tokenize+explode -> groupBy(term, doc_id) [THE shuffle] ->
-      stem rows unioned at (term, doc) level -> doc stats derived from the
-      same aggregation -> broadcast-joined normalized_tf -> salted caps.
-    per_td_raw is persisted (reused by doc_stats, stems, term_dict).
-
-    use_arrow=True (default) emits finished stem-merged postings from the
-    vectorized Arrow kernel with NO occurrence-level shuffle
-    (emit_postings_arrow); use_arrow=False is the pure-JVM Column path
-    (occurrences + aggregate_raw + with_stem_emissions) kept for
-    differential testing."""
-    if use_arrow:
-        per_td = emit_postings_arrow(
-            docs, doc_id_col, content_col, with_stems=with_stems
-        ).persist()
-        doc_stats = doc_stats_from_raw(
-            docs, per_td.where(F.col("raw_tf") > 0), doc_id_col, content_col,
-            tf_col="raw_tf",
-        ).persist()
-        term_dict = build_term_dict(
-            per_td.where(F.col("raw_tf") > 0).select("term")
-        )
-        per_td = per_td.drop("raw_tf")
-    else:
-        occ = occurrences(docs, doc_id_col, content_col)
-        per_td_raw = aggregate_raw(occ).persist()
-        doc_stats = doc_stats_from_raw(docs, per_td_raw, doc_id_col, content_col).persist()
-        term_dict = build_term_dict(per_td_raw.select("term"))
-        per_td = (
-            with_stem_emissions(per_td_raw, term_dict) if with_stems else per_td_raw
-        )
+    Physical shape (one pass over the corpus): the vectorized Arrow kernel
+    emit_postings_arrow emits finished stem-merged (term, doc) postings
+    with NO occurrence-level shuffle; per_td is persisted (reused by
+    doc_stats and term_dict) -> doc stats derived from its raw_tf ->
+    salted caps -> broadcast-joined normalized_tf. The kernel is the one
+    path; tests/naive_reference.py (test_rank_identity.py) pins it."""
+    per_td = emit_postings_arrow(
+        docs, doc_id_col, content_col, with_stems=with_stems
+    ).persist()
+    doc_stats = doc_stats_from_raw(
+        docs, per_td.where(F.col("raw_tf") > 0), doc_id_col, content_col,
+        tf_col="raw_tf",
+    ).persist()
+    term_dict = build_term_dict(
+        per_td.where(F.col("raw_tf") > 0).select("term")
+    )
+    per_td = per_td.drop("raw_tf")
     # caps BEFORE the doc_stats join: the cap order is weighted_tf desc
     # (jobs/Indexer.java:668-672), independent of normalized_tf, so ranking
     # the pre-join rows is equivalent and the join then touches only the

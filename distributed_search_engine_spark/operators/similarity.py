@@ -627,7 +627,6 @@ def persist_coded_corpus(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_arrow: bool = True,
 ) -> None:
     """Write the IVFADC store: residual PQ codes partitioned BY COARSE
     CELL (parquet `cluster=<c>/` directories — the vector-side analog of
@@ -635,27 +634,14 @@ def persist_coded_corpus(
     one write; at 10^9 vectors each cell directory holds M bytes/vector
     and a probe reads only n_probe directories.
 
-    use_arrow=True (default): the encode (coarse argmin + residual +
-    M x K rounded codeword distances + per-subspace argmin) runs as one
-    numpy kernel — the JVM zip_with/aggregate folds are CodegenFallback
-    and evaluated ~2k interpreted folds per row; identical float order,
-    identical HALF_UP rounding, codes pinned by differential test +
-    the ann_ivfadc oracle gate."""
-    dsub = len(codebooks[0][0])
-    if use_arrow:
-        from .arrow_kernels import coded_corpus_arrow
+    The encode (coarse argmin + residual + M x K rounded codeword
+    distances + per-subspace 1-based argmin) is one numpy kernel
+    (arrow_kernels.coded_corpus_arrow), replacing ~2k interpreted
+    zip_with/aggregate folds per row; tests/kernel_reference.coded_corpus
+    and the ann_ivfadc oracle gate pin the codes."""
+    from .arrow_kernels import coded_corpus_arrow
 
-        coded = coded_corpus_arrow(emb, coarse_cents, codebooks, id_col, vec_col)
-    else:
-        res = residuals(emb, coarse_cents, id_col, vec_col)
-        code_cols = []
-        for m, book in enumerate(codebooks):
-            sub = F.slice(F.col("r"), m * dsub + 1, dsub)
-            darr = F.array(*[F.round(_sq_l2(sub, c), 6) for c in book])
-            code_cols.append(
-                F.array_position(darr, F.array_min(darr)).cast("int").alias(f"code_{m}")
-            )
-        coded = res.select("id", "cluster", *code_cols)
+    coded = coded_corpus_arrow(emb, coarse_cents, codebooks, id_col, vec_col)
     (
         coded
         # cluster rows by their target cluster= directory before the

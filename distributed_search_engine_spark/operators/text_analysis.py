@@ -802,37 +802,19 @@ LM_ALPHA = 0.1
 
 
 def _bigram_stream(
-    docs: DataFrame, doc_id_col: str, content_col: str,
-    use_arrow: bool = True,
+    docs: DataFrame, doc_id_col: str, content_col: str
 ) -> DataFrame:
     """(doc_id, bigram): every adjacent token pair as a space-joined
-    string key. Pure per-doc projection — the bigram array expression is
-    fed INLINE to explode (an aliased attribute would trip
-    InferFiltersFromGenerate + pushdown into re-tokenizing per bigram;
-    see dedup._window_hashes for the measured pathology). Tokens cannot
-    contain whitespace, so the string key round-trips to (w1, w2).
+    string key, repeats kept. A pure map stage: one Arrow kernel
+    (arrow_kernels.bigram_stream_arrow: vectorized tokenize + window
+    join); the interpreted HOF transform/slice/concat chain it replaced
+    was ~5.5 s/pass at 60k docs, and this stream is generated twice per
+    LM scoring call. Tokens cannot contain whitespace, so the string key
+    round-trips to (w1, w2). tests/kernel_reference.bigram_stream pins
+    its rows."""
+    from .arrow_kernels import bigram_stream_arrow
 
-    use_arrow=True (default): the same rows from one Arrow kernel
-    (vectorized tokenize + window join — operators/arrow_kernels.py);
-    the interpreted HOF transform/slice/concat chain was ~5.5 s/pass at
-    60k docs and this stream is generated twice per LM scoring call."""
-    if use_arrow:
-        from .arrow_kernels import bigram_stream_arrow
-
-        return bigram_stream_arrow(docs, doc_id_col, content_col)
-    toks_df = docs.select(
-        F.col(doc_id_col).cast("string").alias("doc_id"),
-        T.tokens_col(F.col(content_col)).alias("toks"),
-    )
-    arr = F.col("toks")
-    bg = F.when(
-        F.size(arr) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(arr) - 1),
-            lambda i: F.concat_ws(" ", F.slice(arr, i, 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return toks_df.select("doc_id", F.explode(bg).alias("bigram"))
+    return bigram_stream_arrow(docs, doc_id_col, content_col)
 
 
 def bigram_lm_stats(
@@ -1229,41 +1211,21 @@ def cms_build(
     width: int = 1024,
     doc_id_col: str = "doc_id",
     content_col: str = "text",
-    use_arrow: bool = True,
 ) -> DataFrame:
-    """(row, bucket, c): the d x width counter table. One partial-agg
-    groupBy over (token-stream x d) rows; counters merge across any
-    split of the input by summing, which is what makes the sketch the
-    streaming/mergeable swap for exact token counts.
+    """(row, bucket, c): the d x width counter table; row r counts each
+    token occurrence at md5_bucket(tok, width, salt=f"cms{r}:").
+    Counters merge across any split of the input by summing, which is
+    what makes the sketch the streaming/mergeable swap for exact token
+    counts.
 
-    use_arrow=True (default): per-chunk partial counters from one Arrow
-    kernel (md5_bucket arithmetic per DISTINCT token, numpy bincount)
-    summed by one tiny groupBy — the JVM path exploded the token stream
-    d-fold and ran d md5+conv trees per occurrence."""
-    from ..functions.hashing import md5_bucket
+    Per-chunk partial counters come from one Arrow kernel
+    (arrow_kernels.cms_counts_arrow: the bucket arithmetic once per
+    DISTINCT token, numpy bincount), summed by one tiny groupBy — no
+    d-fold explode of the token stream. tests/kernel_reference.cms pins
+    the counters."""
+    from .arrow_kernels import cms_counts_arrow
 
-    if use_arrow:
-        from .arrow_kernels import cms_counts_arrow
-
-        return cms_counts_arrow(docs, d, width, doc_id_col, content_col)
-
-    t = _tok_df(docs, doc_id_col, content_col).where(F.col("tok") != "")
-    rows = t.select(
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(r).alias("row"),
-                    md5_bucket(F.col("tok"), width, salt=f"cms{r}:").alias(
-                        "bucket"
-                    ),
-                )
-                for r in range(d)
-            ])
-        ).alias("rb")
-    )
-    return rows.groupBy(
-        F.col("rb.row").alias("row"), F.col("rb.bucket").alias("bucket")
-    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
+    return cms_counts_arrow(docs, d, width, doc_id_col, content_col)
 
 
 def cms_heavy_hitters(

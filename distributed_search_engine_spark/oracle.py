@@ -111,11 +111,12 @@ def stemmed_postings_sql(stem_map: list[tuple[str, str]]) -> str:
     MAP for a finite vocabulary is: the caller materializes it in Python
     (functions/stemmer.porter_stem over the corpus vocabulary, enumerated
     with the SAME duckdb tokenizer the oracle uses) and it lands here as an
-    inline VALUES table. The oracle then reproduces with_stem_emissions
-    (operators/postings.py): non-stop terms whose stem differs emit a
-    second posting row under the stem; (term, doc) collisions merge with
-    sorted-position concat + tf sum; the I10 caps QUALIFY mirrors
-    apply_caps on the merged rows (inert below cap-sized corpora)."""
+    inline VALUES table. The oracle then reproduces the stem merge of
+    emit_postings_arrow (operators/postings.py): non-stop terms whose stem
+    differs emit a second posting row under the stem; (term, doc)
+    collisions merge with sorted-position concat + tf sum; the I10 caps
+    QUALIFY mirrors apply_caps on the merged rows (inert below cap-sized
+    corpora)."""
     if stem_map:
         pairs = ", ".join(
             f"('{t}', '{s}')" for t, s in stem_map
@@ -1923,7 +1924,7 @@ FROM c
 def _substring_window_ctes(w: int = 8, keep_one: bool = False) -> str:
     """docs -> filtered token array -> w-token window hashes (1-based start
     pos) -> corpus-wide counts -> duplicated window starts. Value-identical
-    twin of dedup._window_hashes + the min_count=2 filter; keep_one=True
+    twin of dedup.duplicate_windows (min_count=2); keep_one=True
     spares the corpus-first occurrence per hash (argmin over
     (doc_id, pos), string order — dedup.drop_keeper_occurrences)."""
     if keep_one:

@@ -1,0 +1,191 @@
+"""Independent pure-Python references for the Arrow-kernel operators —
+the slow oracle `tests/test_arrow_kernels.py` compares each kernel with,
+written from the operators' documented arithmetic, NOT from
+operators/arrow_kernels.py. Deliberately naive dict-and-loop code with
+no Spark in the computation: any disagreement with a kernel is a
+translation bug in one of them.
+
+Inputs are driver-side rows: ``docs`` is a list of (doc_id, text)
+pairs, ``vecs`` a list of (id, [float, ...]) pairs. The tokenizer is
+shared with the engine (functions.text.tokenize_py), as in
+tests/naive_reference.py; hashes are hashlib.md5.
+"""
+
+from __future__ import annotations
+
+import math
+from decimal import ROUND_HALF_UP, Decimal
+from hashlib import md5
+
+from distributed_search_engine_spark.functions.text import tokenize_py
+
+
+def _tokens(text):
+    return tokenize_py(text) if text is not None else []
+
+
+def _md5_hex(s: str) -> str:
+    return md5(s.encode()).hexdigest()
+
+
+def round6(x: float) -> float:
+    """Spark's round(x, 6): the shortest decimal repr, HALF_UP."""
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+# ---------------------------------------------------------------------------
+# document operators: rows are (doc_id as string, ...)
+# ---------------------------------------------------------------------------
+
+
+def shingles(docs, n):
+    """(doc_id, shingle): distinct space-joined n-token windows per doc."""
+    out = set()
+    for doc_id, text in docs:
+        toks = _tokens(text)
+        for i in range(len(toks) - n + 1):
+            out.add((str(doc_id), " ".join(toks[i : i + n])))
+    return sorted(out)
+
+
+def simhash(docs):
+    """(doc_id, simhash): bit b is set iff more than half of the doc's
+    tokens (with multiplicity) have bit b%4 of md5 hex nibble b//4 set;
+    bit 63 wraps to the sign of an int64. A doc with no tokens emits no
+    row."""
+    out = []
+    for doc_id, text in docs:
+        toks = _tokens(text)
+        if not toks:
+            continue
+        votes = [0] * 64
+        for tok in toks:
+            h = _md5_hex(tok)
+            for b in range(64):
+                votes[b] += (int(h[b // 4], 16) >> (b % 4)) & 1
+        fp = 0
+        for b in range(64):
+            if 2 * votes[b] > len(toks):
+                fp |= 1 << b
+        if fp >= 1 << 63:
+            fp -= 1 << 64
+        out.append((str(doc_id), fp))
+    return sorted(out)
+
+
+def window_hashes(docs, w):
+    """(doc_id, pos, whash): md5 of every w-token window; pos is the
+    1-based start token."""
+    out = []
+    for doc_id, text in docs:
+        toks = _tokens(text)
+        for i in range(len(toks) - w + 1):
+            out.append((str(doc_id), i + 1, _md5_hex(" ".join(toks[i : i + w]))))
+    return out
+
+
+def duplicate_windows(docs, w, min_count=2):
+    """The window_hashes rows whose hash occurs >= min_count times."""
+    rows = window_hashes(docs, w)
+    count = {}
+    for _, _, h in rows:
+        count[h] = count.get(h, 0) + 1
+    return sorted(r for r in rows if count[r[2]] >= min_count)
+
+
+def bigram_stream(docs):
+    """(doc_id, bigram): every adjacent token pair, with repeats."""
+    out = []
+    for doc_id, text in docs:
+        toks = _tokens(text)
+        for i in range(len(toks) - 1):
+            out.append((str(doc_id), toks[i] + " " + toks[i + 1]))
+    return sorted(out)
+
+
+def cms(docs, d=4, width=1024):
+    """(row, bucket, c): count-min counters over every token occurrence;
+    row r hashes a token to int(md5("cms{r}:" + tok)[:8], 16) % width."""
+    count = {}
+    for _, text in docs:
+        for tok in _tokens(text):
+            for r in range(d):
+                key = (r, int(_md5_hex(f"cms{r}:{tok}")[:8], 16) % width)
+                count[key] = count.get(key, 0) + 1
+    return sorted((r, b, c) for (r, b), c in count.items())
+
+
+def trigrams(lowered_docs):
+    """(doc_id, trigram): distinct 3-code-point slices per doc. The
+    texts arrive lowercased by Spark's lower(), the engine's case
+    mapping; doc ids keep their type."""
+    out = set()
+    for doc_id, text in lowered_docs:
+        if text is None:
+            continue
+        for i in range(len(text) - 2):
+            out.add((doc_id, text[i : i + 3]))
+    return sorted(out)
+
+
+# ---------------------------------------------------------------------------
+# vector operators
+# ---------------------------------------------------------------------------
+
+
+def _sq_dist(v, c):
+    acc = 0.0
+    for x, y in zip(v, c):
+        acc += (x - y) * (x - y)
+    return acc
+
+
+def _nearest(v, cents):
+    """(cluster, raw squared distance); ties go to the lowest index."""
+    best, best_d = 0, _sq_dist(v, cents[0])
+    for j in range(1, len(cents)):
+        dj = _sq_dist(v, cents[j])
+        if dj < best_d:
+            best, best_d = j, dj
+    return best, best_d
+
+
+def assign_clusters(vecs, cents):
+    """(id, cluster, sqdist) with sqdist rounded to 6 decimals."""
+    out = []
+    for vid, v in vecs:
+        j, dj = _nearest(v, cents)
+        out.append((vid, j, round6(dj)))
+    return sorted(out)
+
+
+def update_centroids(vecs, cents):
+    """(cluster, n, c0..c{dim-1}): member count and per-coordinate mean
+    (exact sum / n, rounded to 6 decimals) of each non-empty cluster."""
+    members = {}
+    for _, v in vecs:
+        members.setdefault(_nearest(v, cents)[0], []).append(v)
+    out = []
+    for j, vs in members.items():
+        n = len(vs)
+        means = [round6(math.fsum(v[d] for v in vs) / n) for d in range(len(vs[0]))]
+        out.append((j, n, *means))
+    return sorted(out)
+
+
+def coded_corpus(vecs, cents, books):
+    """(id, cluster, code_0..code_{M-1}): the coarse cell, then per
+    subspace the 1-based position of the first minimum of the
+    6-decimal-rounded distances from the residual to each codeword."""
+    dsub = len(books[0][0])
+    out = []
+    for vid, v in vecs:
+        j, _ = _nearest(v, cents)
+        r = [x - c for x, c in zip(v, cents[j])]
+        codes = []
+        for m, book in enumerate(books):
+            sub = r[m * dsub : (m + 1) * dsub]
+            dists = [round6(_sq_dist(sub, cw)) for cw in book]
+            codes.append(dists.index(min(dists)) + 1)
+        out.append((vid, j, *codes))
+    return sorted(out)

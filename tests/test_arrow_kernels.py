@@ -1,13 +1,19 @@
-"""Round-6 optimization: differential tests pinning the vectorized Arrow
-kernels (operators/arrow_kernels.py) value-identical to the JVM Column
-paths they replaced. Every operator keeps a use_arrow=False fallback
-precisely so this comparison stays runnable; the DuckDB oracle gates
-cover the same operators end-to-end at sf0.01/sf0.001.
+"""Differential tests pinning the vectorized Arrow kernels
+(operators/arrow_kernels.py), each its operator's one implementation.
+The simhash, shingle, window-hash, bigram, CMS, trigram and vector
+kernels are compared row for row with the independent pure-Python
+references in tests/kernel_reference.py (the `_matches_jvm` names
+recall the JVM Column twins those references were checked against
+before the twins were deleted); the token-count, distinct-token and
+HLL kernels with JVM Column expressions built here. The DuckDB oracle
+gates cover the same operators end-to-end at sf0.01/sf0.001.
 
 The fixture corpus stresses the edge cases the kernels must reproduce:
 empty docs, whitespace-only, NULL content, sub-window-length docs,
 HTML tags, punctuation, unicode (case mapping + multibyte trigrams),
-vertical-tab/whitespace-class corners, and heavy repetition.
+vertical-tab/whitespace-class corners, and heavy repetition. Each
+document kernel also runs on the fixture with string doc ids, spread
+over 16 partitions (most of them empty), and with no rows.
 """
 
 from __future__ import annotations
@@ -18,6 +24,7 @@ from pyspark.sql import functions as F
 from distributed_search_engine_spark.operators import dedup as D
 from distributed_search_engine_spark.operators import text_analysis as TA
 from distributed_search_engine_spark.index import trigram as TRI
+from tests import kernel_reference as R
 
 
 ROWS = [
@@ -44,22 +51,38 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
+def _variants(spark, kdocs):
+    """(name, frame, driver rows) for the fixture as given, with string
+    doc ids, repartitioned to 16 partitions, and with no rows."""
+    frames = {
+        "long ids": kdocs,
+        "string ids": kdocs.select(
+            F.concat(F.lit("doc-"), F.col("doc_id")).alias("doc_id"), "text"
+        ),
+        "16 partitions": kdocs.repartition(16),
+        "no rows": spark.createDataFrame([], kdocs.schema),
+    }
+    for name, df in frames.items():
+        yield name, df, [tuple(r) for r in df.collect()]
+
+
 def test_simhash_kernel_matches_jvm(spark, kdocs):
-    assert _rows(D.simhash(kdocs)) == _rows(D.simhash(kdocs, use_arrow=False))
+    for name, df, docs in _variants(spark, kdocs):
+        assert _rows(D.simhash(df)) == R.simhash(docs), name
 
 
 def test_shingles_kernel_matches_jvm(spark, kdocs):
-    for n in (2, 3, 5):
-        assert _rows(D.shingles(kdocs, n=n)) == _rows(
-            D.shingles(kdocs, n=n, use_arrow=False)
-        )
+    for name, df, docs in _variants(spark, kdocs):
+        for n in (2, 3, 5):
+            assert _rows(D.shingles(df, n=n)) == R.shingles(docs, n), (name, n)
 
 
 def test_window_hash_kernel_matches_jvm(spark, kdocs):
-    for w in (3, 8):
-        assert _rows(D.duplicate_windows(kdocs, w)) == _rows(
-            D.duplicate_windows(kdocs, w, use_arrow=False)
-        )
+    for name, df, docs in _variants(spark, kdocs):
+        for w in (3, 8):
+            assert _rows(D.duplicate_windows(df, w)) == R.duplicate_windows(
+                docs, w
+            ), (name, w)
 
 
 def test_token_count_kernel_matches_jvm(spark, kdocs):
@@ -74,13 +97,14 @@ def test_token_count_kernel_matches_jvm(spark, kdocs):
 
 
 def test_bigram_stream_kernel_matches_jvm(spark, kdocs):
-    assert _rows(TA._bigram_stream(kdocs, "doc_id", "text")) == _rows(
-        TA._bigram_stream(kdocs, "doc_id", "text", use_arrow=False)
-    )
+    for name, df, docs in _variants(spark, kdocs):
+        got = _rows(TA._bigram_stream(df, "doc_id", "text"))
+        assert got == R.bigram_stream(docs), name
 
 
 def test_cms_kernel_matches_jvm(spark, kdocs):
-    assert _rows(TA.cms_build(kdocs)) == _rows(TA.cms_build(kdocs, use_arrow=False))
+    for name, df, docs in _variants(spark, kdocs):
+        assert _rows(TA.cms_build(df)) == R.cms(docs), name
 
 
 def test_distinct_tokens_kernel_matches_jvm(spark, kdocs):
@@ -119,15 +143,15 @@ def test_hll_registers_kernel_matches_jvm(spark, kdocs):
 
 
 def test_trigram_kernel_matches_jvm(spark, kdocs):
-    assert _rows(TRI.trigram_postings(kdocs)) == _rows(
-        TRI.trigram_postings(kdocs, use_arrow=False)
-    )
+    for name, df, _ in _variants(spark, kdocs):
+        lowered = [tuple(r) for r in df.select("doc_id", F.lower("text")).collect()]
+        assert _rows(TRI.trigram_postings(df)) == R.trigrams(lowered), name
 
 
 # ---------------------------------------------------------------------------
 # vector assignment kernels (k-means argmin, IVFADC residual-PQ codes):
 # raw distances use the identical sequential float fold, PQ codes argmin
-# over HALF_UP-rounded distances — all pinned against the JVM paths.
+# over HALF_UP-rounded distances — all pinned against kernel_reference.
 # ---------------------------------------------------------------------------
 
 
@@ -146,6 +170,17 @@ def kvecs(spark):
     )
 
 
+def _vecs(df):
+    return [(r[0], list(r[1])) for r in df.collect()]
+
+
+def _vec_variants(spark, kvecs):
+    """The vectors as given, over 16 partitions, and with no rows."""
+    yield "as given", kvecs
+    yield "16 partitions", kvecs.repartition(16)
+    yield "no rows", spark.createDataFrame([], kvecs.schema)
+
+
 def test_assign_clusters_kernel_matches_jvm(spark, kvecs):
     from distributed_search_engine_spark.operators.clustering import (
         assign_clusters,
@@ -153,9 +188,9 @@ def test_assign_clusters_kernel_matches_jvm(spark, kvecs):
     )
 
     cents = seeded_centroids(8, 16, seed=5)
-    assert _rows(assign_clusters(kvecs, cents)) == _rows(
-        assign_clusters(kvecs, cents, use_arrow=False)
-    )
+    for name, df in _vec_variants(spark, kvecs):
+        got = _rows(assign_clusters(df, cents))
+        assert got == R.assign_clusters(_vecs(df), cents), name
 
 
 def test_update_centroids_kernel_matches_jvm(spark, kvecs):
@@ -165,9 +200,9 @@ def test_update_centroids_kernel_matches_jvm(spark, kvecs):
     )
 
     cents = seeded_centroids(8, 16, seed=5)
-    assert _rows(update_centroids(kvecs, cents)) == _rows(
-        update_centroids(kvecs, cents, use_arrow=False)
-    )
+    for name, df in _vec_variants(spark, kvecs):
+        got = _rows(update_centroids(df, cents))
+        assert got == R.update_centroids(_vecs(df), cents), name
 
 
 def test_coded_corpus_kernel_matches_jvm(spark, kvecs, tmp_path):
@@ -185,12 +220,11 @@ def test_coded_corpus_kernel_matches_jvm(spark, kvecs, tmp_path):
         residuals(kvecs, cents), seeded_centroids(4, 16, seed=17),
         m_subs=4, iters=1, id_col="id", vec_col="r",
     )
-    d1, d2 = str(tmp_path / "a"), str(tmp_path / "b")
-    persist_coded_corpus(kvecs, cents, books, d1)
-    persist_coded_corpus(kvecs, cents, books, d2, use_arrow=False)
-    r1 = _rows(spark.read.option("basePath", d1).parquet(d1))
-    r2 = _rows(spark.read.option("basePath", d2).parquet(d2))
-    assert r1 == r2
+    d = str(tmp_path / "coded")
+    persist_coded_corpus(kvecs, cents, books, d)
+    cols = ["id", "cluster"] + [f"code_{m}" for m in range(len(books))]
+    got = _rows(spark.read.option("basePath", d).parquet(d).select(*cols))
+    assert got == R.coded_corpus(_vecs(kvecs), cents, books)
 
 
 def test_round6_half_up_matches_spark_round(spark):
@@ -250,8 +284,8 @@ def test_round6_half_up_large_magnitudes_match_spark_round(spark):
 
 
 def test_assign_clusters_kernel_keeps_string_ids(spark, kvecs):
-    """Non-numeric ids pass through the kernel with their type, as in the
-    JVM path (a long cast would fail on them under ANSI)."""
+    """Non-numeric ids pass through the kernel with their type (a long
+    cast would fail on them under ANSI)."""
     from pyspark.sql import functions as F
 
     from distributed_search_engine_spark.operators.clustering import (
@@ -266,7 +300,7 @@ def test_assign_clusters_kernel_keeps_string_ids(spark, kvecs):
     cents = seeded_centroids(8, 16, seed=5)
     got = assign_clusters(svecs, cents)
     assert got.schema["vec_id"].dataType.simpleString() == "string"
-    assert _rows(got) == _rows(assign_clusters(svecs, cents, use_arrow=False))
+    assert _rows(got) == R.assign_clusters(_vecs(svecs), cents)
     assert _rows(update_centroids(svecs, cents)) == _rows(
         update_centroids(kvecs, cents)
     )

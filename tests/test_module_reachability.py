@@ -1,7 +1,7 @@
 """Every package module is imported from some program root.
 
-A pure `ast` walk (no Spark session) from `__spark_entry__.py`, the bench
-scripts, the perfbench workloads and the tools. It follows absolute and
+A pure `ast` walk (no Spark session) from `__spark_entry__.py`, `bench.py`,
+the perfbench workloads and the tools. It follows absolute and
 relative imports, function-local ones included, and names each module of
 `distributed_search_engine_spark/` that no root reaches.
 """
@@ -16,7 +16,7 @@ PKG = "distributed_search_engine_spark"
 
 
 def _roots():
-    files = [REPO / n for n in ("__spark_entry__.py", "bench.py", "bench_extra.py")]
+    files = [REPO / n for n in ("__spark_entry__.py", "bench.py")]
     files += sorted((REPO / "perfbench").glob("*.py"))
     files += sorted((REPO / "tools").glob("*.py"))
     return [f for f in files if f.exists()]

@@ -1002,29 +1002,20 @@ def test_substring_dup_stats(spark, sub_docs):
 
 
 def test_window_hash_plan_is_shuffle_free(spark, sub_docs):
-    """window hashing is a pure per-doc projection: the (doc_id, pos, whash)
-    stream reaches its count groupBy with ZERO prior exchanges — and ZERO
-    Filter nodes. A Filter here is the InferFiltersFromGenerate trap:
-    posexplode over an aliased attribute synthesizes `size(ws) > 0`, and
-    pushdown substitutes the whole window expression (tokenizer included)
-    into the Filter, re-running tokenization per WINDOW (O(tokens^2)/doc,
-    measured 138 s vs 1.7 s on a 4k-doc corpus). The generator must consume
-    the window expression inline, and the toks projection must survive as
-    the single place tokenization happens."""
+    """window hashing is a pure per-doc map stage: the (doc_id, pos, whash)
+    stream duplicate_windows counts comes from one vectorized Arrow kernel
+    (arrow_kernels.window_hashes_arrow) with ZERO exchanges and no
+    row-at-a-time Python (no BatchEvalPython); the one shuffle is the
+    hash-keyed count after it."""
+    from distributed_search_engine_spark.operators.arrow_kernels import (
+        window_hashes_arrow,
+    )
     from tests.test_plans import plan_of
 
-    wins = D._window_hashes(D._token_arrays(sub_docs, "doc_id", "text"), 8)
-    p = plan_of(wins)
+    p = plan_of(window_hashes_arrow(sub_docs, 8))
     assert "Exchange" not in p
-    assert "Filter" not in p
-    # tokenization stays a standalone projection: the Generate node's
-    # argument must reference the toks attribute, not an inlined regexp
-    # pipeline (its detail block is the paragraph headed "(N) Generate")
-    import re as _re
-
-    m = _re.search(r"\(\d+\) Generate\n(.*?)(\n\n|$)", p, _re.S)
-    assert m is not None
-    assert "regexp_replace" not in m.group(1)
+    assert "MapInArrow" in p
+    assert "BatchEvalPython" not in p
 
 
 # ---------------------------------------------------------------------------
@@ -1089,22 +1080,14 @@ def test_bigram_lm_repetitive_scores_lower_ppl(spark):
 
 
 def test_bigram_stream_plan_is_shuffle_free(spark):
-    """bigram emission is a pure map stage: the Arrow-kernel default has
-    no Exchange and no per-row Python; the JVM fallback keeps the
-    InferFiltersFromGenerate guard (no Filter, no regexp inside the
-    Generate) that prevents per-bigram re-tokenization."""
-    import re as _re
-
+    """bigram emission is a pure map stage: one Arrow kernel, no
+    Exchange and no per-row Python."""
     from tests.test_plans import plan_of
 
     docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     p = plan_of(TA._bigram_stream(docs, "doc_id", "text"))
     assert "Exchange" not in p and "BatchEvalPython" not in p
     assert "MapInArrow" in p
-    p_jvm = plan_of(TA._bigram_stream(docs, "doc_id", "text", use_arrow=False))
-    assert "Exchange" not in p_jvm and "Filter" not in p_jvm
-    m = _re.search(r"\(\d+\) Generate\n(.*?)(\n\n|$)", p_jvm, _re.S)
-    assert m and "regexp_replace" not in m.group(1)
 
 
 # ---------------------------------------------------------------------------
@@ -1185,9 +1168,8 @@ def test_simhash_plan_is_pure_map_kernel(spark, docs):
     row per doc — a pure map stage: ZERO Exchange, ZERO Generate, no
     row-at-a-time Python (no BatchEvalPython). The 64x bit-id explode
     (2 Generates, 2 Exchanges) and the 65-aggregate groupBy (1 Exchange,
-    64 shift/mask trees per token) must not come back. The JVM fallback
-    (use_arrow=False) keeps the previous single-exchange shape and is
-    differentially tested in test_arrow_kernels.py."""
+    64 shift/mask trees per token) must not come back. The fingerprints
+    are pinned by kernel_reference.simhash in test_arrow_kernels.py."""
     from tests.test_plans import plan_of
 
     p = plan_of(D.simhash(docs))
@@ -1195,9 +1177,6 @@ def test_simhash_plan_is_pure_map_kernel(spark, docs):
     assert "Generate" not in p
     assert "BatchEvalPython" not in p
     assert "MapInArrow" in p
-    p_jvm = plan_of(D.simhash(docs, use_arrow=False))
-    assert p_jvm.count("+- Exchange") == 1
-    assert p_jvm.count("+- Generate") == 1
 
 
 # ---------------------------------------------------------------------------

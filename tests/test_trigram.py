@@ -78,19 +78,17 @@ def test_short_needle_falls_back_to_exact_scan(spark):
 
 
 def test_build_plan_is_zero_exchange(spark):
-    """The build is a ZERO-exchange map stage in both paths: per-doc
-    dedup makes emitted pairs unique, so no distinct shuffle exists.
-    Default path is one vectorized Arrow kernel (round-6: the JVM
-    transform/substr HOF is CodegenFallback, ~10x slower at 60k docs);
-    no row-at-a-time Python either way."""
+    """The build is a ZERO-exchange map stage: per-doc dedup makes
+    emitted pairs unique, so no distinct shuffle exists. It is one
+    vectorized Arrow kernel (the JVM transform/substr HOF it replaced is
+    CodegenFallback, ~10x slower at 60k docs), with no row-at-a-time
+    Python."""
     from tests.test_plans import plan_of
 
     p = plan_of(TRI.trigram_postings(_docs(spark)))
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
     assert "MapInArrow" in p
     assert "Exchange" not in p, p
-    p_jvm = plan_of(TRI.trigram_postings(_docs(spark), use_arrow=False))
-    assert "Exchange" not in p_jvm, p_jvm
 
 
 def test_substring_plan_verifies_after_join(spark):
