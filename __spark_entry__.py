@@ -407,16 +407,15 @@ def _q_bm25_dist_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_bm25_maxscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # MaxScore (Turtle & Flood) kernel over the same compressed segments
-    # — the WAND-alternative dynamic-pruning scorer; a 3-term query so
-    # the essential/non-essential split actually engages. Driver-side
-    # kernel is bounded by the I10 20k/5k per-term caps (same contract
-    # as the round-2 wand_topk path); the sharded executor path stays
-    # distributed_topk. Gated against the plain SQL BM25 top-k.
-    from distributed_search_engine_spark.index.maxscore import maxscore_topk
+    # driver-side block-max top-k (index/wand.wand_topk) over the same
+    # compressed segments for a 3-term query, so cross-term block bounds
+    # engage. Bounded by the I10 20k/5k per-term caps; the sharded
+    # executor path stays distributed_topk. Gated against the plain SQL
+    # BM25 top-k.
     from distributed_search_engine_spark.index.segments import (
         read_segments_for_terms,
     )
+    from distributed_search_engine_spark.index.wand import wand_topk
 
     seg = _segment_index(spark, sf_dir)
     terms = ["table", "window", "scan"]
@@ -426,7 +425,7 @@ def _q_bm25_maxscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("term", "idf_bm25", "blocks")
         .collect()
     ]
-    top = maxscore_topk(seg_rows, seg["avgdl"], k=10)
+    top = wand_topk(seg_rows, seg["avgdl"], k=10)
     rows = [(int(d), float(s), i + 1) for i, (d, s) in enumerate(top)]
     df = spark.createDataFrame(rows, "docnum long, score double, rank int")
     return df.join(seg["ds"].select("doc_id", "docnum"), "docnum").select(

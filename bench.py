@@ -104,7 +104,7 @@ def main() -> None:
     ranks.count()
     timings["pagerank_10iter"] = time.time() - t0
 
-    # q4: BM25 top-10 via block-max WAND over compressed segments
+    # q4: BM25 top-10 via the block-max kernel over compressed segments
     t0 = time.time()
     for q in QUERY_SET:
         terms = q.split()
@@ -250,14 +250,9 @@ def main() -> None:
             )
         timings["query_wand_60k_x10"] = time.time() - t0
 
-        # MaxScore A/B over the SAME segments + query set: the Turtle &
-        # Flood essential/non-essential kernel vs block-max WAND —
-        # identical results (differentially tested), different pruning
-        # bookkeeping; this stage keeps the comparison honest per-round
-        from distributed_search_engine_spark.index.maxscore import (
-            maxscore_topk,
-        )
-
+        # the same driver-side block-max kernel again (the MaxScore engine
+        # it once timed is folded into it); the leaf keeps its key so the
+        # per-round series continues
         t0 = time.time()
         for q in QUERY_SET:
             terms = q.split()
@@ -267,7 +262,7 @@ def main() -> None:
                 .select("idf_bm25", "blocks")
                 .collect()
             ]
-            maxscore_topk(
+            wand_topk(
                 [{"idf_bm25": r["idf_bm25"], "blocks": [b.asDict() for b in r["blocks"]]} for r in rows],
                 bavgdl, 10,
             )

@@ -1,18 +1,30 @@
-"""Block-max WAND top-k over compressed segments (north-star query path).
+"""Block-max top-k over compressed segments (north-star query path).
 
-Classic WAND (Broder et al. 2003) pivot selection with per-term exact upper
-bounds, plus the Block-Max refinement (Ding & Suel 2011): per-block max
-scores let the cursor (a) skip whole blocks without decoding when advancing
-and (b) reject a pivot whose block-level upper-bound sum cannot beat the
-current k-th score. Blocks are delta-gap+varint encoded (index/codec.py)
-and decoded lazily one block at a time.
+One numpy kernel, :func:`block_max_topk`, answers every segment top-k:
+the driver-side :func:`wand_topk` and the executor-side
+:func:`distributed_topk_batch` both call it. It scores posting blocks as
+columnar vectors ("Columnar Formatted Inverted Index", ICDE'25) rather
+than through per-document cursors, and uses the per-block max scores of
+Block-Max WAND (Ding & Suel 2011) to leave hopeless blocks encoded.
+
+Skip rule. A block's bound is its max_score plus, for each other term,
+the largest of that term's undecoded-block max_scores and decoded posting
+scores over the block's docnum span (skipped blocks count 0). A block is
+skipped when its bound is strictly below tau, the largest of: the
+caller's tau0; each term's k-th largest block max_score (one term's
+blocks hold distinct docs and a max_score is an achieved score); the
+k-th largest partial sum so far. Each certifies k docs scoring at least
+tau, so tau <= the true k-th score. A true top-k doc scores >= tau, and
+while none of its blocks is skipped each of them bounds its score, so
+none ever is: its score is exact. A doc with a skipped block scores
+below tau, so its partial sum ranks below k exact ones. Bounds and sums
+are added in term order, so a float bound never falls below the float
+score it covers and exact ties survive the strict test.
 
 Deterministic total order: (score desc, docnum asc) — SURVEY §4 item 5.
 """
 
 from __future__ import annotations
-
-import heapq
 
 import numpy as np
 
@@ -22,138 +34,142 @@ from .codec import decode_docnums, varint_decode
 INF = np.iinfo(np.int64).max
 
 
-class TermCursor:
-    """Cursor over one term's posting blocks with lazy per-block decode."""
+def _gather(stream, sel):
+    """Concatenated bytes of blocks `sel` from a (uint8 buffer, int64
+    [n, 2] byte spans) stream, with each block's offset and length."""
+    buf, spans = stream
+    start, n = spans[sel, 0], spans[sel, 1] - spans[sel, 0]
+    out = np.cumsum(n) - n
+    return buf[np.arange(n.sum()) + np.repeat(start - out, n)], out, n
 
-    __slots__ = (
-        "idf_bm25", "avgdl", "blocks", "bi", "docs", "scores", "pi",
-        "max_score", "decoded_blocks",
+
+def _range_max(val, i0, i1):
+    """max(val[i0[j]:i1[j]]) per j, 0 for an empty range."""
+    out = np.zeros(len(i0))
+    nz = np.flatnonzero(i1 > i0)
+    if len(nz):
+        idx = np.column_stack((i0[nz], i1[nz])).ravel()
+        out[nz] = np.maximum.reduceat(np.append(val, 0.0), idx)[::2]
+    return out
+
+
+def block_max_topk(
+    term, first, last, max_score, idf, docs, tfs, dls,
+    avgdl: float, k: int, lo: int = 0, hi: int = INF, tau0: float = -np.inf,
+):
+    """Exact BM25 top-k of one query's posting blocks.
+
+    Per block: term index, first and last docnum, max_score, idf_bm25;
+    docs/tfs/dls are the encoded streams as (uint8 buffer, int64 [n, 2]
+    byte spans). Only docnums in [lo, hi) count; tau0 is a known lower
+    bound on the k-th score. Rounds bound the undecoded blocks, skip the
+    hopeless ones (module docstring) and decode the highest-bound rest
+    in batches that double. Returns (docnums, scores) in (score desc,
+    docnum asc) order and the mask of decoded blocks, in input order.
+    """
+    order = np.lexsort((first, term))  # term-major: sums in term order
+    term, first, last, max_score, idf = (
+        np.asarray(a)[order] for a in (term, first, last, max_score, idf)
     )
-
-    def __init__(self, seg_row: dict, avgdl: float):
-        self.idf_bm25 = float(seg_row["idf_bm25"])
-        self.avgdl = avgdl
-        self.blocks = seg_row["blocks"]
-        self.max_score = max(b["max_score"] for b in self.blocks)
-        self.bi = 0
-        self.docs: np.ndarray | None = None
-        self.scores: np.ndarray | None = None
-        self.pi = 0
-        self.decoded_blocks = 0
-        self._load_block()
-
-    def _load_block(self) -> None:
-        b = self.blocks[self.bi]
-        self.docs = decode_docnums(bytes(b["docs"])).astype(np.int64)
-        tfs = varint_decode(bytes(b["tfs"])).astype(np.float64)
-        dls = varint_decode(bytes(b["dls"])).astype(np.float64)
-        self.scores = (
-            self.idf_bm25
-            * tfs
+    docs, tfs, dls = ((buf, np.asarray(sp)[order]) for buf, sp in (docs, tfs, dls))
+    s_lo, s_hi = np.maximum(first, lo), np.minimum(last, hi - 1)
+    # each term's k-th largest block max_score
+    by_ms = np.lexsort((-max_score, term))
+    rank = np.arange(len(term)) - np.searchsorted(term[by_ms], term[by_ms])
+    tau = max(tau0, max_score[by_ms][rank == k - 1].max(initial=-np.inf))
+    decoded = np.zeros(len(term), dtype=bool)
+    live = np.ones(len(term), dtype=bool)  # neither decoded nor skipped
+    pdoc, pscore, pblk = np.empty(0, np.int64), np.empty(0), np.empty(0, np.int64)
+    uniq, acc = pdoc, pscore
+    batch = 1
+    while live.any():
+        cand = np.flatnonzero(live)
+        bound = np.zeros(len(cand))
+        for t in np.unique(term):
+            und = np.flatnonzero(live & (term == t))
+            dec = term[pblk] == t
+            p_lo = np.concatenate((s_lo[und], pdoc[dec]))
+            p_hi = np.concatenate((s_hi[und], pdoc[dec]))
+            p_val = np.concatenate((max_score[und], pscore[dec]))
+            o = np.argsort(p_lo, kind="stable")
+            other = _range_max(
+                p_val[o],
+                np.searchsorted(p_hi[o], s_lo[cand]),
+                np.searchsorted(p_lo[o], s_hi[cand], side="right"),
+            )
+            bound += np.where(term[cand] == t, max_score[cand], other)
+        keep = bound >= tau
+        live[cand[~keep]] = False
+        cand, bound = cand[keep], bound[keep]
+        if not len(cand):
+            break
+        sel = np.sort(cand[np.argsort(-bound, kind="stable")[:batch]])
+        batch *= 2
+        live[sel], decoded[sel] = False, True
+        # one varint_decode per stream for the whole batch; the docnum
+        # gaps restart at each block's first (absolute) value
+        raw, off, n = _gather(docs, sel)
+        ends = np.concatenate(([0], np.cumsum(raw < 0x80)))
+        cnt = ends[off + n] - ends[off]
+        csum = np.concatenate(([0], np.cumsum(varint_decode(raw.tobytes()).astype(np.int64))))
+        doc = csum[1:] - np.repeat(csum[np.cumsum(cnt) - cnt], cnt)
+        tf = varint_decode(_gather(tfs, sel)[0].tobytes()).astype(np.float64)
+        dl = varint_decode(_gather(dls, sel)[0].tobytes()).astype(np.float64)
+        score = (
+            np.repeat(idf[sel], cnt)
+            * tf
             * (BM25_K1 + 1.0)
-            / (tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * dls / self.avgdl))
+            / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))
         )
-        self.pi = 0
-        self.decoded_blocks += 1
+        m = (doc >= lo) & (doc < hi)
+        blk = np.concatenate((pblk, np.repeat(sel, cnt)[m]))
+        o = np.argsort(blk, kind="stable")
+        pblk = blk[o]
+        pdoc = np.concatenate((pdoc, doc[m]))[o]
+        pscore = np.concatenate((pscore, score[m]))[o]
+        uniq, inv = np.unique(pdoc, return_inverse=True)
+        acc = np.zeros(len(uniq))
+        np.add.at(acc, inv, pscore)
+        if len(acc) >= k:
+            tau = max(tau, np.partition(acc, len(acc) - k)[len(acc) - k])
+    top = np.lexsort((uniq, -acc))[:k]
+    mask = np.empty_like(decoded)
+    mask[order] = decoded
+    return uniq[top], acc[top], mask
 
-    def cur_doc(self) -> int:
-        if self.docs is None:
-            return INF
-        return int(self.docs[self.pi])
 
-    def cur_score(self) -> float:
-        return float(self.scores[self.pi])
+def _bytes_stream(chunks):
+    n = np.fromiter(map(len, chunks), dtype=np.int64, count=len(chunks))
+    off = np.zeros(len(chunks) + 1, dtype=np.int64)
+    np.cumsum(n, out=off[1:])
+    buf = np.frombuffer(b"".join(chunks), dtype=np.uint8)
+    return buf, np.column_stack((off[:-1], off[1:]))
 
-    def cur_block_max(self) -> float:
-        return float(self.blocks[self.bi]["max_score"]) if self.docs is not None else 0.0
 
-    def advance_to(self, target: int) -> None:
-        """Move to the first posting with docnum >= target; skips whole
-        blocks via metadata without decoding them."""
-        if self.docs is None and self.bi >= len(self.blocks):
-            return
-        skipped = False
-        while self.bi < len(self.blocks) and self.blocks[self.bi]["last_docnum"] < target:
-            self.bi += 1
-            skipped = True
-        if self.bi >= len(self.blocks):
-            self.docs = None
-            return
-        if skipped or self.docs is None:
-            self._load_block()
-        # last_docnum >= target guarantees a hit in this block
-        self.pi = int(np.searchsorted(self.docs, target, side="left"))
-
-    def advance_one(self) -> None:
-        self.pi += 1
-        if self.pi >= len(self.docs):
-            self.bi += 1
-            if self.bi >= len(self.blocks):
-                self.docs = None
-            else:
-                self._load_block()
+def block_arrays(seg_rows: list[dict]):
+    """block_max_topk's per-block arguments from collected segment rows
+    (term index = row order; a block's first docnum = the previous
+    block's last_docnum + 1)."""
+    blocks = [(t, r["idf_bm25"], b) for t, r in enumerate(seg_rows) for b in r["blocks"]]
+    term = np.array([t for t, _, _ in blocks], dtype=np.int64)
+    last = np.array([b["last_docnum"] for _, _, b in blocks], dtype=np.int64)
+    first = np.zeros_like(last)
+    first[1:] = np.where(term[1:] == term[:-1], last[:-1] + 1, 0)
+    return (
+        term,
+        first,
+        last,
+        np.array([b["max_score"] for _, _, b in blocks], dtype=np.float64),
+        np.array([idf for _, idf, _ in blocks], dtype=np.float64),
+        *(_bytes_stream([b[c] for _, _, b in blocks]) for c in ("docs", "tfs", "dls")),
+    )
 
 
 def wand_topk(seg_rows: list[dict], avgdl: float, k: int) -> list[tuple[int, float]]:
-    """Top-k (docnum, bm25_score) over the given term segment rows.
-
-    Exact w.r.t. brute-force scoring with the (score desc, docnum asc)
-    order; block-max pruning only skips work, never results.
-    """
-    cursors = [TermCursor(r, avgdl) for r in seg_rows if r["blocks"]]
-    if not cursors:
-        return []
-    # min-heap of (score, -docnum): root = currently-worst kept result
-    heap: list[tuple[float, int]] = []
-
-    def threshold() -> float:
-        return heap[0][0] if len(heap) >= k else -1.0
-
-    while True:
-        live = [c for c in cursors if c.cur_doc() != INF]
-        if not live:
-            break
-        live.sort(key=lambda c: c.cur_doc())
-        # pivot: first prefix whose UB sum beats the threshold
-        # strict > is safe for exact ties: pivots are scored in strictly
-        # increasing docnum order, so a later candidate whose score exactly
-        # equals the k-th score has a LARGER docnum than every equal-score
-        # heap entry and loses the (score desc, docnum asc) tie-break
-        # anyway — admitting it would only add wasted scoring work
-        # (regression-tested by test_wand_exact_under_score_ties, which
-        # quantizes every score into exact-tie groups).
-        ub, pivot = 0.0, -1
-        for i, c in enumerate(live):
-            ub += c.max_score
-            if ub > threshold():
-                pivot = i
-                break
-        if pivot < 0:
-            break
-        pivot_doc = live[pivot].cur_doc()
-        if live[0].cur_doc() == pivot_doc:
-            # block-max shallow check before scoring
-            bub = sum(
-                c.cur_block_max() for c in live if c.cur_doc() == pivot_doc
-            ) + sum(c.max_score for c in live[:pivot] if c.cur_doc() != pivot_doc)
-            if bub > threshold() or len(heap) < k:
-                score = 0.0
-                for c in live:
-                    if c.cur_doc() == pivot_doc:
-                        score += c.cur_score()
-                item = (score, -pivot_doc)
-                if len(heap) < k:
-                    heapq.heappush(heap, item)
-                elif item > heap[0]:
-                    heapq.heapreplace(heap, item)
-            for c in live:
-                if c.cur_doc() == pivot_doc:
-                    c.advance_one()
-        else:
-            live[0].advance_to(pivot_doc)
-
-    out = sorted(heap, key=lambda t: (-t[0], -t[1]))
-    return [(-nd, s) for s, nd in out]
+    """Top-k (docnum, bm25_score) over the given term segment rows, on the
+    driver: == bruteforce_topk, in (score desc, docnum asc) order."""
+    docs, scores, _ = block_max_topk(*block_arrays(seg_rows), avgdl, k)
+    return list(zip(docs.tolist(), scores.tolist()))
 
 
 def distributed_topk(
@@ -166,8 +182,8 @@ def distributed_topk(
 ):
     """Executor-side BM25 top-k over pruned compressed segments for ONE
     query — thin wrapper over distributed_topk_batch (a constant
-    query_id); see that function for the plan shape, the block-max
-    pruning rule, and the exactness argument.
+    query_id); see that function for the plan shape and the module
+    docstring for the skip rule and its exactness argument.
 
     Returns [(docnum, score)] == bruteforce_topk/wand_topk output order
     (score desc, docnum asc).
@@ -190,62 +206,29 @@ def distributed_topk_batch(
     n_ranges: int = 8,
     max_docnum: int | None = None,
 ):
-    """Executor-side BM25 top-k for a BATCH of queries in ONE Spark job —
-    the driver never touches posting bytes (round-2 wand_topk collected
-    every block to the driver; acceptable under the 20k/5k per-term caps,
-    but this keeps the per-query data path on executors entirely), and
-    batching amortizes the per-job Python-stage floor (~0.35 s/job
-    measured on this host for a trivial 1-task mapInArrow job) across the
-    whole query set — the serving shape a query frontend uses at scale.
+    """Executor-side BM25 top-k for a BATCH of queries in ONE Spark job:
+    the driver never touches posting bytes, and batching amortizes the
+    per-job Python-stage floor across the query set.
 
     tagged_seg_df: (query_id string, term string, idf_bm25 double,
     blocks array<struct<last_docnum, max_score, docs, tfs, dls>>) — one
     row per (query, term); build it with
-    segments.read_segments_for_queries (one partition-pruned scan for the
-    union of terms + a broadcast join on the tiny query->term map).
+    segments.read_segments_for_queries.
 
     Plan shape (sizes are the batch's union of compressed lists):
-      1. first_docnum of block i = last_docnum of block i-1 + 1 (blocks
-         are consecutive chunks of a docnum-sorted list), computed
-         MAP-SIDE with an indexed transform over the blocks array — no
-         window, no extra shuffle — then explode.
-      2. assign each block to every doc-range it overlaps (sequence +
-         explode — blocks stay ENCODED; shuffle volume = compressed
-         bytes).
-      3. repartition by (query_id, range_id): each docnum's full set of
-         per-term contributions for a query lands in exactly one
-         partition (straddling blocks are masked to the range inside the
-         kernel), so per-(query, partition) vectorized BM25 accumulation
-         + a local top-k is exact.
-      4. collect of <= queries x n_ranges x k (docnum, score) rows and a
-         driver-side per-query merge (tiny, no posting bytes).
-    The only shuffle is the (query, range) repartition. Scales by raising
-    n_ranges with corpus size: per-task work is (batch posting bytes) /
-    (queries x n_ranges).
-
-    Executor-side block-max pruning (round-4; Ding & Suel 2011 adapted to
-    the sharded setting) — exact, zero extra jobs, per query:
-      threshold: for one term, distinct blocks hold distinct docs, and a
-      block's max_score is an ACHIEVED single-term score of some doc in
-      it, which lower-bounds that doc's total score. So the k-th largest
-      block max_score WITHIN a term certifies k distinct docs with total
-      score >= it => it is a valid lower bound on the query's true k-th
-      best score. Computed map-side per (query, term) row (sort of the
-      block-max array), shipped on every exploded row; each partition
-      takes the max over the rows it sees for that query (any subset max
-      is still a valid bound).
-      rejection: a block B (term t, span S = B's docnum span clipped to
-      its range) is skipped when
-        max_score(B) + sum over other terms t' of
-            max(max_score of t' blocks overlapping S, default 0)  <  tau
-      (strictly) — every doc in S then has total score < tau <= true
-      k-th, so it cannot appear in the top-k; any block containing a
-      true top-k doc has UB >= that doc's score >= k-th >= tau and is
-      never skipped; and a partially-accumulated pruned doc is covered by
-      some skipped block, so its true score (hence its partial sum) is
-      strictly below tau <= k-th and cannot displace (tests: differential
-      vs bruteforce_topk under exact score ties, and a structural
-      hopeless-block assertion).
+      1. map-side, per (query, term) row: each block's first_docnum (the
+         previous block's last_docnum + 1) and the term's k-th largest
+         block max_score (term_kth), then explode the blocks.
+      2. assign each block to every doc-range it overlaps (blocks stay
+         ENCODED; shuffle volume = compressed bytes).
+      3. repartition by (query_id, range_id): each docnum's blocks for a
+         query land in one partition, where block_max_topk runs per
+         (query, range) with the range and tau0 = the query's largest
+         term_kth; skipping is exact by the rule in the module docstring.
+      4. collect of <= queries x n_ranges x k rows and a driver-side
+         per-query merge.
+    The only shuffle is the (query, range) repartition; raise n_ranges
+    with corpus size.
 
     Returns {query_id: [(docnum, score)]} with each list in
     (score desc, docnum asc) order, == bruteforce_topk per query.
@@ -312,103 +295,36 @@ def distributed_topk_batch(
     def _score_partition(batch_iter):
         import pyarrow as pa
 
-        from .codec import decode_docnums, varint_decode
-
-        # Stream batches, grouping per query as they arrive. The pruning
-        # pass needs every (query, range) row's METADATA up front (tau is
-        # a max over the query's term_kth; the cross-term UB reads other
-        # terms' clipped spans), but it does NOT need the compressed
-        # posting blobs as Python objects: those stay as Arrow scalars
-        # (zero-copy views into the batch buffers) and are materialized
-        # per ROW only when a row survives pruning — pruned rows never
-        # leave Arrow memory.
-        byq: dict = {}
-        meta_cols = (
-            "query_id", "range_id", "term", "idf_bm25", "term_kth",
-            "first_docnum", "last_docnum", "max_score",
-        )
-        for batch in batch_iter:
-            cols = {n: batch.column(n) for n in meta_cols}
-            bdocs = batch.column("docs")
-            btfs = batch.column("tfs")
-            bdls = batch.column("dls")
-            for i in range(batch.num_rows):
-                r = {n: cols[n][i].as_py() for n in meta_cols}
-                r["_docs"] = bdocs[i]
-                r["_tfs"] = btfs[i]
-                r["_dls"] = bdls[i]
-                byq.setdefault(r["query_id"], []).append(r)
-        if not byq:
+        batches = [b for b in batch_iter if b.num_rows]
+        if not batches:
             return
-        out_q: list = []
-        out_d: list = []
-        out_s: list = []
-        for qid, qrows in byq.items():
-            tau = max(
-                (r["term_kth"] for r in qrows if r["term_kth"] is not None),
-                default=None,
-            )
-            # per-(range, term) clipped block spans, for the cross-term UB
-            spans: dict = {}
-            if tau is not None:
-                for r in qrows:
-                    lo = r["range_id"] * range_size
-                    s_lo = max(r["first_docnum"], lo)
-                    s_hi = min(r["last_docnum"], lo + range_size - 1)
-                    spans.setdefault((r["range_id"], r["term"]), []).append(
-                        (s_lo, s_hi, r["max_score"])
-                    )
-            doc_chunks, score_chunks = [], []
-            for r in qrows:
-                lo = r["range_id"] * range_size
-                hi = lo + range_size
-                if tau is not None:
-                    s_lo = max(r["first_docnum"], lo)
-                    s_hi = min(r["last_docnum"], hi - 1)
-                    ub = r["max_score"]
-                    for (rid, t), lst in spans.items():
-                        if rid != r["range_id"] or t == r["term"]:
-                            continue
-                        best = 0.0
-                        for a, z, ms in lst:
-                            if a <= s_hi and z >= s_lo and ms > best:
-                                best = ms
-                        ub += best
-                    if ub < tau:
-                        continue  # no doc in this span can reach the top-k
-                docs = decode_docnums(r["_docs"].as_py()).astype(np.int64)
-                mask = (docs >= lo) & (docs < hi)
-                if not mask.any():
-                    continue
-                tfs = varint_decode(r["_tfs"].as_py()).astype(np.float64)[mask]
-                dls = varint_decode(r["_dls"].as_py()).astype(np.float64)[mask]
-                scores = (
-                    r["idf_bm25"]
-                    * tfs
-                    * (BM25_K1 + 1.0)
-                    / (tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * dls / avgdl))
+        table = pa.Table.from_batches(batches)
+        col = {n: table.column(n).combine_chunks() for n in table.column_names}
+        qid = col["query_id"].to_numpy(zero_copy_only=False)
+        rid = col["range_id"].to_numpy()
+        tid = np.unique(col["term"].to_numpy(zero_copy_only=False), return_inverse=True)[1]
+        kth = col["term_kth"].to_numpy(zero_copy_only=False)  # null -> nan
+        meta = [col[n].to_numpy() for n in ("first_docnum", "last_docnum", "max_score", "idf_bm25")]
+        streams = [_bytes_stream(col[n].to_pylist()) for n in ("docs", "tfs", "dls")]
+        out_q, out_d, out_s = [], [], []
+        for q in np.unique(qid):
+            rows = np.flatnonzero(qid == q)
+            tau0 = np.fmax.reduce(kth[rows], initial=-np.inf)
+            for r in np.unique(rid[rows]):
+                g = rows[rid[rows] == r]
+                lo = int(r) * range_size
+                d, sc, _ = block_max_topk(
+                    tid[g], *(m[g] for m in meta), *((bf, sp[g]) for bf, sp in streams),
+                    avgdl, k, lo, lo + range_size, tau0,
                 )
-                doc_chunks.append(docs[mask])
-                score_chunks.append(scores)
-            if not doc_chunks:
-                continue
-            alldocs = np.concatenate(doc_chunks)
-            allscores = np.concatenate(score_chunks)
-            uniq, inv = np.unique(alldocs, return_inverse=True)
-            acc = np.zeros(len(uniq), dtype=np.float64)
-            np.add.at(acc, inv, allscores)
-            # local top-k, deterministic (score desc, docnum asc)
-            order = np.lexsort((uniq, -acc))[:k]
-            out_q.extend([qid] * len(order))
-            out_d.extend(uniq[order].tolist())
-            out_s.extend(acc[order].tolist())
-        if not out_q:
-            return
+                out_q += [q] * len(d)
+                out_d.append(d)
+                out_s.append(sc)
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array(out_q, type=pa.string()),
-                pa.array(out_d, type=pa.int64()),
-                pa.array(out_s, type=pa.float64()),
+                pa.array(np.concatenate(out_d), type=pa.int64()),
+                pa.array(np.concatenate(out_s), type=pa.float64()),
             ],
             names=["query_id", "docnum", "score"],
         )

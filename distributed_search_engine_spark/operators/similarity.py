@@ -698,7 +698,10 @@ def ann_ivfadc_from_store(
             qsub = qr[m * dsub : (m + 1) * dsub]
             luts[(c, m)] = [round(_fold_sq(qsub, cj), 6) for cj in book]
 
-    coded = spark.read.parquet(store_path).where(
+    # the writer's fixed schema: a zero-row store holds no parquet file
+    # to infer it from
+    schema = "id long, " + ", ".join(f"code_{m} int" for m in range(n_m)) + ", cluster int"
+    coded = spark.read.schema(schema).parquet(store_path).where(
         F.col("cluster").isin(probes) & (F.col("id") != query_id)
     )
     adc = None

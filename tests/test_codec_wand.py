@@ -1,11 +1,13 @@
-"""Codec round-trip property tests + WAND vs brute-force differential."""
+"""Codec round-trip property tests + block-max top-k vs brute-force
+differential."""
 
 import numpy as np
 import pytest
 
 from distributed_search_engine_spark.index import codec
 from distributed_search_engine_spark.index.wand import (
-    TermCursor,
+    block_arrays,
+    block_max_topk,
     bruteforce_topk,
     wand_topk,
 )
@@ -86,8 +88,9 @@ def test_wand_matches_bruteforce(seed):
 
 
 def test_wand_skips_blocks():
-    """A rare term co-occurring with a common one: WAND must not decode
-    every block of the common term."""
+    """A rare term co-occurring with a common one (k=2): once the rare
+    term's docs are scored, the common term's blocks elsewhere are
+    hopeless — the kernel must leave most of them undecoded."""
     rng = np.random.default_rng(42)
     avgdl = 120.0
     rows = _make_seg_rows(rng, n_terms=1, n_docs=200_000, avgdl=avgdl)
@@ -109,19 +112,23 @@ def test_wand_skips_blocks():
             }
         ],
     }
-    cursors_probe = TermCursor(common, avgdl)
     total_blocks = len(common["blocks"])
+    assert total_blocks > 10  # the skip scenario is meaningful
     got = wand_topk([common, rare], avgdl, 2)
     want = bruteforce_topk([common, rare], avgdl, 2)
     assert [d for d, _ in got] == [d for d, _ in want]
-    assert total_blocks > 10  # the skip scenario is meaningful
+    _, _, decoded = block_max_topk(*block_arrays([common, rare]), avgdl, 2)
+    # block_arrays lists the common term's blocks first
+    assert decoded[:total_blocks].sum() < total_blocks / 2, (
+        int(decoded[:total_blocks].sum()), total_blocks
+    )
 
 
 @pytest.mark.parametrize("seed", [10, 11, 12])
 def test_wand_exact_under_score_ties(seed):
     """Uniform tf/doc_len corpora quantize scores into a handful of exact
-    values, so pivot upper bounds routinely EQUAL the k-th score; pivot
-    admission must use >= or tie groups diverge from brute force."""
+    values, so block bounds routinely EQUAL the k-th score; only a bound
+    strictly below tau may skip, or tie groups diverge from brute force."""
     rng = np.random.default_rng(seed)
     from distributed_search_engine_spark.index.codec import (
         BLOCK_SIZE,
@@ -159,6 +166,10 @@ def test_wand_exact_under_score_ties(seed):
         got = wand_topk(rows, avgdl, k)
         want = bruteforce_topk(rows, avgdl, k)
         assert got == want, (seed, k)
+        # the tightest valid tau0, the true k-th score itself: blocks whose
+        # bound only ties it hold top-k docs and must still be decoded
+        d, sc, _ = block_max_topk(*block_arrays(rows), avgdl, k, tau0=want[-1][1])
+        assert list(zip(d.tolist(), sc.tolist())) == want, (seed, k)
 
 
 @pytest.mark.parametrize("seed", [10, 11, 12])
@@ -218,12 +229,11 @@ def test_distributed_topk_exact_under_score_ties(seed, spark):
 
 def test_distributed_topk_prunes_hopeless_blocks(spark):
     """A skewed corpus where one term's postings are high-scoring and a
-    second term's are uniformly negligible: with k=1 the metadata
-    threshold must reject the negligible term's far ranges. Verified
-    behaviorally (output exact vs brute force) AND structurally — the
-    span-UB rule computed here in the test must mark >= half the
-    negligible blocks hopeless, guarding against the prune silently
-    degenerating to a no-op."""
+    second term's are uniformly negligible: with k=1 the threshold must
+    reject the negligible term's blocks beyond the hot span. Verified
+    behaviorally (output exact vs brute force) AND on the decode mask the
+    kernel returns — at least half of those blocks stay undecoded, so the
+    prune cannot silently degenerate to a no-op."""
     from distributed_search_engine_spark.index.codec import (
         BLOCK_SIZE,
         block_boundaries,
@@ -259,20 +269,21 @@ def test_distributed_topk_prunes_hopeless_blocks(spark):
                 ],
             }
         )
-    # structural check: tau (k-th block max of "hot", k=1) rejects every
-    # "cold" block outside hot's 0-500 span
+    # the kernel as the executor calls it: over everything, and over one
+    # doc range beyond hot's span with tau0 = hot's k-th block max
     k = 1
-    tau = max(
-        sorted((b["max_score"] for b in r["blocks"]), reverse=True)[k - 1]
-        for r in rows
-        if len(r["blocks"]) >= k
-    )
     hot_last = max(b["last_docnum"] for b in rows[0]["blocks"])
+    n_hot = len(rows[0]["blocks"])
     cold = rows[1]["blocks"]
-    hopeless = [
-        b for b in cold if b["last_docnum"] > hot_last and b["max_score"] < tau
-    ]
-    assert len(hopeless) >= len(cold) // 2, (len(hopeless), len(cold))
+    beyond = np.array([b["last_docnum"] > hot_last for b in cold])
+    args = block_arrays(rows)
+    _, _, decoded = block_max_topk(*args, avgdl, k)
+    assert (~decoded[n_hot:][beyond]).sum() >= beyond.sum() / 2, decoded
+    tau0 = max(b["max_score"] for b in rows[0]["blocks"])
+    far = np.flatnonzero(args[2] > hot_last)  # blocks ending past hot's span
+    sub = [a[far] for a in args[:5]] + [(buf, sp[far]) for buf, sp in args[5:]]
+    _, _, decoded = block_max_topk(*sub, avgdl, k, hot_last + 1, 4000, tau0)
+    assert (~decoded).sum() >= len(far) / 2, decoded
 
     seg_schema = (
         "term string, idf_bm25 double, "

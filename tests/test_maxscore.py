@@ -1,15 +1,16 @@
-"""MaxScore kernel (index/maxscore.py): exactness vs brute force (incl.
-quantized score ties), non-essential pruning actually skips decode work,
-and degenerate inputs."""
+"""Inputs first written for the MaxScore engine, now run against the one
+block-max kernel (index/wand.py): exactness vs brute force (incl.
+quantized score ties across four terms sharing an idf), skipping of a
+common term's blocks next to a rare one, and degenerate inputs."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from distributed_search_engine_spark.index.maxscore import maxscore_topk
 from distributed_search_engine_spark.index.wand import (
-    TermCursor,
+    block_arrays,
+    block_max_topk,
     bruteforce_topk,
     wand_topk,
 )
@@ -25,7 +26,7 @@ def test_maxscore_matches_bruteforce(seed):
         rng, n_terms=int(rng.integers(1, 6)), n_docs=5000, avgdl=avgdl
     )
     for k in (1, 10, 100):
-        got = maxscore_topk(rows, avgdl, k)
+        got = wand_topk(rows, avgdl, k)
         want = bruteforce_topk(rows, avgdl, k)
         assert [d for d, _ in got] == [d for d, _ in want], (seed, k)
         for (_, s1), (_, s2) in zip(got, want):
@@ -35,8 +36,8 @@ def test_maxscore_matches_bruteforce(seed):
 @pytest.mark.parametrize("seed", [10, 11, 12])
 def test_maxscore_exact_under_score_ties(seed):
     """Uniform tf/doc_len quantizes scores into exact-tie groups; the
-    strict-> admission must reproduce the (score desc, docnum asc)
-    brute-force order bit-for-bit — same invariant wand_topk carries."""
+    strict skip test must reproduce the (score desc, docnum asc)
+    brute-force order bit-for-bit."""
     from distributed_search_engine_spark.index.codec import (
         BLOCK_SIZE,
         block_boundaries,
@@ -71,28 +72,14 @@ def test_maxscore_exact_under_score_ties(seed):
             )
         rows.append({"term": f"t{t}", "idf_bm25": idf, "blocks": blocks})
     for k in (1, 5, 37):
-        got = maxscore_topk(rows, avgdl, k)
+        got = wand_topk(rows, avgdl, k)
         want = bruteforce_topk(rows, avgdl, k)
         assert got == [(d, pytest.approx(s, abs=1e-9)) for d, s in want], k
 
 
-def test_maxscore_agrees_with_wand_everywhere():
-    rng = np.random.default_rng(99)
-    avgdl = 120.0
-    for _ in range(10):
-        rows = _make_seg_rows(
-            rng, n_terms=int(rng.integers(1, 5)), n_docs=2000, avgdl=avgdl
-        )
-        k = int(rng.integers(1, 50))
-        assert [d for d, _ in maxscore_topk(rows, avgdl, k)] == [
-            d for d, _ in wand_topk(rows, avgdl, k)
-        ]
-
-
 def test_maxscore_prunes_common_term_blocks():
-    """A rare high-impact term + a long common term: once the heap fills
-    from the rare term's docs, the common term goes non-essential and is
-    only PROBED via advance_to — most of its blocks must stay undecoded."""
+    """A rare high-impact term + a long common term (k=2): most of the
+    common term's blocks must stay undecoded."""
     from distributed_search_engine_spark.index.codec import (
         encode_docnums,
         varint_encode,
@@ -118,36 +105,21 @@ def test_maxscore_prunes_common_term_blocks():
             }
         ],
     }
-    import distributed_search_engine_spark.index.maxscore as MS
-
-    made: list[TermCursor] = []
-
-    class TrackingCursor(TermCursor):
-        def __init__(self, seg_row, avgdl_):
-            super().__init__(seg_row, avgdl_)
-            made.append(self)
-
-    orig = MS.TermCursor
-    MS.TermCursor = TrackingCursor
-    try:
-        got = maxscore_topk([common, rare], avgdl, 2)
-    finally:
-        MS.TermCursor = orig
+    got = wand_topk([common, rare], avgdl, 2)
     want = bruteforce_topk([common, rare], avgdl, 2)
     assert [d for d, _ in got] == [d for d, _ in want]
-    common_cursor = max(made, key=lambda c: len(c.blocks))
-    assert len(common_cursor.blocks) == total_blocks
-    # rare term fills the heap; common term drops non-essential and is
-    # probed with block-skipping advance_to — most blocks never decode
-    assert common_cursor.decoded_blocks < total_blocks / 2, (
-        common_cursor.decoded_blocks,
+    # the rare term's two docs fill the top-2; the common term's blocks
+    # away from them are bounded by their own max_score alone and skipped
+    _, _, decoded = block_max_topk(*block_arrays([common, rare]), avgdl, 2)
+    assert decoded[:total_blocks].sum() < total_blocks / 2, (
+        int(decoded[:total_blocks].sum()),
         total_blocks,
     )
 
 
 def test_maxscore_empty_and_single():
-    assert maxscore_topk([], 100.0, 10) == []
+    assert wand_topk([], 100.0, 10) == []
     assert (
-        maxscore_topk([{"term": "t", "idf_bm25": 1.0, "blocks": []}], 100.0, 5)
+        wand_topk([{"term": "t", "idf_bm25": 1.0, "blocks": []}], 100.0, 5)
         == []
     )

@@ -382,6 +382,11 @@ def test_ivfadc_store_partition_pruned_probe(spark, ivfadc_fixture, tmp_path):
     scan = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
     assert scan and any("cluster" in ln for ln in scan)
 
+    # a zero-row corpus round-trips to an empty answer
+    empty = str(tmp_path / "ivfadc_empty")
+    S.persist_coded_corpus(emb.limit(0), coarse, books, empty)
+    assert S.ann_ivfadc_from_store(spark, empty, coarse, books, qv, k=5).collect() == []
+
 
 # ---------------------------------------------------------------------------
 # personalized PageRank (Haveliwala topic-sensitive teleport)
