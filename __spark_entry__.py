@@ -154,11 +154,12 @@ REFERENCE_BATCH_QUERIES = [["data"], ["data", "stream"]]
 
 
 def _q_reference_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the WHOLE reference chain Q1-Q12 for a query set in ONE job
-    # (expansion union broadcast, per-query metadata broadcast, every
-    # groupBy keyed by query) — per-query hash-equal to search() and ~the
-    # cost of one query's chain for the whole set; stem-fixpoint terms so
-    # the unstemmed oracle mirrors the expansion exactly
+    # the WHOLE reference chain Q1-Q12 for a query set through search()'s
+    # one scoring statement keyed by query (inlined per-query map
+    # literals, one scoring shuffle) — per-query hash-equal to search();
+    # on a cached index a batch of five runs 3 Spark jobs, as one
+    # search() does; stem-fixpoint terms so the unstemmed oracle mirrors
+    # the expansion exactly
     from distributed_search_engine_spark.query.engine import (
         search_reference_batch,
     )
@@ -350,9 +351,10 @@ BATCH_QUERIES = [["data", "stream"], ["spark", "join"], ["hash", "sort"], ["wind
 
 
 def _q_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # batch multi-query BM25: the whole query set in ONE job (postings
-    # joined once against all queries' expansions); stem-fixpoint terms so
-    # the unstemmed oracle mirrors the expansion exactly
+    # batch multi-query BM25: search(mode="bm25")'s scorer keyed by query
+    # (postings scanned once for all queries' expansions; on a cached
+    # index 4 Spark jobs for any set size); stem-fixpoint terms so the
+    # unstemmed oracle mirrors the expansion exactly
     from distributed_search_engine_spark.query.engine import search_bm25_batch
 
     sidx = _search_index(spark, sf_dir, with_stems=False)

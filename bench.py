@@ -156,9 +156,9 @@ def main() -> None:
         search(spark, sidx, q, k=20, mode="reference").collect()
     timings["query_reference_x5"] = time.time() - t0
 
-    # q5b: the SAME 5 reference-chain queries as ONE batch job — the
-    # serving shape for reference mode (expansion union broadcast, every
-    # stage keyed by query); compare against query_reference_x5's loop
+    # q5b: the SAME 5 reference-chain queries as one batch — search()'s
+    # scoring statement keyed by query, 3 Spark jobs for the whole set
+    # (one search() also runs 3); compare against query_reference_x5's loop
     from distributed_search_engine_spark.query.engine import (
         search_reference_batch,
     )
@@ -173,7 +173,8 @@ def main() -> None:
         search(spark, sidx, q, k=20, mode="bm25").collect()
     timings["query_bm25_df_x5"] = time.time() - t0
 
-    # q6b: the same 10 queries as ONE batch job (multi-query throughput)
+    # q6b: the same 10 queries as one batch (multi-query throughput):
+    # search(mode="bm25")'s scorer keyed by query, 4 Spark jobs for the set
     from distributed_search_engine_spark.query.engine import search_bm25_batch
 
     t0 = time.time()

@@ -149,8 +149,6 @@ import re as _re
 _P_HTML = _re.compile(RE_HTML_TAGS)
 _P_NON_ALNUM = _re.compile(RE_NON_ALNUM)
 _P_WS = _re.compile(RE_WS)
-_P_WORD = _re.compile(RE_WORD)
-_P_NUM24 = _re.compile(RE_NUM24)
 
 
 def tokenize_py(content: str) -> list[str]:
@@ -158,57 +156,6 @@ def tokenize_py(content: str) -> list[str]:
     if not cleaned:
         return []
     return [t for t in _P_WS.split(cleaned) if t]
-
-
-def is_worth_py(tok: str) -> bool:
-    return (
-        MIN_TOKEN_LEN <= len(tok) <= MAX_TOKEN_LEN
-        and (_P_WORD.match(tok) is not None or _P_NUM24.match(tok) is not None)
-    )
-
-
-def positioned_tokens_py(content: str) -> list[tuple[str, int]]:
-    """(token, 1-based stream position) for worthy tokens only (I7)."""
-    return [
-        (t, i + 1)
-        for i, t in enumerate(tokenize_py(content))
-        if is_worth_py(t)
-    ]
-
-
-_P_TITLE_TAG = _re.compile(RE_TITLE_TAG)
-
-
-def title_py(content: str) -> str:
-    # same literal prefilter as title_col (the regex needs "<title" verbatim,
-    # case-insensitively, so the guard cannot change the result)
-    m = _P_TITLE_TAG.search(content) if "<title" in content.lower() else None
-    if m and m.group(1) != "":
-        chosen = _P_HTML.sub(" ", m.group(1))
-    else:
-        chosen = content.split("\n", 1)[0]
-    return _P_WS.sub(" ", chosen).strip()[:TITLE_MAX_CHARS]
-
-
-_P_SCRIPT_TAG = _re.compile(RE_SCRIPT_TAG)
-_P_STYLE_TAG = _re.compile(RE_STYLE_TAG)
-_P_COMMENT = _re.compile(RE_HTML_COMMENT)
-_P_META = _re.compile(RE_META_TAG)
-_P_SCRIPT_CONTENT = _re.compile(RE_SCRIPT_CONTENT)
-_P_STYLE_CONTENT = _re.compile(RE_STYLE_CONTENT)
-
-
-def weighted_stream_py(content: str) -> list[tuple[str, float]]:
-    """Python twin of weighted_stream_col — the direct port of
-    tokenizeWithWeights (jobs/Indexer.java:1301-1371) for differentials."""
-    visible = content
-    for pat in (_P_SCRIPT_TAG, _P_STYLE_TAG, _P_COMMENT, _P_META):
-        visible = pat.sub(" ", visible)
-    out = [(t, VISIBLE_WEIGHT) for t in tokenize_py(visible)]
-    for pat in (_P_SCRIPT_CONTENT, _P_STYLE_CONTENT):
-        for body in pat.findall(content):
-            out += [(t, METADATA_WEIGHT) for t in tokenize_py(body) if len(t) >= 2]
-    return out
 
 
 # ---------------------------------------------------------------------------

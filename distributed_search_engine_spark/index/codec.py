@@ -109,19 +109,6 @@ def decode_docnums(data: bytes) -> np.ndarray:
     return np.cumsum(gaps, dtype=np.uint64)
 
 
-def encode_positions(positions_lists: list[list[int]]) -> bytes:
-    """Concatenated per-posting position lists, each as [len, gap...]."""
-    if not positions_lists:
-        return b""
-    lens = np.fromiter((len(p) for p in positions_lists), dtype=np.int64)
-    flat = (
-        np.concatenate([np.asarray(p, dtype=np.uint64) for p in positions_lists])
-        if lens.sum()
-        else np.empty(0, dtype=np.uint64)
-    )
-    return encode_positions_flat(flat, lens)
-
-
 def positions_stream(flat: np.ndarray, lens: np.ndarray) -> np.ndarray:
     """The pre-varint value stream for per-posting position lists:
     [len, first, gap...] per posting, built with one np.diff + boundary
@@ -137,12 +124,6 @@ def positions_stream(flat: np.ndarray, lens: np.ndarray) -> np.ndarray:
         nz = starts[lens > 0]
         g[nz] = flat[nz]
     return np.insert(g, starts, lens.astype(np.uint64))
-
-
-def encode_positions_flat(flat: np.ndarray, lens: np.ndarray) -> bytes:
-    """Vectorized form: flat = all positions concatenated, lens = positions
-    per posting."""
-    return varint_encode(positions_stream(flat, lens))
 
 
 def decode_positions(data: bytes, n_postings: int) -> list[np.ndarray]:

@@ -32,7 +32,6 @@ from .codec import (
     BLOCK_SIZE,
     block_boundaries,
     encode_docnums,
-    encode_positions_flat,
     varint_encode,
 )
 

@@ -9,8 +9,6 @@ DuckDB oracle, so the layout key itself is hash-gated.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
 
 def zvalue(a, b, bits: int = 16):
     """Morton/Z-order interleave of two non-negative ints (a's bits at
@@ -30,12 +28,3 @@ def zvalue(a, b, bits: int = 16):
         )
     return acc
 
-
-def zorder_layout(
-    df: DataFrame, col_a: str, col_b: str, bits: int = 16
-) -> DataFrame:
-    """df + a `zvalue` column; write with .sortWithinPartitions or
-    repartitionByRange on it for the clustered layout."""
-    from pyspark.sql import functions as F
-
-    return df.withColumn("zvalue", zvalue(F.col(col_a), F.col(col_b), bits))

@@ -11,16 +11,18 @@ Two scorer modes (SURVEY §7.1):
   - "bm25": BM25 (k1=1.2, b=0.75, Robertson idf) blended with PageRank as
     score*(1+pr) — the north-star benchmark scorer.
 
-Spark-first: a reference-mode query is one Spark SQL plan with one shuffle.
-Its expansion and matched-boost tables (a few dozen strings) are inlined
-map literals, so no driver-built relation, and no broadcast job for one,
-enters the plan. The postings scan is filtered to the expanded terms, so
-only matching index partitions are read when postings are stored
-term-hash-partitioned (index/segments.py provides the pruned reader). One
-groupBy(doc_id) does the per-term dedup, the position merge and the
-matched-boost count; everything after it touches only candidate docs — a
-small DataFrame. BM25 mode joins the postings against a broadcast
-expansion table (_candidates).
+Spark-first: one query is a batch of one. Each mode has one scorer keyed
+by (query, doc_id) that serves both ``search`` and its batch form
+(``search_reference_batch``, ``search_bm25_batch``). The expansion (a few
+dozen strings per query) is an inlined map literal from each term to its
+(query, original-term slot, priority) entries, so no driver-built
+relation, and no job for one, enters the plan. The postings scan is
+filtered to the expanded terms, so only matching index partitions are read
+when postings are stored term-hash-partitioned (index/segments.py provides
+the pruned reader). One groupBy does the per-term dedup, the position
+merge and the matched-boost count; everything after it touches only
+candidate docs. With one query the key is a constant and that groupBy is
+the plan's one shuffle, keyed by doc_id.
 
 Deterministic tie-break: (score desc, doc_id asc); the reference leaves ties
 unspecified (SearchEngine.java:616, HashMap order) — SURVEY §4 item 5.
@@ -198,21 +200,6 @@ def _related_words(index: SearchIndex, stems: set[str]) -> dict[str, list[str]]:
     return out
 
 
-def _candidates(
-    spark: SparkSession, index: SearchIndex, expansion: list[tuple[str, str, int]]
-) -> DataFrame:
-    """Postings x expansion join: one row per (expanded term, doc) hit."""
-    exp_df = spark.createDataFrame(expansion, "term string, orig string, priority int")
-    base = index.lookup_postings([t for t, _, _ in expansion])
-    out = base.join(F.broadcast(exp_df), "term")
-    if "idf" not in base.columns:
-        out = out.join(
-            F.broadcast(index.term_stats.select("term", "idf", "idf_bm25", "is_stop")),
-            "term",
-        )
-    return out
-
-
 def title_boost_py(title: str, search_terms: list[str]) -> float:
     """Q11 (SearchEngine.java:679-799) — exact port of getTitleBoost."""
     if not title or not search_terms:
@@ -284,7 +271,7 @@ _REGISTRY_LOCK = threading.Lock()
 
 def local_frame(spark: SparkSession, schema: str, rows=()) -> DataFrame:
     """Frame of a flat DDL schema ("name type, ...") holding ``rows``
-    (tuples of str / int values), planned as a local relation:
+    (tuples of str / int / float values), planned as a local relation:
     collecting it runs no Spark job, where ``createDataFrame(rows, schema)``
     parallelizes an RDD and costs one."""
     cols = [c.split() for c in schema.split(",")]
@@ -295,7 +282,7 @@ def local_frame(spark: SparkSession, schema: str, rows=()) -> DataFrame:
         f"CAST(col{i} AS {typ}) AS `{name}`" for i, (name, typ) in enumerate(cols, 1)
     )
     values = ", ".join(
-        "(" + ", ".join(_sql_str(v) if isinstance(v, str) else str(int(v)) for v in r) + ")"
+        "(" + ", ".join(map(_sql_value, r)) + ")"
         for r in rows
     )
     return spark.sql(f"SELECT {select} FROM VALUES {values}")
@@ -310,6 +297,12 @@ def _sql_double(x: float) -> str:
     """Exact double literal: Spark SQL reads a bare ``1.5`` as DECIMAL, and
     repr() round-trips every finite double."""
     return f"{float(x)!r}D"
+
+
+def _sql_value(v: str | int | float) -> str:
+    if isinstance(v, str):
+        return _sql_str(v)
+    return _sql_double(v) if isinstance(v, float) else str(int(v))
 
 
 def _sql_map(entries: list[tuple[str, str]]) -> str:
@@ -384,66 +377,109 @@ def search(
 
     ``all_matched_boost=False`` reproduces the README-era formula (golden
     scores 1.8/1.2 instead of 7.2/4.8 — SURVEY §5 discrepancy note).
-    """
-    search_terms = tokenize_query(query)
-    # Q2: single-term stop-word short-circuit (SearchEngine.java:117-127)
-    if not search_terms or (len(search_terms) == 1 and search_terms[0] in STOP_WORDS):
-        return local_frame(spark, REFERENCE_SCHEMA)
 
+    One query is a batch of one: the scorers are the ones
+    ``search_reference_batch`` and ``search_bm25_batch`` use, with the
+    query key a constant, so the plan's one shuffle is keyed by doc_id.
+    """
+    parsed = _parse_queries(index, [query])
+    if mode == "bm25":
+        out = _blend(
+            spark, index, _bm25_scores(spark, index, parsed, batch=False),
+            "tfidf * (1.0D + pagerank)", k=k,
+        ) if parsed else None
+    else:
+        out = _reference_frame(
+            spark, index, parsed, all_matched_boost, use_title_boost, k=k
+        )
+    return local_frame(spark, REFERENCE_SCHEMA) if out is None else out
+
+
+def _parse_queries(
+    index: SearchIndex, queries: list[str]
+) -> list[tuple[str, list[str], list[tuple[str, str, int]]]]:
+    """Q1-Q3 for a query set: (query, search terms, expansion) per
+    distinct query. A query that tokenizes to nothing or to a lone stop
+    word is dropped (Q2 short-circuit, SearchEngine.java:117-127); one
+    related-words lookup serves the whole set."""
+    parsed = []
+    for q in dict.fromkeys(queries):
+        terms = tokenize_query(q)
+        if terms and not (len(terms) == 1 and terms[0] in STOP_WORDS):
+            parsed.append((q, terms))
     stems = {
         porter_stem(t)
-        for t in search_terms
+        for _, terms in parsed
+        for t in terms
         if t not in STOP_WORDS and porter_stem(t) != t
     }
-    expansion = expand_terms(search_terms, _related_words(index, stems))
-
-    if mode == "bm25":
-        cand = _candidates(spark, index, expansion)
-        return _score_bm25(spark, index, cand, search_terms, k)
-    return _search_reference(
-        spark, index, search_terms, expansion, k, all_matched_boost, use_title_boost
-    )
+    related = _related_words(index, stems)
+    return [(q, terms, expand_terms(terms, related)) for q, terms in parsed]
 
 
-def _search_reference(
+def _per_query(values: dict[str, str], batch: bool) -> str:
+    """SQL for a per-query value: the one query's literal, or the row's
+    ``query`` key looked up in a map literal (NULL for an absent query)."""
+    if not batch:
+        (value,) = values.values()
+        return value
+    return f"element_at({_sql_map(list(values.items()))}, query)"
+
+
+def _reference_frame(
     spark: SparkSession,
     index: SearchIndex,
-    search_terms: list[str],
-    expansion: list[tuple[str, str, int]],
-    k: int | None,
+    parsed: list[tuple[str, list[str], list[tuple[str, str, int]]]],
     all_matched_boost: bool,
     use_title_boost: bool,
-) -> DataFrame:
-    """Reference mode (Q5-Q12) as one Spark SQL plan with one shuffle.
+    batch: bool = False,
+    k: int | None = None,
+) -> DataFrame | None:
+    """Reference mode (Q5-Q12) for parsed queries, keyed by query:
+    ([query,] doc_id, score, tfidf, pagerank, title), or None when no query
+    can score. ``k`` is ``search``'s top-k (see ``_blend``).
 
-    The postings of the expanded and matched-boost terms are scanned once
-    and grouped by doc_id. Per original term, filtered aggregates take the
-    first VALID expanded posting in expansion order (Q5) and merge the
-    positions of all its expanded postings (Q6); the matched-boost count
-    (Q10) is the number of distinct originals whose raw or stem posting
-    hit the doc. The expansion and boost tables are inlined map literals,
-    so no driver-built relation, and no broadcast job for one, enters the
-    plan. The plan is written as two statements, the scoring core and the
-    blend (ranks, titles, title boost, top-k): analysis iterates to a
-    fixed point over the whole tree, and the ranks and doc_stats lineages
-    are far deeper than the postings', so one statement took ~1.5x longer
-    to plan."""
-    n_terms = len(search_terms)
-    multi = n_terms > 1
-    origs = list(dict.fromkeys(search_terms))
-    boost = matched_boost_pairs(search_terms) if multi and all_matched_boost else []
-    exp_terms = [t for t, _, _ in expansion]
-    lookup = list(dict.fromkeys(exp_terms + [t for t, _ in boost]))
-
+    The postings of every query's expanded and matched-boost terms are
+    scanned once. An inlined map literal sends each term to its
+    (query, original-term slot, priority[, idf, is_stop]) entries, which
+    are exploded and grouped by (query, doc_id). Per slot, filtered
+    aggregates take the first VALID expanded posting in expansion order
+    (Q5) and merge the positions of all its expanded postings (Q6); the
+    matched-boost count (Q10) is the number of distinct slots whose raw or
+    stem posting hit the doc. The AND filter, phrase pairs, boost sizes
+    and title-boost terms are per-query map literals; with one query
+    (``batch=False``) the key is a constant, every lookup folds to a
+    literal and the one shuffle is keyed by doc_id. The plan is written
+    as two statements, the scoring core and the blend (``_blend``):
+    analysis iterates to a fixed point over the whole tree, and the ranks
+    and doc_stats lineages are far deeper than the postings', so one
+    statement took ~1.5x longer to plan."""
     known = index._term_stats
+    queries = []
+    for text, terms, expansion in parsed:
+        origs = list(dict.fromkeys(terms))
+        if known is not None:
+            # docs enter only through a valid (non-stop) contribution, and
+            # the AND filter needs postings for every original term
+            scorable = any(t in known and not known[t][1] for t, _, _ in expansion)
+            covered = {o for t, o, _ in expansion if t in known}
+            if not scorable or (len(terms) > 1 and len(covered) < len(origs)):
+                continue
+        boost = matched_boost_pairs(terms) if len(terms) > 1 and all_matched_boost else []
+        queries.append((text, terms, expansion, origs, boost))
+    if not queries:
+        return None
+
+    lookup = list(dict.fromkeys(
+        t for _, _, expansion, _, boost in queries
+        for t in [e[0] for e in expansion] + [b[0] for b in boost]
+    ))
     if known is not None:
         lookup = [t for t in lookup if t in known]
-        # docs enter only through a valid (non-stop) contribution, and the
-        # AND filter needs postings for every original term
-        scorable = any(t in known and not known[t][1] for t in exp_terms)
-        covered = {o for t, o, _ in expansion if t in known}
-        if not scorable or (multi and len(covered) < len(origs)):
-            return local_frame(spark, REFERENCE_SCHEMA)
+    n_slots = max(len(origs) for _, _, _, origs, _ in queries)
+    multi = [(text, terms, origs) for text, terms, _, origs, _ in queries if len(terms) > 1]
+    # query -> number of search terms, for the queries Q10 boosts
+    boosted = {text: str(len(terms)) for text, terms, _, _, boost in queries if boost}
 
     # the plain postings frame is filtered inside the statement: a where()
     # here would be one more eager analysis of its whole lineage
@@ -460,19 +496,32 @@ def _search_reference(
     else:
         idf, is_stop = "s.idf", "s.is_stop"
 
-    def exp_value(term: str, orig: str, priority: int) -> str:
-        fields = f"'o', {_sql_str(orig)}, 'p', {priority}"
-        if inline_stats:
-            i, s = known[term]
-            fields += f", 'i', {_sql_double(i)}, 's', {str(bool(s)).lower()}"
-        return f"named_struct({fields})"
-
     wanted = set(lookup)
-    exp_map = _sql_map([(t, exp_value(t, o, p)) for t, o, p in expansion if t in wanted])
+    entries: dict[str, list[str]] = {}
+    for text, _, expansion, origs, boost in queries:
+        slot = {o: i for i, o in enumerate(origs)}
+        exp = {t: (slot[o], p) for t, o, p in expansion}
+        hits: dict[str, list[int]] = {}
+        for t, o in boost:
+            hits.setdefault(t, []).append(slot[o])
+        for t in dict.fromkeys([*exp, *hits]):
+            if t not in wanted:
+                continue
+            o, p = exp.get(t, ("CAST(NULL AS INT)",) * 2)
+            fields = (f"'q', {_sql_str(text)}, " if batch else "") + f"'o', {o}, 'p', {p}"
+            if boosted:
+                b = ", ".join(map(str, hits.get(t, [])))
+                fields += f", 'b', {f'array({b})' if b else 'CAST(NULL AS ARRAY<INT>)'}"
+            if inline_stats:
+                i, s = known[t]
+                fields += f", 'i', {_sql_double(i)}, 's', {str(bool(s)).lower()}"
+            entries.setdefault(t, []).append(f"named_struct({fields})")
+    exp_map = _sql_map([(t, f"array({', '.join(e)})") for t, e in entries.items()])
+
     valid = f"NOT {is_stop} AND p.normalized_tf > 0"
     aggs = []
-    for i, o in enumerate(origs):
-        mine = f"FILTER (WHERE p.x.o = {_sql_str(o)})"
+    for i in range(n_slots):
+        mine = f"FILTER (WHERE p.x.o = {i})"
         aggs.append(
             f"(min(IF({valid}, named_struct('p', p.x.p, 't', p.term, "
             f"'c', p.normalized_tf * {idf}), NULL)) {mine}).c AS c{i}"
@@ -482,50 +531,61 @@ def _search_reference(
                 "array_sort(array_distinct(flatten("
                 f"collect_list(p.positions) {mine}))) AS pos{i}"
             )
-    if boost:
-        by_term: dict[str, list[str]] = {}
-        for t, o in boost:
-            by_term.setdefault(t, []).append(o)
-        boost_map = _sql_map(
-            [(t, f"array({', '.join(map(_sql_str, os_))})") for t, os_ in by_term.items()]
-        )
-        aggs.append(
-            "size(array_distinct(flatten(collect_list("
-            f"element_at({boost_map}, p.term))))) AS matched"
-        )
+    if boosted:
+        aggs.append("size(array_distinct(flatten(collect_list(p.x.b)))) AS matched")
 
-    cs = [f"c{i}" for i in range(len(origs))]
+    cs = [f"c{i}" for i in range(n_slots)]
     # a doc enters tfidfSums only through a valid contribution; missing
     # terms add nothing, as in Spark's sum over per-term rows
     where = [f"coalesce({', '.join(cs)}) IS NOT NULL"]
-    tfidf = " + ".join(f"coalesce({c}, 0D)" for c in cs) if multi else cs[0]
+    tfidf = " + ".join(f"coalesce({c}, 0D)" for c in cs) if n_slots > 1 else cs[0]
     if multi:
-        # Q7 AND filter: every original term has positions in the doc
-        where += [f"size(pos{i}) > 0" for i in range(len(origs))]
+        # Q7 AND filter: every original term of a multi-term query has
+        # positions in the doc (slots past a query's own are empty)
+        need = {
+            text: str(len(origs) if len(terms) > 1 else 0)
+            for text, terms, _, origs, _ in queries
+        }
+        have = " + ".join(f"IF(size(pos{i}) > 0, 1, 0)" for i in range(n_slots))
+        where.append(f"{have} >= {_per_query(need, batch)}")
         # Q8 phrase x1.5: every adjacent pair adjacent somewhere in the doc
-        pos = {o: f"pos{i}" for i, o in enumerate(origs)}
-        phrase = " AND ".join(
-            f"arrays_overlap(transform({pos[w1]}, q -> q + 1), {pos[w2]})"
-            for w1, w2 in zip(search_terms, search_terms[1:])
+        pairs = {}
+        for text, terms, origs in multi:
+            slot = {o: i + 1 for i, o in enumerate(origs)}
+            pairs[text] = "array(" + ", ".join(
+                f"named_struct('a', {slot[w1]}, 'b', {slot[w2]})"
+                for w1, w2 in zip(terms, terms[1:])
+            ) + ")"
+        pos = f"array({', '.join(f'pos{i}' for i in range(n_slots))})"
+        phrase = (
+            f"forall({_per_query(pairs, batch)}, r -> arrays_overlap("
+            f"transform(element_at({pos}, r.a), v -> v + 1), element_at({pos}, r.b)))"
         )
-        tfidf = f"IF({phrase}, ({tfidf}) * 1.5D, {tfidf})"
+        tfidf = f"IF(coalesce({phrase}, false), ({tfidf}) * 1.5D, {tfidf})"
 
     # Q9 PageRank blend
-    pagerank = "coalesce(r.rank, 0D)" if index.ranks is not None else "0D"
-    score = f"g.tfidf * (1.0D + {pagerank})"
+    score = "tfidf * (1.0D + pagerank)"
     # Q10 matched-terms boost (raw or stem postings only, not related words)
-    if boost:
-        ratio = f"CAST(g.matched AS DOUBLE) / {_sql_double(n_terms)}"
-        score = (
-            f"CASE WHEN g.matched = {n_terms} THEN {score} * 4.0D "
-            f"WHEN g.matched > 0 THEN {score} * (0.3D + 0.7D * ({ratio})) "
+    if boosted:
+        n = _per_query(boosted, batch)
+        ratio = f"CAST(matched AS DOUBLE) / CAST({n} AS DOUBLE)"
+        tiers = (
+            f"CASE WHEN matched = {n} THEN {score} * 4.0D "
+            f"WHEN matched > 0 THEN {score} * (0.3D + 0.7D * ({ratio})) "
             f"ELSE {score} * 0.1D END"
         )
+        score = tiers if len(boosted) == len(queries) else f"IF({n} IS NULL, {score}, {tiers})"
+    # Q11 title boost
+    title_terms = _per_query(
+        {text: f"array({', '.join(map(_sql_str, terms))})" for text, terms, *_ in queries},
+        batch,
+    ) if use_title_boost else None
 
+    key = "p.x.q AS query, " if batch else ""
     with contextlib.ExitStack() as views:
         if plain:
             p = _index_view(postings)
-            term_filter = f"WHERE p.term IN ({', '.join(map(_sql_str, lookup))})"
+            term_filter = f" WHERE term IN ({', '.join(map(_sql_str, lookup))})"
         else:
             p, term_filter = views.enter_context(_query_view(spark, postings)), ""
         stats_join = (
@@ -533,37 +593,130 @@ def _search_reference(
             if not (stats_on_rows or inline_stats) else ""
         )
         core = spark.sql(f"""
-SELECT doc_id, {tfidf} AS tfidf{", matched" if boost else ""}
+SELECT {"query, " if batch else ""}doc_id, {tfidf} AS tfidf{", matched" if boosted else ""}
 FROM (
-  SELECT p.doc_id, {", ".join(aggs)}
-  FROM (SELECT *, element_at({exp_map}, term) AS x FROM {p}) p {stats_join}
-  {term_filter}
-  GROUP BY p.doc_id
+  SELECT {key}p.doc_id, {", ".join(aggs)}
+  FROM (
+    SELECT *, explode(element_at({exp_map}, term)) AS x FROM {p}{term_filter}
+  ) p {stats_join}
+  GROUP BY {"p.x.q, " if batch else ""}p.doc_id
 )
 WHERE {" AND ".join(where)}""")
+    return _blend(spark, index, core, score, title_terms, k)
 
-        g = views.enter_context(_query_view(spark, core))
-        ranks_join = (
-            f"LEFT JOIN {_index_view(index.ranks)} r ON r.doc_id = g.doc_id"
-            if index.ranks is not None else ""
-        )
+
+def _blend(
+    spark: SparkSession,
+    index: SearchIndex,
+    scores: DataFrame,
+    score: str,
+    title_terms: str | None = None,
+    k: int | None = None,
+) -> DataFrame:
+    """Q9/Q11 over a scored frame ([query,] doc_id, tfidf[, matched]):
+    ([query,] doc_id, score, tfidf, pagerank, title). Titles and ranks
+    arrive through ONE broadcast, doc_stats UNION ALL ranks, and are
+    folded back to one row per scored doc by a group on its key that
+    needs no shuffle (the scored frame is already partitioned by it).
+    ``score`` is SQL over tfidf, pagerank, matched and query;
+    ``title_terms``, when given, is the SQL array of query terms for the
+    Q11 title boost. With ``k``, the frame is the Q12 deterministic top-k
+    of one query, (score desc, doc_id asc); without, it has no sort node."""
+    keys = ", ".join(f"g.{c}" for c in scores.columns if c in ("query", "doc_id"))
+    rest = "".join(
+        f"any_value(g.{c}) AS {c}, " for c in scores.columns if c not in ("query", "doc_id")
+    )
+    meta = (
+        "SELECT doc_id, title, CAST(NULL AS DOUBLE) AS rank "
+        f"FROM {_index_view(index.doc_stats)}"
+    )
+    if index.ranks is not None:
+        meta += f" UNION ALL SELECT doc_id, NULL, rank FROM {_index_view(index.ranks)}"
+    head = "query, " if "query" in scores.columns else ""
+    with _query_view(spark, scores) as g:
         sql = f"""
-SELECT g.doc_id, {score} AS score, g.tfidf, {pagerank} AS pagerank, d.title
-FROM {g} g {ranks_join}
-LEFT JOIN {_index_view(index.doc_stats)} d ON d.doc_id = g.doc_id"""
-        # Q11 title boost
-        if use_title_boost:
+SELECT {head}doc_id, {score} AS score, tfidf, pagerank, title FROM (
+  SELECT {keys}, {rest}coalesce(max(m.rank), 0D) AS pagerank, max(m.title) AS title
+  FROM {g} g LEFT JOIN ({meta}) m ON m.doc_id = g.doc_id
+  GROUP BY {keys}
+)"""
+        if title_terms is not None:
             _register_title_boost(spark)
-            terms = f"array({', '.join(map(_sql_str, search_terms))})"
             sql = (
-                "SELECT doc_id, IF(tb > 1.0D, score * tb, score) AS score, "
+                f"SELECT {head}doc_id, IF(tb > 1.0D, score * tb, score) AS score, "
                 "tfidf, pagerank, title FROM ("
-                f"SELECT *, {TITLE_BOOST_UDF}(title, {terms}) AS tb FROM ({sql}))"
+                f"SELECT *, {TITLE_BOOST_UDF}(title, {title_terms}) AS tb FROM ({sql}))"
             )
-        # Q12 deterministic top-k (k=None -> full frame, no sort node)
         if k is not None:
             sql += f" ORDER BY score DESC, doc_id ASC LIMIT {int(k)}"
         return spark.sql(sql)
+
+
+def _bm25_scores(
+    spark: SparkSession,
+    index: SearchIndex,
+    parsed: list[tuple[str, list[str], list[tuple[str, str, int]]]],
+    batch: bool,
+) -> DataFrame:
+    """([query,] doc_id, tfidf): BM25 (k1=1.2, b=0.75) summed over each
+    query's original terms, each scored by its first expanded posting in
+    expansion order (raw posting preferred over stem, like reference).
+
+    The expansion is an inlined map literal from term to its (query,
+    original-term slot, priority) entries, exploded next to the pruned
+    postings; one groupBy keyed by (query, doc_id) takes the per-slot
+    minimum. With one query (``batch=False``) the key is dropped and the
+    shuffle is keyed by doc_id."""
+    avgdl = index.avgdl or 1.0
+    n_slots = max(len(set(terms)) for _, terms, _ in parsed)
+    entries: dict[str, list[str]] = {}
+    for text, terms, expansion in parsed:
+        slot = {o: i for i, o in enumerate(dict.fromkeys(terms))}
+        key = f"'q', {_sql_str(text)}, " if batch else ""
+        for t, o, p in expansion:
+            entries.setdefault(t, []).append(f"named_struct({key}'o', {slot[o]}, 'p', {p})")
+    exp_map = F.expr(_sql_map([(t, f"array({', '.join(e)})") for t, e in entries.items()]))
+    base = index.lookup_postings(list(entries))
+    cand = base.select("*", F.explode(F.element_at(exp_map, F.col("term"))).alias("x"))
+    if "idf_bm25" not in base.columns:
+        cand = cand.join(
+            F.broadcast(index.term_stats.select("term", "idf_bm25")), "term"
+        )
+    best = [
+        F.min(
+            F.when(
+                F.col("x.o") == i,
+                F.struct(F.col("x.p").alias("p"), "term", "tf", "doc_len", "idf_bm25"),
+            )
+        ).alias(f"b{i}")
+        for i in range(n_slots)
+    ]
+    keys = [F.col("x.q").alias("query")] if batch else []
+    per_doc = cand.groupBy(*keys, "doc_id").agg(*best)
+
+    def contrib(i: int):
+        tf = F.col(f"b{i}.tf")
+        dl = F.col(f"b{i}.doc_len")
+        denom = tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / F.lit(avgdl))
+        return F.col(f"b{i}.idf_bm25") * tf * (BM25_K1 + 1.0) / denom
+
+    tfidf = contrib(0)
+    if n_slots > 1:
+        tfidf = F.coalesce(tfidf, F.lit(0.0))
+        for i in range(1, n_slots):
+            tfidf = tfidf + F.coalesce(contrib(i), F.lit(0.0))
+    return per_doc.select(*(["query"] if batch else []), "doc_id", tfidf.alias("tfidf"))
+
+
+def _top_k_per_query(df: DataFrame, k: int) -> DataFrame:
+    """Q12 per query: rank by the 6dp-ROUNDED score (ties -> doc_id asc)
+    and keep ranks <= k. Sums of doubles are order-sensitive in the last
+    ulp, so an unrounded sort could rank near-ties differently run to
+    run."""
+    w = Window.partitionBy("query").orderBy(F.desc(F.round("score", 6)), F.asc("doc_id"))
+    return df.withColumn("rank", F.row_number().over(w).cast("int")).where(
+        F.col("rank") <= k
+    )
 
 
 def search_bm25_batch(
@@ -572,74 +725,28 @@ def search_bm25_batch(
     queries: list[str],
     k: int = 10,
 ) -> DataFrame:
-    """(query, doc_id, score, rank): BM25 top-k for a whole query SET in
-    ONE Spark job — the batch-throughput form the reference cannot express
-    (its frontend scores one query per HTTP request, SearchEngine.java:66).
+    """(query, doc_id, score, rank): BM25 top-k for a whole query SET — the
+    batch-throughput form the reference cannot express (its frontend
+    scores one query per HTTP request, SearchEngine.java:66).
 
-    Plan shape: every query's expansion rows carry a query column; the
-    postings table is joined ONCE against the broadcast union of all
-    expansions; per-(query, doc, orig) dedup and per-(query, doc) summation
-    are ordinary partial-aggregated groupBys; top-k is a window PARTITIONED
-    by query (bounded per query — never global). Ranking uses the
-    6dp-ROUNDED score (ties -> doc_id asc): sums of doubles are
-    order-sensitive in the last ulp, so an unrounded sort could rank
-    near-ties differently run to run.
+    The scorer is ``search(mode="bm25")``'s, keyed by query: the postings
+    are scanned once for every query's expanded terms, per-(query, doc)
+    scoring is one partial-aggregated groupBy, and top-k is a window
+    PARTITIONED by query (bounded per query — never global) over the
+    6dp-rounded score. Scores carry no PageRank blend. On a cached index
+    the set costs 4 Spark jobs whatever its size (term_stats broadcast,
+    scoring shuffle, window shuffle, result); ``search(mode="bm25")``
+    costs the same 4 for one query.
 
     Queries that tokenize to nothing or to a lone stop word contribute no
     rows (Q2 short-circuit)."""
-    rows: list[tuple[str, str, str, int]] = []
-    all_stems: set[str] = set()
-    parsed: list[tuple[str, list[str]]] = []
-    for q in queries:
-        terms = tokenize_query(q)
-        if not terms or (len(terms) == 1 and terms[0] in STOP_WORDS):
-            continue
-        parsed.append((q, terms))
-        all_stems |= {
-            porter_stem(t) for t in terms
-            if t not in STOP_WORDS and porter_stem(t) != t
-        }
+    parsed = _parse_queries(index, queries)
     if not parsed:
         return local_frame(spark, "query string, doc_id string, score double, rank int")
-    related = _related_words(index, all_stems)
-    for q, terms in parsed:
-        for term, orig, priority in expand_terms(terms, related):
-            rows.append((q, term, orig, priority))
-    exp_df = spark.createDataFrame(
-        rows, "query string, term string, orig string, priority int"
+    scores = _bm25_scores(spark, index, parsed, batch=True).select(
+        "query", "doc_id", F.round("tfidf", 6).alias("score")
     )
-    base = index.lookup_postings(sorted({r[1] for r in rows}))
-    cand = base.join(F.broadcast(exp_df), "term")
-    if "idf_bm25" not in base.columns:
-        cand = cand.join(
-            F.broadcast(index.term_stats.select("term", "idf_bm25")), "term"
-        )
-    avgdl = index.avgdl or 1.0
-    tf = F.col("best.tf")
-    dl = F.col("best.doc_len")
-    denom = tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / F.lit(avgdl))
-    per_doc_orig = cand.groupBy("query", "doc_id", "orig").agg(
-        F.min(
-            F.struct(
-                F.col("priority"), F.col("term"),
-                F.col("tf"), F.col("doc_len"), F.col("idf_bm25"),
-            )
-        ).alias("best")
-    )
-    scored = per_doc_orig.select(
-        "query",
-        "doc_id",
-        (F.col("best.idf_bm25") * tf * (BM25_K1 + 1.0) / denom).alias("contrib"),
-    )
-    agg = scored.groupBy("query", "doc_id").agg(
-        F.round(F.sum("contrib"), 6).alias("score")
-    )
-    w = Window.partitionBy("query").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        agg.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query", "doc_id", "score", "rank")
-    )
+    return _top_k_per_query(scores, k)
 
 
 def search_reference_batch(
@@ -653,17 +760,16 @@ def search_reference_batch(
     """(query, doc_id, score, tfidf, pagerank, title[, rank]): the FULL
     reference chain Q1-Q12 (expansion, per-orig dedup, position merge, AND
     filter, phrase x1.5, PageRank blend, matched-terms boost, title boost)
-    for a whole query SET in ONE Spark job — per-query hash-equal to
-    ``search(mode="reference")`` (pytest-asserted), at batch cost.
+    for a whole query SET — per-query hash-equal to
+    ``search(mode="reference")`` (pytest-asserted), whose scoring
+    statement it is, keyed by query.
 
-    Plan shape mirrors ``search_bm25_batch``: every query's expansion rows
-    carry a query column; the postings table is joined ONCE against the
-    broadcast union of all expansions; the AND filter / phrase pairs /
-    matched-boost sets become tiny broadcast per-query metadata tables;
-    every groupBy and window is keyed (or partitioned) by query — bounded
-    per query, never global. The per-query driver loop this replaces costs
-    one multi-job chain per query (~2.7 s/query measured at sf0.1);
-    the batch form amortizes the whole set over one chain.
+    With k, the ranked candidates are gathered into one task for the
+    per-query window, as ``search``'s TakeOrdered gathers one query's:
+    the title-boost UDF hides the query partitioning from the planner, so
+    a window exchange would cost one more job. On a cached index with
+    ranks a batch of five costs 3 Spark jobs (scoring shuffle, the
+    titles-and-ranks broadcast, result), the same as one ``search()``.
 
     ``k=None`` returns full scored frames (the gate/bench form); with k,
     rank is assigned per query over the 6dp-ROUNDED score (ties ->
@@ -671,233 +777,17 @@ def search_reference_batch(
 
     Queries that tokenize to nothing or to a lone stop word contribute no
     rows (Q2 short-circuit, SearchEngine.java:117-127)."""
-    import pandas as pd
-    from pyspark.sql.types import DoubleType
-
-    parsed: list[tuple[str, list[str]]] = []
-    all_stems: set[str] = set()
-    for q in dict.fromkeys(queries):  # dup query strings would fan out joins
-        terms = tokenize_query(q)
-        if not terms or (len(terms) == 1 and terms[0] in STOP_WORDS):
-            continue
-        parsed.append((q, terms))
-        all_stems |= {
-            porter_stem(t) for t in terms
-            if t not in STOP_WORDS and porter_stem(t) != t
-        }
-    empty_schema = (
-        "query string, doc_id string, score double, tfidf double, "
-        "pagerank double, title string"
-        + (", rank int" if k is not None else "")
+    parsed = _parse_queries(index, queries)
+    out = _reference_frame(
+        spark, index, parsed, all_matched_boost, use_title_boost, batch=True
     )
-    if not parsed:
-        return local_frame(spark, empty_schema)
-
-    related = _related_words(index, all_stems)
-    exp_rows: list[tuple[str, str, str, int]] = []
-    meta_rows: list[tuple[str, int, int, bool]] = []
-    pair_rows: list[tuple[str, str, str]] = []
-    boost_rows: list[tuple[str, str, str]] = []
-    terms_by_query: dict[str, list[str]] = {}
-    for q, terms in parsed:
-        terms_by_query[q] = terms
-        for term, orig, priority in expand_terms(terms, related):
-            exp_rows.append((q, term, orig, priority))
-        n_terms = len(terms)
-        n_distinct = len(dict.fromkeys(terms))
-        meta_rows.append((q, n_terms, n_distinct, n_terms > 1))
-        if n_terms > 1:
-            pair_rows += [(q, w1, w2) for w1, w2 in zip(terms, terms[1:])]
-            if all_matched_boost:
-                boost_rows += [
-                    (q, t, o) for t, o in matched_boost_pairs(terms)
-                ]
-
-    exp_df = spark.createDataFrame(
-        exp_rows, "query string, term string, orig string, priority int"
-    )
-    qmeta = spark.createDataFrame(
-        meta_rows, "query string, n_terms int, n_distinct int, multi boolean"
-    )
-
-    base = index.lookup_postings(sorted({r[1] for r in exp_rows}))
-    cand = base.join(F.broadcast(exp_df), "term")
-    if "idf" not in base.columns:
-        cand = cand.join(
-            F.broadcast(
-                index.term_stats.select("term", "idf", "idf_bm25", "is_stop")
-            ),
-            "term",
+    if out is None:
+        return local_frame(
+            spark,
+            "query string, doc_id string, score double, tfidf double, "
+            "pagerank double, title string" + (", rank int" if k is not None else ""),
         )
-
-    # Q5 first-valid-expansion dedup + Q6 position merge, per (query, doc, orig)
-    valid = (~F.col("is_stop")) & (F.col("normalized_tf") > 0)
-    per_doc_orig = cand.groupBy("query", "doc_id", "orig").agg(
-        F.min(
-            F.when(
-                valid,
-                F.struct(
-                    F.col("priority"), F.col("term"),
-                    (F.col("normalized_tf") * F.col("idf")).alias("contrib"),
-                ),
-            )
-        ).alias("best"),
-        F.array_sort(
-            F.array_distinct(F.flatten(F.collect_list("positions")))
-        ).alias("positions"),
-    )
-    agg = per_doc_orig.groupBy("query", "doc_id").agg(
-        F.sum("best.contrib").alias("tfidf"),
-        F.count(F.when(F.size("positions") > 0, 1)).alias("terms_with_pos"),
-        F.map_from_entries(
-            F.collect_list(F.struct("orig", "positions"))
-        ).alias("posmap"),
-    )
-    agg = agg.where(F.col("tfidf").isNotNull()).join(
-        F.broadcast(qmeta), "query"
-    )
-    # Q7 AND filter (multi-term queries only)
-    agg = agg.where(
-        (~F.col("multi")) | (F.col("terms_with_pos") == F.col("n_distinct"))
-    )
-    # Q8 phrase x1.5: every adjacent pair adjacent somewhere in the doc
-    if pair_rows:
-        pairs_df = spark.createDataFrame(
-            pair_rows, "query string, w1 string, w2 string"
-        )
-        ph = (
-            agg.select("query", "doc_id", "posmap")
-            .join(F.broadcast(pairs_df), "query")
-            .select(
-                "query",
-                "doc_id",
-                F.arrays_overlap(
-                    F.transform(
-                        F.element_at(F.col("posmap"), F.col("w1")),
-                        lambda p: p + 1,
-                    ),
-                    F.element_at(F.col("posmap"), F.col("w2")),
-                ).alias("adj"),
-            )
-            .groupBy("query", "doc_id")
-            .agg(F.bool_and("adj").alias("phrase"))
-        )
-        agg = agg.join(ph, ["query", "doc_id"], "left").withColumn(
-            "tfidf",
-            F.when(
-                F.col("multi") & F.coalesce(F.col("phrase"), F.lit(False)),
-                F.col("tfidf") * 1.5,
-            ).otherwise(F.col("tfidf")),
-        )
-    # Q9 PageRank blend
-    ranks = index.ranks
-    if ranks is not None:
-        agg = agg.join(ranks.select("doc_id", "rank"), "doc_id", "left")
-    else:
-        agg = agg.withColumn("rank", F.lit(None).cast("double"))
-    agg = agg.withColumn(
-        "pagerank", F.coalesce(F.col("rank"), F.lit(0.0))
-    ).withColumn("score", F.col("tfidf") * (1.0 + F.col("pagerank")))
-    # Q10 matched-terms boost (multi-term queries only; raw/stem sets)
-    if boost_rows:
-        bp_df = spark.createDataFrame(
-            boost_rows, "query string, term string, orig string"
-        )
-        matched = (
-            index.lookup_postings(sorted({r[1] for r in boost_rows}))
-            .select("term", "doc_id")
-            .join(F.broadcast(bp_df), "term")
-            .select("query", "doc_id", "orig")
-            .distinct()
-            .groupBy("query", "doc_id")
-            .agg(F.count(F.lit(1)).alias("matched"))
-        )
-        agg = agg.join(matched, ["query", "doc_id"], "left").withColumn(
-            "matched", F.coalesce(F.col("matched"), F.lit(0))
-        )
-        ratio = F.col("matched") / F.col("n_terms").cast("double")
-        agg = agg.withColumn(
-            "score",
-            F.when(~F.col("multi"), F.col("score"))
-            .when(F.col("matched") == F.col("n_terms"), F.col("score") * 4.0)
-            .when(F.col("matched") > 0, F.col("score") * (0.3 + 0.7 * ratio))
-            .otherwise(F.col("score") * 0.1),
-        )
-    # Q11 title boost (pandas UDF keyed by the query column)
-    agg = agg.join(index.doc_stats.select("doc_id", "title"), "doc_id", "left")
-    if use_title_boost:
-        tbq = dict(terms_by_query)
-
-        # no type hints: `pd` is function-local, so postponed-evaluation
-        # string annotations would not resolve in pandas_udf's inference
-        def _tboost(qs, titles):
-            return pd.Series(
-                [
-                    title_boost_py(t or "", tbq.get(q, []))
-                    for q, t in zip(qs, titles)
-                ]
-            )
-
-        tb = F.pandas_udf(_tboost, DoubleType())
-        agg = agg.withColumn("tb", tb(F.col("query"), F.col("title"))).withColumn(
-            "score",
-            F.when(F.col("tb") > 1.0, F.col("score") * F.col("tb")).otherwise(
-                F.col("score")
-            ),
-        )
-    out = agg.select("query", "doc_id", "score", "tfidf", "pagerank", "title")
-    if k is None:
-        return out
-    # Q12 per-query top-k over the 6dp-rounded score (deterministic)
-    w = Window.partitionBy("query").orderBy(
-        F.desc(F.round("score", 6)), F.asc("doc_id")
-    )
-    return (
-        out.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-    )
-
-
-def _score_bm25(
-    spark: SparkSession,
-    index: SearchIndex,
-    cand: DataFrame,
-    search_terms: list[str],
-    k: int | None,
-) -> DataFrame:
-    """BM25 (k1=1.2, b=0.75) x (1 + PageRank), per-original-term dedup by
-    expansion priority (raw posting preferred over stem, like reference)."""
-    avgdl = index.avgdl or 1.0
-    tf = F.col("best.tf")
-    dl = F.col("best.doc_len")
-    denom = tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / F.lit(avgdl))
-    per_doc_orig = cand.groupBy("doc_id", "orig").agg(
-        F.min(
-            F.struct(
-                F.col("priority"), F.col("term"),
-                F.col("tf"), F.col("doc_len"), F.col("idf_bm25"),
-            )
-        ).alias("best")
-    )
-    scored = per_doc_orig.select(
-        "doc_id",
-        (F.col("best.idf_bm25") * tf * (BM25_K1 + 1.0) / denom).alias("contrib"),
-    )
-    agg = scored.groupBy("doc_id").agg(F.sum("contrib").alias("tfidf"))
-    ranks = index.ranks
-    if ranks is not None:
-        agg = agg.join(ranks.select("doc_id", "rank"), "doc_id", "left")
-    else:
-        agg = agg.withColumn("rank", F.lit(None).cast("double"))
-    agg = (
-        agg.withColumn("pagerank", F.coalesce(F.col("rank"), F.lit(0.0)))
-        .withColumn("score", F.col("tfidf") * (1.0 + F.col("pagerank")))
-        .join(index.doc_stats.select("doc_id", "title"), "doc_id", "left")
-    )
-    out = agg.select("doc_id", "score", "tfidf", "pagerank", "title")
-    if k is None:
-        return out
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return out if k is None else _top_k_per_query(out.coalesce(1), k)
 
 
 def more_like_this(
@@ -1477,9 +1367,8 @@ def search_rm3(
         .collect()
     )  # bounded: fb_terms rows
     wsum = sum(r["w"] for r in exp_rows) or 1.0
-    exp_df = spark.createDataFrame(
-        [(r["term"], r["w"] / wsum) for r in exp_rows],
-        "term string, wn double",
+    exp_df = local_frame(
+        spark, "term string, wn double", [(r["term"], r["w"] / wsum) for r in exp_rows]
     )
     orig = bm25_contrib(
         index.lookup_postings(sorted(set(terms)))

@@ -61,50 +61,6 @@ def read_table(
     return reader.load(path)
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """True iff an iceberg-spark-runtime jar is on the session classpath
-    (feature check — the container ships none, but a production cluster
-    would; the conditional pytest gates the round-trip when present)."""
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
-def ensure_iceberg_catalog(
-    spark: SparkSession, catalog: str = "local", warehouse: str = "/tmp/iceberg_wh"
-) -> None:
-    """Register a Hadoop-backed Iceberg catalog on the running session.
-    Iceberg catalogs are resolved lazily, so runtime conf is sufficient —
-    no session restart. Raises the standard seam error when the jar is
-    absent."""
-    if not iceberg_available(spark):
-        raise RuntimeError(
-            "Iceberg source needs iceberg-spark-runtime on the classpath "
-            "and a spark.sql.catalog.* configured; this environment has "
-            "neither (jar not found)"
-        )
-    spark.conf.set(
-        f"spark.sql.catalog.{catalog}", "org.apache.iceberg.spark.SparkCatalog"
-    )
-    spark.conf.set(f"spark.sql.catalog.{catalog}.type", "hadoop")
-    spark.conf.set(f"spark.sql.catalog.{catalog}.warehouse", warehouse)
-
-
-def write_iceberg(df: DataFrame, table: str) -> None:
-    """createOrReplace an Iceberg table (catalog-qualified name). Same
-    seam contract as read_table(fmt='iceberg')."""
-    try:
-        df.writeTo(table).using("iceberg").createOrReplace()
-    except Exception as e:
-        raise RuntimeError(
-            "Iceberg source needs iceberg-spark-runtime on the classpath "
-            "and a spark.sql.catalog.* configured; this environment has "
-            f"neither ({e})"
-        ) from e
-
-
 def write_table(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "overwrite") -> None:
     if fmt not in SUPPORTED:
         raise ValueError(f"unsupported format {fmt!r}; use one of {SUPPORTED}")

@@ -93,6 +93,34 @@ def duplicate_windows(docs, w, min_count=2):
     return sorted(r for r in rows if count[r[2]] >= min_count)
 
 
+def token_counts(docs):
+    """(doc_id, n_tokens): tokens per doc; NULL content counts NULL."""
+    return sorted(
+        (str(doc_id), None if text is None else len(_tokens(text)))
+        for doc_id, text in docs
+    )
+
+
+def distinct_tokens(docs):
+    """(tok,): every distinct token of the corpus."""
+    return sorted({(tok,) for _, text in docs for tok in _tokens(text)})
+
+
+def hll_registers(docs, b):
+    """(bucket, reg): HyperLogLog registers over every token. A token
+    hashes to h = int(md5(tok)[:8], 16); its bucket is the top b of those
+    32 bits, its rank (32 - b + 1) - bit_length of the low 32 - b bits;
+    each bucket keeps its largest rank, and empty buckets emit no row."""
+    rem = 32 - b
+    regs = {}
+    for _, text in docs:
+        for tok in _tokens(text):
+            h = int(_md5_hex(tok)[:8], 16)
+            rho = rem + 1 - (h & ((1 << rem) - 1)).bit_length()
+            regs[h >> rem] = max(regs.get(h >> rem, 0), rho)
+    return sorted(regs.items())
+
+
 def bigram_stream(docs):
     """(doc_id, bigram): every adjacent token pair, with repeats."""
     out = []
@@ -126,6 +154,21 @@ def trigrams(lowered_docs):
         for i in range(len(text) - 2):
             out.add((doc_id, text[i : i + 3]))
     return sorted(out)
+
+
+def encode_positions(positions_lists):
+    """Segment position bytes: per posting its length, first position and
+    gaps, each an LEB128 varint (7 bits a byte, low group first, high bit
+    set on every byte but the last)."""
+    out = bytearray()
+    for positions in positions_lists:
+        gaps = [p - prev for prev, p in zip([0] + positions, positions)]
+        for v in [len(positions)] + gaps:
+            while v >= 0x80:
+                out.append((v & 0x7F) | 0x80)
+                v >>= 7
+            out.append(v)
+    return bytes(out)
 
 
 # ---------------------------------------------------------------------------

@@ -11,15 +11,32 @@ reference itself shares them between Indexer and SearchEngine.
 from __future__ import annotations
 
 import math
+import re
 
+from distributed_search_engine_spark.functions import text as T
 from distributed_search_engine_spark.functions.stemmer import porter_stem
 from distributed_search_engine_spark.functions.stopwords import STOP_WORDS
-from distributed_search_engine_spark.functions.text import (
-    MAX_DOC_CHARS,
-    is_worth_py,
-    title_py,
-    tokenize_py,
-)
+from distributed_search_engine_spark.functions.text import MAX_DOC_CHARS, tokenize_py
+
+
+def is_worth_py(tok: str) -> bool:
+    """isWorthIndexing (jobs/Indexer.java): 2-20 chars, all letters or a
+    2-4 digit number."""
+    return T.MIN_TOKEN_LEN <= len(tok) <= T.MAX_TOKEN_LEN and bool(
+        re.match(T.RE_WORD, tok) or re.match(T.RE_NUM24, tok)
+    )
+
+
+def title_py(content: str) -> str:
+    """extractTitle (jobs/Indexer.java:1418-1430): the <title> inner text
+    with tags stripped when present and non-empty, else the first line;
+    whitespace collapsed, trimmed, cut to 200 chars."""
+    m = re.search(T.RE_TITLE_TAG, content)
+    if m and m.group(1) != "":
+        chosen = re.sub(T.RE_HTML_TAGS, " ", m.group(1))
+    else:
+        chosen = content.split("\n", 1)[0]
+    return re.sub(T.RE_WS, " ", chosen).strip()[: T.TITLE_MAX_CHARS]
 
 
 def build_naive_index(corpus: dict[str, str]):

@@ -1,12 +1,10 @@
 """Differential tests pinning the vectorized Arrow kernels
 (operators/arrow_kernels.py), each its operator's one implementation.
-The simhash, shingle, window-hash, bigram, CMS, trigram and vector
-kernels are compared row for row with the independent pure-Python
-references in tests/kernel_reference.py (the `_matches_jvm` names
-recall the JVM Column twins those references were checked against
-before the twins were deleted); the token-count, distinct-token and
-HLL kernels with JVM Column expressions built here. The DuckDB oracle
-gates cover the same operators end-to-end at sf0.01/sf0.001.
+Every kernel is compared row for row with an independent pure-Python
+reference in tests/kernel_reference.py (the `_matches_jvm` names recall
+the JVM Column twins those references were checked against before the
+twins were deleted). The DuckDB oracle gates cover the same operators
+end-to-end at sf0.01/sf0.001.
 
 The fixture corpus stresses the edge cases the kernels must reproduce:
 empty docs, whitespace-only, NULL content, sub-window-length docs,
@@ -90,10 +88,8 @@ def test_token_count_kernel_matches_jvm(spark, kdocs):
         token_counts_arrow,
     )
 
-    jvm = D._token_arrays(kdocs, "doc_id", "text").select(
-        "doc_id", F.size("toks").alias("n_tokens")
-    )
-    assert _rows(token_counts_arrow(kdocs)) == _rows(jvm)
+    for name, df, docs in _variants(spark, kdocs):
+        assert _rows(token_counts_arrow(df)) == R.token_counts(docs), name
 
 
 def test_bigram_stream_kernel_matches_jvm(spark, kdocs):
@@ -112,34 +108,19 @@ def test_distinct_tokens_kernel_matches_jvm(spark, kdocs):
         distinct_tokens_arrow,
     )
 
-    jvm = (
-        TA._tok_df(kdocs, "doc_id", "text")
-        .where(F.col("tok") != "")
-        .select("tok")
-        .distinct()
-    )
-    assert _rows(distinct_tokens_arrow(kdocs)) == _rows(jvm)
+    for name, df, docs in _variants(spark, kdocs):
+        assert _rows(distinct_tokens_arrow(df)) == R.distinct_tokens(docs), name
 
 
 def test_hll_registers_kernel_matches_jvm(spark, kdocs):
-    from distributed_search_engine_spark.functions.hashing import md5_prefix_long
     from distributed_search_engine_spark.operators.arrow_kernels import (
         hll_registers_arrow,
     )
 
-    b, rem = 8, 24
-    t = TA._tok_df(kdocs, "doc_id", "text").where(F.col("tok") != "")
-    h = md5_prefix_long(F.col("tok"))
-    r = h.bitwiseAND(F.lit((1 << rem) - 1))
-    rho = F.when(r == 0, F.lit(rem + 1)).otherwise(
-        F.lit(rem + 1) - F.length(F.bin(r))
-    )
-    jvm = (
-        t.select(F.shiftright(h, rem).alias("bucket"), rho.alias("rho"))
-        .groupBy("bucket")
-        .agg(F.max("rho").cast("long").alias("reg"))
-    )
-    assert _rows(hll_registers_arrow(kdocs, b)) == _rows(jvm)
+    for name, df, docs in _variants(spark, kdocs):
+        for b in (4, 8):
+            got = _rows(hll_registers_arrow(df, b))
+            assert got == R.hll_registers(docs, b), (name, b)
 
 
 def test_trigram_kernel_matches_jvm(spark, kdocs):

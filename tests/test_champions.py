@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from distributed_search_engine_spark.index.champions import (
     champion_postings,
-    champion_recall,
     search_bm25_champion,
 )
 from distributed_search_engine_spark.operators.postings import build_index
@@ -19,6 +18,28 @@ from distributed_search_engine_spark.query.engine import (
 )
 
 QUERIES = [["data", "stream"], ["window"], ["hash", "sort", "merge"]]
+
+
+def champion_recall(approx, exact, k):
+    """(query, n_exact, n_hit, recall): per-query overlap of the champion
+    top-k against the exact top-k — the honesty metric for picking m.
+    Both inputs are (query, doc_id, ..., rank<=k) frames."""
+    a = approx.where(F.col("rank") <= k).select("query", "doc_id")
+    e = exact.where(F.col("rank") <= k).select("query", "doc_id")
+    hits = e.join(a, ["query", "doc_id"]).groupBy("query").agg(
+        F.count(F.lit(1)).cast("int").alias("n_hit")
+    )
+    totals = e.groupBy("query").agg(
+        F.count(F.lit(1)).cast("int").alias("n_exact")
+    )
+    return totals.join(hits, "query", "left").select(
+        "query",
+        "n_exact",
+        F.coalesce("n_hit", F.lit(0)).alias("n_hit"),
+        F.round(
+            F.coalesce("n_hit", F.lit(0)) / F.col("n_exact"), 6
+        ).alias("recall"),
+    )
 
 
 @pytest.fixture(scope="module")

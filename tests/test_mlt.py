@@ -4,9 +4,10 @@ plus top-k semantics."""
 
 import math
 
-from distributed_search_engine_spark.functions.text import is_worth_py, tokenize_py
+from distributed_search_engine_spark.functions.text import tokenize_py
 from distributed_search_engine_spark.operators.postings import build_index
 from distributed_search_engine_spark.query.engine import SearchIndex, more_like_this
+from tests.naive_reference import is_worth_py
 
 CORPUS = {
     "0": "spark joins data with data frames",

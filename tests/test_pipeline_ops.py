@@ -849,13 +849,14 @@ def _py_morton(a, b, bits=16):
 
 
 def test_zvalue_matches_python_morton(spark):
-    from distributed_search_engine_spark.operators.layout import zorder_layout
+    from distributed_search_engine_spark.operators.layout import zvalue
 
     df = spark.createDataFrame(
         [(i, (i * 7) % 61, (i * 13) % 53) for i in range(100)],
         "id long, a long, b long",
     )
-    got = {r["id"]: r["zvalue"] for r in zorder_layout(df, "a", "b").collect()}
+    z = df.select("id", zvalue(F.col("a"), F.col("b")).alias("zvalue"))
+    got = {r["id"]: r["zvalue"] for r in z.collect()}
     for i in range(100):
         assert got[i] == _py_morton((i * 7) % 61, (i * 13) % 53)
 

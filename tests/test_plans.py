@@ -72,8 +72,8 @@ def test_filter_pushdown_on_source_scan(spark, tmp_path):
 
 
 def test_query_candidates_use_broadcast_join(spark, seg_dir):
-    """The expanded-terms join in the query engine must broadcast the tiny
-    expansion side, never shuffle the postings."""
+    """The query engine's joins against the postings must broadcast the
+    small side (term stats, titles and ranks), never shuffle the postings."""
     from distributed_search_engine_spark.operators.postings import build_index
     from distributed_search_engine_spark.query.engine import SearchIndex, search
 
@@ -113,9 +113,9 @@ def test_asof_join_plan_has_no_join(spark):
 
 
 def test_batch_bm25_scans_postings_once(spark):
-    """One batch job for many queries: the postings relation must appear
-    exactly once in the scan list (joined against the broadcast union of
-    expansions), not once per query."""
+    """One batch plan for many queries: the postings relation must appear
+    exactly once in the scan list (exploded against the inlined expansion
+    map of every query), not once per query."""
     from distributed_search_engine_spark.corpus import ingest, make_corpus
     from distributed_search_engine_spark.operators.postings import build_index
     from distributed_search_engine_spark.query.engine import (
@@ -132,7 +132,7 @@ def test_batch_bm25_scans_postings_once(spark):
     )
     plan3 = plan_of(search_bm25_batch(spark, sidx, ["spark", "partition", "graph"], k=5))
     plan1 = plan_of(search_bm25_batch(spark, sidx, ["spark"], k=5))
-    assert plan3.count("BroadcastExchange") >= 1  # expansion union broadcast
+    assert plan3.count("BroadcastExchange") >= 1  # term-stats broadcast
     # a per-query loop would repeat the postings subplan once per query;
     # the batch plan's scan count must NOT grow with the number of queries
     # (the Unions inside the index lineage itself — hot/cold caps — are

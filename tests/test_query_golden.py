@@ -188,10 +188,11 @@ def test_title_boost_applied_in_search(spark, corpus_index):
 
 
 def test_reference_batch_matches_single_query_search(spark, corpus_index):
-    """search_reference_batch (whole query set, ONE job) must be per-query
-    value-identical (6dp) to search(mode='reference') — every chain stage:
-    stem expansion, Q5 dedup, AND filter, phrase x1.5, matched x4.0/partial,
-    title boost tiers."""
+    """search_reference_batch (whole query set, search()'s statement keyed
+    by query; 3 Spark jobs for five queries on a cached index) must be
+    per-query value-identical (6dp) to search(mode='reference') — every
+    chain stage: stem expansion, Q5 dedup, AND filter, phrase x1.5,
+    matched x4.0/partial, title boost tiers."""
     from distributed_search_engine_spark.query.engine import (
         search_reference_batch,
     )

@@ -83,7 +83,7 @@ def test_match_rate_is_100_percent(spark, setup):
 
 
 def test_batch_bm25_matches_per_query(spark):
-    """One-job batch scoring must equal the per-query BM25 engine for every
+    """Batch scoring must equal the per-query BM25 engine for every
     query in the set (6dp-rounded scores; identical rank order)."""
     from distributed_search_engine_spark.corpus import ingest, make_corpus
     from distributed_search_engine_spark.operators.postings import build_index
@@ -290,3 +290,39 @@ def test_empty_results_run_no_job(spark, served_index):
     assert search(spark, served_index, "the").columns == [
         "doc_id", "score", "tfidf", "pagerank", "title"
     ]
+
+
+def test_batch_and_single_query_job_counts(spark, served_index):
+    """One scorer per mode serves single and batch queries, so a batch
+    costs no more Spark jobs than a single query: five reference queries
+    (one-term, multi-term, phrase) run no more jobs than one multi-term
+    search(), and search(mode="bm25") no more than a batch of its one
+    query."""
+    from distributed_search_engine_spark.query.engine import (
+        search_bm25_batch,
+        search_reference_batch,
+    )
+
+    queries = ["compute", "spark shuffle", "alpha beta gamma", "engine", "data stream"]
+    for mode in ("reference", "bm25"):  # warm-up: UDF registration, avgdl
+        search(spark, served_index, "engine", k=20, mode=mode).collect()
+    rows, single = _collect_jobs(
+        spark, search(spark, served_index, "spark shuffle", k=200), "jobs-ref-single"
+    )
+    assert rows
+    rows, batch = _collect_jobs(
+        spark, search_reference_batch(spark, served_index, queries, k=20), "jobs-ref-batch"
+    )
+    assert len({r["query"] for r in rows}) >= 3
+    assert batch <= single, (batch, single)
+
+    q = "spark shuffle"
+    rows, single = _collect_jobs(
+        spark, search(spark, served_index, q, k=20, mode="bm25"), "jobs-bm25-single"
+    )
+    assert rows
+    rows, batch = _collect_jobs(
+        spark, search_bm25_batch(spark, served_index, [q], k=20), "jobs-bm25-batch"
+    )
+    assert rows
+    assert single <= batch, (single, batch)

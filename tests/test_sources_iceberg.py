@@ -5,15 +5,19 @@ gates the same write->read->values equality as the csv/json/orc gates)."""
 
 import pytest
 
-from distributed_search_engine_spark.sources import (
-    ensure_iceberg_catalog,
-    iceberg_available,
-    read_table,
-    write_iceberg,
-)
+from distributed_search_engine_spark.sources import read_table
 
 ROWS = [(1, "alpha", 1.5), (2, "beta", -2.0), (3, "gamma", 0.25)]
 SCHEMA = "id int, name string, val double"
+
+
+def iceberg_available(spark) -> bool:
+    """True iff an iceberg-spark-runtime jar is on the session classpath."""
+    try:
+        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
+        return True
+    except Exception:
+        return False
 
 
 def test_iceberg_seam_error_without_jar(spark):
@@ -21,18 +25,17 @@ def test_iceberg_seam_error_without_jar(spark):
         pytest.skip("iceberg jar present; the round-trip test covers this")
     with pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
         read_table(spark, "nocat.db.t", fmt="iceberg")
-    with pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
-        ensure_iceberg_catalog(spark)
-    df = spark.createDataFrame(ROWS, SCHEMA)
-    with pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
-        write_iceberg(df, "nocat.db.t")
 
 
 def test_iceberg_roundtrip_when_jar_present(spark, tmp_path):
     if not iceberg_available(spark):
         pytest.skip("no iceberg-spark-runtime jar in this container")
-    ensure_iceberg_catalog(spark, catalog="local", warehouse=str(tmp_path / "wh"))
+    # a Hadoop-backed catalog registered at runtime (Iceberg catalogs
+    # resolve lazily, so no session restart), written by the writer API
+    spark.conf.set("spark.sql.catalog.local", "org.apache.iceberg.spark.SparkCatalog")
+    spark.conf.set("spark.sql.catalog.local.type", "hadoop")
+    spark.conf.set("spark.sql.catalog.local.warehouse", str(tmp_path / "wh"))
     df = spark.createDataFrame(ROWS, SCHEMA)
-    write_iceberg(df, "local.db.t_roundtrip")
+    df.writeTo("local.db.t_roundtrip").using("iceberg").createOrReplace()
     back = read_table(spark, "local.db.t_roundtrip", fmt="iceberg")
     assert sorted(tuple(r) for r in back.collect()) == sorted(ROWS)

@@ -2,9 +2,12 @@
 position-counter semantics (counter advances on rejected tokens,
 reference jobs/Indexer.java:453-460)."""
 
+import re
+
 from pyspark.sql import functions as F
 
 from distributed_search_engine_spark.functions import text as T
+from tests import naive_reference as N
 
 SAMPLES = [
     "Hello, World! The quick-brown fox 2024.",
@@ -24,20 +27,27 @@ def test_tokenize_py_basic():
 
 
 def test_is_worth():
-    assert T.is_worth_py("hello")
-    assert T.is_worth_py("ab")
-    assert not T.is_worth_py("a")  # too short
-    assert not T.is_worth_py("x" * 21)  # too long
-    assert T.is_worth_py("2024") and T.is_worth_py("99")
-    assert not T.is_worth_py("12345")  # 5 digits
-    assert not T.is_worth_py("x1")  # mixed alnum fails both patterns
-    assert not T.is_worth_py("1")
+    assert N.is_worth_py("hello")
+    assert N.is_worth_py("ab")
+    assert not N.is_worth_py("a")  # too short
+    assert not N.is_worth_py("x" * 21)  # too long
+    assert N.is_worth_py("2024") and N.is_worth_py("99")
+    assert not N.is_worth_py("12345")  # 5 digits
+    assert not N.is_worth_py("x1")  # mixed alnum fails both patterns
+    assert not N.is_worth_py("1")
 
 
-def test_positions_advance_on_rejected_tokens():
-    # 'a' (rejected, len 1) and 'x1' (rejected, mixed) still consume positions
-    out = T.positioned_tokens_py("a hello x1 world")
-    assert out == [("hello", 2), ("world", 4)]
+def test_positions_advance_on_rejected_tokens(spark):
+    # 'a' (rejected, len 1) and 'x1' (rejected, mixed) still consume
+    # positions in the posting kernel
+    from distributed_search_engine_spark.operators.postings import emit_postings_arrow
+
+    docs = spark.createDataFrame([("d", "a hello x1 world")], "doc_id string, content string")
+    out = sorted(
+        (r["term"], list(r["positions"]))
+        for r in emit_postings_arrow(docs, with_stems=False).collect()
+    )
+    assert out == [("hello", [2]), ("world", [4])]
 
 
 def test_spark_column_parity(spark):
@@ -58,7 +68,7 @@ def test_spark_worth_parity(spark):
         for r in df.select("tok", T.is_worth_col(F.col("tok")).alias("w")).collect()
     }
     for t in toks:
-        assert got[t] == T.is_worth_py(t), t
+        assert got[t] == N.is_worth_py(t), t
 
 
 def test_duckdb_tokenizer_parity():
@@ -74,8 +84,8 @@ def test_duckdb_tokenizer_parity():
 
 
 def test_title():
-    assert T.title_py("first  line here\nsecond line") == "first line here"
-    assert len(T.title_py("x" * 500)) == 200
+    assert N.title_py("first  line here\nsecond line") == "first line here"
+    assert len(N.title_py("x" * 500)) == 200
 
 
 # ---------------------------------------------------------------------------
@@ -91,12 +101,26 @@ HTML = (
 )
 
 
+def _weighted_stream_py(content):
+    """tokenizeWithWeights (jobs/Indexer.java:1301-1371) in plain Python:
+    visible tokens weigh 1.0; script and style bodies add their tokens of
+    two or more characters at the metadata weight."""
+    visible = content
+    for pat in (T.RE_SCRIPT_TAG, T.RE_STYLE_TAG, T.RE_HTML_COMMENT, T.RE_META_TAG):
+        visible = re.sub(pat, " ", visible)
+    out = [(t, T.VISIBLE_WEIGHT) for t in T.tokenize_py(visible)]
+    for pat in (T.RE_SCRIPT_CONTENT, T.RE_STYLE_CONTENT):
+        for body in re.findall(pat, content):
+            out += [(t, T.METADATA_WEIGHT) for t in T.tokenize_py(body) if len(t) >= 2]
+    return out
+
+
 def test_weighted_stream_three_way_parity(spark):
     import duckdb
 
     from pyspark.sql import functions as F
 
-    py = T.weighted_stream_py(HTML)
+    py = _weighted_stream_py(HTML)
     df = spark.createDataFrame([("d", HTML)], "doc_id string, content string")
     sp = [
         (r["tok"], r["weight"])
@@ -228,10 +252,10 @@ def test_html_title_three_way_parity(spark):
         ).fetchall()
     )
     for i, c in enumerate(cases):
-        want = T.title_py(c)
+        want = N.title_py(c)
         assert got_spark[str(i)] == want, (i, got_spark[str(i)], want)
         assert got_duck[str(i)] == want, (i, got_duck[str(i)], want)
-    assert T.title_py(HTML) == "My Doc Title"
+    assert N.title_py(HTML) == "My Doc Title"
 
 
 def test_title_boost_over_html_corpus(spark):
