@@ -10,6 +10,10 @@ an integer. The DuckDB oracle twin is
 so the two engines agree bit-for-bit. Centralized here because the
 arithmetic MUST stay identical across all call sites and the oracle —
 a drift (e.g. substring width) would be a silent cross-engine mismatch.
+
+The driver-side integer mixer that seeds data-independent literals
+(MinHash coefficients, k-means seed centroids, LSH hyperplane weights)
+lives here for the same reason: splitmix64_mix is its one copy.
 """
 
 from __future__ import annotations
@@ -18,6 +22,23 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 MD5_PREFIX_SPAN = float(16**8)
+
+# splitmix64 (Steele, Lea & Flood, OOPSLA'14): golden-ratio increment and
+# the two finalizer multipliers
+M64 = (1 << 64) - 1
+SM_GAMMA = 0x9E3779B97F4A7C15
+SM_M1 = 0xBF58476D1CE4E5B9
+SM_M2 = 0x94D049BB133111EB
+
+
+def splitmix64_mix(x: int) -> int:
+    """The splitmix64 finalizer (xor-shifts 30, 27, 31) of a 64-bit int."""
+    x &= M64
+    x ^= x >> 30
+    x = (x * SM_M1) & M64
+    x ^= x >> 27
+    x = (x * SM_M2) & M64
+    return x ^ (x >> 31)
 
 
 def md5_prefix_long(value: Column, salt: str = "") -> Column:

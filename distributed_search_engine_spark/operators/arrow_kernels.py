@@ -500,14 +500,18 @@ def hll_registers_arrow(
 # ---------------------------------------------------------------------------
 # vector assignment kernels (k-means argmin, IVFADC residual-PQ codes)
 #
-# The JVM Column form (clustering._best_expr, similarity._sq_l2)
-# evaluates zip_with+aggregate folds per (row, centroid) —
-# CodegenFallback, interpreted, with a zipped-array allocation each: the
-# PQ code assignment alone is K_coarse*dim + M*K*dsub ≈ 2k interpreted
-# folds per row. These kernels run the SAME float ops in the SAME order
-# (vectorized across rows, sequential across dims: acc = acc + d*d), so
-# raw distances are bit-identical; rounded values reproduce Spark's
-# HALF_UP round(x, 6) exactly (see _round6_half_up).
+# Every nearest-centroid argmin, residual and PQ code in the engine comes
+# from these two kernels: assign_clusters_arrow (k-means assign/update/
+# fit, SemDeDup, similarity.residuals) and coded_corpus_arrow (PQ and
+# IVFADC encode; PQ is IVFADC with one all-zero coarse cell). They
+# replaced JVM zip_with+aggregate folds per (row, centroid) —
+# CodegenFallback, interpreted, a zipped-array allocation each; the PQ
+# code assignment alone was K_coarse*dim + M*K*dsub ≈ 2k interpreted
+# folds per row. The kernels keep the fold's float ops in its order
+# (vectorized across rows, sequential across dims: acc = acc + d*d), the
+# order the DuckDB oracle's list_reduce uses; rounded values reproduce
+# Spark's HALF_UP round(x, 6) exactly (see _round6_half_up, which the ADC
+# scorer also applies to its driver-side lookup tables).
 # ---------------------------------------------------------------------------
 
 
@@ -546,8 +550,7 @@ def _round6_half_up(x):
 
 def _vec_matrix(vcol, dim: int):
     """(n, dim) float64 matrix from an Arrow list<double> column; raises
-    if any row's length differs (the JVM fold would silently misbehave
-    there too — better loud)."""
+    ValueError if any row's length differs from the centroids' dim."""
     import numpy as np
 
     if hasattr(vcol, "combine_chunks"):
@@ -562,7 +565,7 @@ def _vec_matrix(vcol, dim: int):
 
 def _seq_sq_dists(v, cents):
     """(n, K) squared L2 distances, accumulated sequentially over dims
-    (identical float op order to the zip_with/aggregate left fold)."""
+    (the float op order of the oracle's left fold)."""
     import numpy as np
 
     n, dim = v.shape
@@ -583,11 +586,11 @@ def assign_clusters_arrow(
     vec_col: str = "embedding",
     keep_vec: bool = False,
 ) -> DataFrame:
-    """(id, [v,] cluster, sqdist): nearest-centroid assignment — the
-    clustering._best_expr twin (argmin over raw distances, ties to the
-    lowest cluster = numpy first-occurrence argmin; sqdist is the raw
-    double — callers apply F.round like the JVM path). ``id`` passes
-    through with the caller's type."""
+    """(id, [v,] cluster, sqdist): nearest-centroid assignment — argmin
+    over raw distances, ties to the lowest cluster (numpy first-occurrence
+    argmin); sqdist is the raw double, callers round it. ``id`` passes
+    through with the caller's type; ``keep_vec`` adds the vector as
+    array<double>. Ragged rows raise ValueError (_vec_matrix)."""
     dim = len(centroids[0])
     cents = [list(map(float, c)) for c in centroids]
     sel = docs_emb.select(
@@ -636,9 +639,10 @@ def coded_corpus_arrow(
     """(id, cluster, code_0..code_{M-1}): the IVFADC encode — coarse
     argmin (raw distances, ties to lowest cell), residual v - c_cell,
     per-subspace PQ code = 1-based first-position argmin over the
-    6dp-ROUNDED codeword distances, exactly similarity.pq-code
-    arithmetic (array_position(darr, array_min(darr)) on rounded
-    values)."""
+    6dp-ROUNDED codeword distances (the DuckDB twin's
+    array_position(darr, array_min(darr)) on rounded values). With one
+    all-zero coarse cell it is the plain PQ encode (similarity.pq_encode).
+    ``id`` is cast to long; ragged rows raise ValueError."""
     dim = len(coarse_cents[0])
     n_m = len(codebooks)
     dsub = len(codebooks[0][0])

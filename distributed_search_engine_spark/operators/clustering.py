@@ -10,13 +10,12 @@ k-means the embeddings, then within each cluster drop every point that
 has a sufficiently-cosine-similar lower-id neighbor.
 
 Spark mapping:
-  - assignment: argmin_j ||x - c_j||^2, map-only, no shuffle.
-    assign_clusters / update_centroids run it as one numpy mapInArrow
-    kernel; kmeans_fit and semantic_dedup inline the k centroids as
-    literal arrays (_best_expr: zip_with/aggregate fold per centroid,
-    array_min of (dist, j) structs for the tie-broken argmin). Both
-    sum squared differences sequentially over dims and break ties to
-    the lowest cluster.
+  - assignment: argmin_j ||x - c_j||^2, map-only, no shuffle. Every
+    caller here (assign_clusters, update_centroids, kmeans_fit,
+    semantic_dedup) and similarity.residuals runs the one numpy
+    mapInArrow kernel arrow_kernels.assign_clusters_arrow: squared
+    differences summed sequentially over dims, ties to the lowest
+    cluster. A ragged embedding column raises its ValueError.
   - update: groupBy(cluster).agg(count + one avg per dimension) — one
     shuffle with map-side partial aggregation; centroids (k x dim
     doubles) are collected to the driver per iteration, exactly like
@@ -36,20 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_M64 = (1 << 64) - 1
-_SM_GAMMA = 0x9E3779B97F4A7C15
-_SM_M1 = 0xBF58476D1CE4E5B9
-_SM_M2 = 0x94D049BB133111EB
-
-
-def _splitmix(seed: int, j: int, d: int) -> int:
-    x = (seed * _SM_GAMMA + j * _SM_M1 + d * _SM_M2 + _SM_GAMMA) & _M64
-    x ^= x >> 30
-    x = (x * _SM_M1) & _M64
-    x ^= x >> 27
-    x = (x * _SM_M2) & _M64
-    x ^= x >> 31
-    return x
+from ..functions.hashing import SM_GAMMA, SM_M1, SM_M2, splitmix64_mix
+from .arrow_kernels import assign_clusters_arrow
 
 
 def seeded_centroids(k: int, dim: int, seed: int = 11) -> list[list[float]]:
@@ -60,45 +47,14 @@ def seeded_centroids(k: int, dim: int, seed: int = 11) -> list[list[float]]:
     cents = []
     for j in range(k):
         raw = [
-            _splitmix(seed, j, d) / float(1 << 63) - 1.0 for d in range(dim)
+            splitmix64_mix(seed * SM_GAMMA + j * SM_M1 + d * SM_M2 + SM_GAMMA)
+            / float(1 << 63)
+            - 1.0
+            for d in range(dim)
         ]
         nrm = sum(x * x for x in raw) ** 0.5
         cents.append([x / nrm for x in raw])
     return cents
-
-
-def _vec(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    return emb.select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-
-
-def _sqdist(vec, centroid: list[float]):
-    """Sequential-fold squared L2 distance against a literal centroid —
-    same accumulation order as the oracle's list_reduce."""
-    c = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(vec, c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-
-
-def _best_expr(centroids: list[list[float]]):
-    """(sqdist, cluster) struct of the nearest centroid; ties break to
-    the lowest cluster id (struct min orders by dist, then cluster)."""
-    return F.array_min(
-        F.array(
-            *[
-                F.struct(
-                    _sqdist(F.col("v"), c).alias("sqdist"),
-                    F.lit(j).alias("cluster"),
-                )
-                for j, c in enumerate(centroids)
-            ]
-        )
-    )
 
 
 def assign_clusters(
@@ -115,8 +71,6 @@ def assign_clusters(
     the JVM F.round. It replaced K x dim interpreted zip_with/aggregate
     folds per row (CodegenFallback). tests/kernel_reference.assign_clusters
     pins its rows."""
-    from .arrow_kernels import assign_clusters_arrow
-
     out = assign_clusters_arrow(emb, centroids, id_col, vec_col)
     return out.select(
         F.col("id").alias(id_col),
@@ -137,8 +91,6 @@ def update_centroids(
     members appear (empty clusters are the driver loop's concern). The
     assignment is assign_clusters' numpy kernel;
     tests/kernel_reference.update_centroids pins the result."""
-    from .arrow_kernels import assign_clusters_arrow
-
     dim = len(centroids[0])
     assigned = assign_clusters_arrow(
         emb, centroids, id_col, vec_col, keep_vec=True
@@ -192,23 +144,25 @@ def kmeans_fit(
 ) -> tuple[list[list[float]], DataFrame, list[float]]:
     """Lloyd's iterations -> (centroids, assignment DF, inertia history).
 
-    Per iteration: one assignment scan (map-only, literal centroids) +
-    one groupBy agg; new centroids (k x dim doubles) collect to the
-    driver and re-inline as literals — the same structure as MLlib's
-    KMeans without the extra library. Deterministic: seeded init,
-    tie-broken argmin, empty clusters retain their previous centroid.
+    Per iteration: one assignment scan (assign_clusters' numpy kernel,
+    map-only) + one groupBy agg; new centroids (k x dim doubles) collect
+    to the driver and go back to the kernel — the same structure as
+    MLlib's KMeans without the extra library. Deterministic: seeded
+    init, tie-broken argmin, empty clusters retain their previous
+    centroid. ``id`` keeps its type. Raises ValueError on an empty
+    frame (no vector to size the centroids by) and, from the kernel,
+    on ragged embeddings.
     """
-    v = _vec(emb, id_col, vec_col).persist()
-    dim = int(v.select(F.size("v").alias("s")).first()["s"])
+    v = emb.select(id_col, vec_col).persist()
+    first = v.select(F.size(vec_col).alias("s")).first()
+    if first is None:
+        v.unpersist()
+        raise ValueError("kmeans_fit needs at least one embedding row")
+    dim = int(first["s"])
     cents = seeded_centroids(k, dim, seed)
     history: list[float] = []
     for _ in range(max_iter):
-        best = _best_expr(cents)
-        assigned = v.select("v", best.alias("b")).select(
-            "v",
-            F.col("b.cluster").alias("cluster"),
-            F.col("b.sqdist").alias("sqdist"),
-        )
+        assigned = assign_clusters_arrow(v, cents, id_col, vec_col, keep_vec=True)
         rows = assigned.groupBy("cluster").agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("sqdist").alias("inertia"),
@@ -248,25 +202,17 @@ def semantic_dedup(
     clusters at 100M+ docs). ``transitive=True`` routes the pairs
     through connected components (operators/graph.py) so chains A~B~C
     collapse to one keeper even when A!~C.
+
+    Assignment is assign_clusters' numpy kernel (``id`` keeps its type;
+    ragged embeddings raise its ValueError); the pair cosine is
+    similarity._cosine.
     """
-    best = _best_expr(centroids)
-    av = (
-        _vec(emb, id_col, vec_col)
-        .select("id", "v", best.alias("b"))
-        .select("id", "v", F.col("b.cluster").alias("cluster"))
-    )
+    from .similarity import _cosine
+
+    av = assign_clusters_arrow(
+        emb, centroids, id_col, vec_col, keep_vec=True
+    ).select("id", "v", "cluster")
     a, b = av.alias("a"), av.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    na = F.sqrt(
-        F.aggregate(F.col("a.v"), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    nb = F.sqrt(
-        F.aggregate(F.col("b.v"), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
     pairs = (
         a.join(
             b,
@@ -276,7 +222,7 @@ def semantic_dedup(
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            (dot / (na * nb)).alias("cosine"),
+            _cosine(F.col("a.v"), F.col("b.v")).alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)
     )

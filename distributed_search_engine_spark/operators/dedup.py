@@ -24,6 +24,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import M64, SM_GAMMA, splitmix64_mix
+
 DEFAULT_SHINGLE_N = 3
 DEFAULT_MINHASHES = 16
 DEFAULT_BANDS = 4
@@ -42,13 +44,9 @@ _MINHASH_SEED = 0x5EED_1A7E_5EED_1A7E
 
 
 def _splitmix64(x: int):
-    mask = (1 << 64) - 1
     while True:
-        x = (x + 0x9E3779B97F4A7C15) & mask
-        z = x
-        z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & mask
-        z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & mask
-        yield z ^ (z >> 31)
+        x = (x + SM_GAMMA) & M64
+        yield splitmix64_mix(x)
 
 
 def minhash_coeffs(n_hashes: int = DEFAULT_MINHASHES) -> list[tuple[int, int]]:
@@ -536,22 +534,16 @@ def auto_n_planes(n_docs: int, target_bucket: int = 64) -> int:
 
 
 def _vec_pairs_cosine(v: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Attach exact cosine to (id_a, id_b) pairs; float64 sequential fold,
-    same accumulation order as the SQL oracle."""
+    """Attach exact cosine to (id_a, id_b) pairs: similarity._cosine, the
+    float64 sequential fold in the SQL oracle's accumulation order."""
+    from .similarity import _cosine
+
     va = v.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
     vb = v.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
-    dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(
-        F.aggregate(F.col(c), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
     return (
         pairs.join(va, "id_a")
         .join(vb, "id_b")
-        .select("id_a", "id_b", (dot / (norm("va") * norm("vb"))).alias("cosine"))
+        .select("id_a", "id_b", _cosine(F.col("va"), F.col("vb")).alias("cosine"))
     )
 
 

@@ -12,11 +12,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import SM_GAMMA, SM_M1, SM_M2, splitmix64_mix
+from .arrow_kernels import _round6_half_up, assign_clusters_arrow, coded_corpus_arrow
+
 N_PLANES = 8
-_M64 = (1 << 64) - 1
-_SM_GAMMA = 0x9E3779B97F4A7C15
-_SM_M1 = 0xBF58476D1CE4E5B9
-_SM_M2 = 0x94D049BB133111EB
 
 
 def _as_double(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -42,13 +41,7 @@ def plane_weight(plane: int, dim: int) -> int:
     multi-band LSH to 2 effective buckets (~N^2/2 candidates at scale).
     Weights reach the SQL oracle as literals from this same function, so
     both engines stay bucket-identical by construction."""
-    x = (plane * _SM_GAMMA + dim * _SM_M1 + _SM_M2) & _M64
-    x ^= x >> 30
-    x = (x * _SM_M1) & _M64
-    x ^= x >> 27
-    x = (x * _SM_M2) & _M64
-    x ^= x >> 31
-    return 1 if x & 1 else -1
+    return 1 if splitmix64_mix(plane * SM_GAMMA + dim * SM_M1 + SM_M2) & 1 else -1
 
 
 def _bucket_expr(vec, n_dims: int, n_planes: int = N_PLANES, plane_offset: int = 0):
@@ -311,10 +304,13 @@ def ann_bruteforce_batch(
 #
 # At 100 TB this is what makes exhaustive re-scan feasible: the coded
 # corpus for 1B vectors x M=8 is 8 GB (cache-resident per executor after
-# one scan) vs 256 GB of raw float32 — and the scan is a map-side
-# projection over literal lookup tables, no shuffle, no UDF. Recall is
-# bounded by quantization error; RECALL.md carries the measured
-# recall@10 vs ann_bruteforce_topk on the gate corpus.
+# one scan) vs 256 GB of raw float32 — the encode is one numpy
+# mapInArrow pass and the scan a map-side projection over literal lookup
+# tables, no shuffle. PQ is IVFADC (below) with one all-zero coarse cell:
+# the residual v - 0.0 is v and the one cell is the one probe, so both
+# share one encoder (arrow_kernels.coded_corpus_arrow) and one scorer
+# (_adc_topk). Recall is bounded by quantization error; RECALL.md carries
+# the measured recall@10 vs ann_bruteforce_topk on the gate corpus.
 # ---------------------------------------------------------------------------
 
 def pq_train(
@@ -350,15 +346,80 @@ def pq_train(
     return books
 
 
-def _sq_l2(av, lit_vals: list[float]):
-    """Squared L2 distance of an array column slice against a literal
-    centroid — zip_with + sequential left-fold, the same accumulation
-    order as the oracle's _fold_sum twin."""
-    lit_arr = F.array(*[F.lit(float(x)) for x in lit_vals])
-    return F.aggregate(
-        F.zip_with(av, lit_arr, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, x: a + x,
+def _zero_cell(codebooks: list[list[list[float]]]) -> list[list[float]]:
+    """The one all-zero coarse cell that makes PQ a one-probe IVFADC."""
+    return [[0.0] * (len(codebooks) * len(codebooks[0][0]))]
+
+
+def _query_vec(emb: DataFrame, query_id: int, id_col: str, vec_col: str) -> list[float]:
+    rows = (
+        _as_double(emb, id_col, vec_col)
+        .where(F.col("id") == query_id)
+        .select("v")
+        .collect()
+    )
+    if not rows:
+        raise ValueError(f"no vector with id {query_id}")
+    return [float(x) for x in rows[0]["v"]]
+
+
+def _adc_topk(
+    coded: DataFrame,
+    coarse_cents: list[list[float]],
+    codebooks: list[list[list[float]]],
+    qv: list[float],
+    query_id: int,
+    k: int,
+    n_probe: int,
+) -> DataFrame:
+    """(id, adc_dist, rank): the one ADC scan, over a coded frame (id,
+    cluster, code_0..) and the query vector on the driver.
+
+    The n_probe nearest coarse cells are the probes (sequential-fold
+    squared L2, the SQL twin's accumulation order; ties -> lower cell).
+    Per (probed cell, subspace) the lookup table is built on the driver
+    — entry j = ||(q - c_cell)_m - B_mj||^2 — and rounded 6dp HALF_UP by
+    _round6_half_up, bit-equal to Spark's round; the tables reach the
+    plan as literals, so the scan joins nothing. adc = CASE over the
+    probed cell of the M lookups, 6dp-rounded before the (adc_dist, id)
+    ordered limit."""
+    import numpy as np
+
+    dsub = len(codebooks[0][0])
+
+    def _fold_sq(xs: list[float], ys: list[float]) -> float:
+        acc = 0.0
+        for a, b in zip(xs, ys):
+            acc += (a - b) * (a - b)
+        return acc
+
+    cents = [[float(x) for x in c] for c in coarse_cents]
+    probes = [
+        c for _, c in sorted((_fold_sq(qv, cv), j) for j, cv in enumerate(cents))[:n_probe]
+    ]
+    adc = None
+    for c in probes:
+        qr = [a - b for a, b in zip(qv, cents[c])]
+        cell_sum = None
+        for m, book in enumerate(codebooks):
+            qsub = qr[m * dsub : (m + 1) * dsub]
+            lut = _round6_half_up(
+                np.array([_fold_sq(qsub, [float(x) for x in cw]) for cw in book])
+            )
+            term = F.element_at(
+                F.array(*[F.lit(float(x)) for x in lut]), F.col(f"code_{m}")
+            )
+            cell_sum = term if cell_sum is None else cell_sum + term
+        in_cell = F.col("cluster") == c
+        adc = F.when(in_cell, cell_sum) if adc is None else adc.when(in_cell, cell_sum)
+
+    scored = coded.where(
+        F.col("cluster").isin(probes) & (F.col("id") != query_id)
+    ).select("id", F.round(adc, 6).alias("adc_dist"))
+    top = scored.orderBy(F.asc("adc_dist"), F.asc("id")).limit(k)
+    w = Window.orderBy(F.asc("adc_dist"), F.asc("id"))
+    return top.withColumn("rank", F.row_number().over(w).cast("int")).select(
+        "id", "adc_dist", "rank"
     )
 
 
@@ -369,20 +430,15 @@ def pq_encode(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, code_0..code_{M-1}): each vector's per-subspace nearest-
-    centroid index (1-based; ties -> lowest index). One map-side
-    projection — every distance is a codegen fold over literals, argmin
-    is array_position(array_min) over the 6dp-ROUNDED distance array
-    (rounding makes the argmin decision identical in the DuckDB twin)."""
-    dsub = len(codebooks[0][0])
-    v = _as_double(emb, id_col, vec_col)
-    cols = [F.col("id")]
-    for m, book in enumerate(codebooks):
-        sub = F.slice(F.col("v"), m * dsub + 1, dsub)
-        darr = F.array(*[F.round(_sq_l2(sub, c), 6) for c in book])
-        cols.append(
-            F.array_position(darr, F.array_min(darr)).cast("int").alias(f"code_{m}")
-        )
-    return v.select(*cols)
+    centroid index (1-based; ties -> lowest index) over the 6dp-ROUNDED
+    distances (rounding makes the argmin decision identical in the
+    DuckDB twin). One map-side numpy pass: arrow_kernels.
+    coded_corpus_arrow against the all-zero coarse cell, whose residual
+    is the vector itself. Ragged embeddings raise the kernel's
+    ValueError."""
+    return coded_corpus_arrow(
+        emb, _zero_cell(codebooks), codebooks, id_col, vec_col
+    ).drop("cluster")
 
 
 def ann_pq_adc_topk(
@@ -394,40 +450,22 @@ def ann_pq_adc_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, adc_dist, rank): approximate L2 top-k via PQ/ADC — encode the
-    corpus (map-side), build the query's per-subspace lookup table (one
-    broadcast 1-row frame carrying M K-entry arrays), approximate
-    distance = sum of M element_at lookups, ordered-limit top-k.
+    corpus (pq_encode's kernel), build the query's per-subspace lookup
+    tables on the driver, approximate distance = sum of M element_at
+    lookups, ordered-limit top-k. It is the IVFADC scorer (_adc_topk)
+    with one all-zero coarse cell and one probe.
 
-    The lookup arrays' entries and the final sum are 6dp-rounded before
-    ranking, so engine order is decided on identical values (ties: id
-    asc). Exactness note: ADC is exact for vectors that coincide with
-    their codeword reconstruction and within-cell-error-bounded
-    otherwise; this is the standard IVFADC building block — compose with
-    ann_ivf_topk's coarse quantizer for the full IVFADC at scale."""
-    dsub = len(codebooks[0][0])
-    coded = pq_encode(emb, codebooks, id_col, vec_col)
-    v = _as_double(emb, id_col, vec_col)
-    lut_cols = []
-    for m, book in enumerate(codebooks):
-        sub = F.slice(F.col("v"), m * dsub + 1, dsub)
-        lut_cols.append(
-            F.array(*[F.round(_sq_l2(sub, c), 6) for c in book]).alias(f"lut_{m}")
-        )
-    q = v.where(F.col("id") == query_id).select(*lut_cols)
-    adc = None
-    for m in range(len(codebooks)):
-        term = F.element_at(F.col(f"lut_{m}"), F.col(f"code_{m}"))
-        adc = term if adc is None else adc + term
-    scored = (
-        coded.where(F.col("id") != query_id)
-        .crossJoin(F.broadcast(q))
-        .select("id", F.round(adc, 6).alias("adc_dist"))
-    )
-    top = scored.orderBy(F.asc("adc_dist"), F.asc("id")).limit(k)
-    w = Window.orderBy(F.asc("adc_dist"), F.asc("id"))
-    return top.withColumn("rank", F.row_number().over(w).cast("int")).select(
-        "id", "adc_dist", "rank"
-    )
+    The lookup entries and the final sum are 6dp-rounded (HALF_UP, as
+    Spark's round) before ranking, so engine order is decided on
+    identical values (ties: id asc). Raises ValueError when no vector
+    has ``query_id`` and, from the kernel, on ragged embeddings.
+    Exactness note: ADC is exact for vectors that coincide with their
+    codeword reconstruction and within-cell-error-bounded otherwise;
+    this is the standard IVFADC building block — ann_ivfadc_topk adds
+    the trained coarse quantizer."""
+    coded = pq_encode(emb, codebooks, id_col, vec_col).withColumn("cluster", F.lit(0))
+    qv = _query_vec(emb, query_id, id_col, vec_col)
+    return _adc_topk(coded, _zero_cell(codebooks), codebooks, qv, query_id, k, n_probe=1)
 
 
 def ann_pq_rerank_topk(
@@ -496,23 +534,19 @@ def residuals(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, r, cluster): each vector's coarse cell (nearest centroid by
-    squared L2, ties -> lowest cell — clustering._best_expr, the gated
-    assignment arithmetic) and its residual v - c_cell, element-wise.
-    Pure map-side projection over literal centroids. DuckDB twin:
-    oracle side computes v[i] - (CENTS)[cluster+1][i] with the identical
-    left-assoc float subtraction."""
-    from .clustering import _best_expr
-
-    v = _as_double(emb, id_col, vec_col)
+    """(id long, r, cluster): each vector's coarse cell (nearest centroid
+    by squared L2, ties -> lowest cell — assign_clusters' numpy kernel,
+    the gated assignment arithmetic) and its residual v - c_cell,
+    element-wise. Map-side only; ragged embeddings raise the kernel's
+    ValueError. DuckDB twin: oracle side computes
+    v[i] - (CENTS)[cluster+1][i] with the identical left-assoc float
+    subtraction."""
     cents_arr = F.array(
         *[F.array(*[F.lit(float(x)) for x in c]) for c in coarse_cents]
     )
-    asg = v.select(
-        "id", "v", _best_expr(coarse_cents)["cluster"].alias("cluster")
-    )
+    asg = assign_clusters_arrow(emb, coarse_cents, id_col, vec_col, keep_vec=True)
     return asg.select(
-        "id",
+        F.col("id").cast("long").alias("id"),
         F.zip_with(
             F.col("v"),
             F.element_at(cents_arr, F.col("cluster") + 1),
@@ -534,90 +568,22 @@ def ann_ivfadc_topk(
 ) -> DataFrame:
     """(id, adc_dist, rank): IVFADC approximate L2 top-k.
 
-    Plan: ONE map-side projection assigns every vector to its coarse
-    cell and PQ-encodes its residual (argmin over 6dp-rounded distance
-    arrays against literal codebooks); the query's n_probe best cells
-    (driver arithmetic mirroring the SQL fold; ties -> lower cell id)
-    prune the scan to candidates in probed cells only; per-cell lookup
-    tables are built from the QUERY row ((q - c_cell) sliced per
-    subspace vs each codeword, 6dp-rounded) and broadcast as one 1-row
-    frame; adc = CASE over the probed cell of the M table lookups,
-    6dp-rounded before the (adc, id) ordered limit.
+    Plan: ONE map-side numpy pass (arrow_kernels.coded_corpus_arrow, the
+    persist_coded_corpus encoder) assigns every vector to its coarse
+    cell and PQ-encodes its residual; the query row is collected and
+    _adc_topk scores the candidates in the query's n_probe best cells
+    against per-cell lookup tables inlined as literals — the scorer
+    ann_ivfadc_from_store and ann_pq_adc_topk use too. Raises ValueError
+    when no vector has ``query_id`` and, from the kernel, on ragged
+    embeddings.
 
     The codebooks MUST be residual-trained (pq_train over
     residuals(emb, coarse_cents)) — that is the IVFADC contract; using
     raw-vector books here collapses recall. Recall vs exact L2 is
     reported in RECALL.md; raise n_probe to trade scan for recall."""
-    dsub = len(codebooks[0][0])
-    n_m = len(codebooks)
-
-    res = residuals(emb, coarse_cents, id_col, vec_col)
-    code_cols = []
-    for m, book in enumerate(codebooks):
-        sub = F.slice(F.col("r"), m * dsub + 1, dsub)
-        darr = F.array(*[F.round(_sq_l2(sub, c), 6) for c in book])
-        code_cols.append(
-            F.array_position(darr, F.array_min(darr)).cast("int").alias(f"code_{m}")
-        )
-    coded = res.select("id", "cluster", *code_cols)
-
-    # query-side probes: sequential-fold squared L2 to every coarse
-    # centroid (the same accumulation order as the SQL twin), ties ->
-    # lower cell id
-    v = _as_double(emb, id_col, vec_col)
-    qv = [float(x) for x in v.where(F.col("id") == query_id).collect()[0]["v"]]
-
-    def _fold_sq(xs: list[float], ys: list[float]) -> float:
-        acc = 0.0
-        for a, b in zip(xs, ys):
-            acc += (a - b) * (a - b)
-        return acc
-
-    probes = [
-        c
-        for _, c in sorted(
-            (( _fold_sq(qv, cv), j) for j, cv in enumerate(coarse_cents))
-        )[:n_probe]
-    ]
-
-    # per-probed-cell LUTs over the query ROW (all rounding in-engine):
-    # rc = (q - c_cell) sliced per subspace, entry j = round(||rc - B_j||^2, 6)
-    q = v.where(F.col("id") == query_id)
-    lut_cols = []
-    for c in probes:
-        for m, book in enumerate(codebooks):
-            lo = m * dsub
-            rc = F.zip_with(
-                F.slice(F.col("v"), lo + 1, dsub),
-                F.array(*[F.lit(float(x)) for x in coarse_cents[c][lo : lo + dsub]]),
-                lambda a, b: a - b,
-            )
-            lut_cols.append(
-                F.array(*[F.round(_sq_l2(rc, cj), 6) for cj in book]).alias(
-                    f"lut_{c}_{m}"
-                )
-            )
-    qlut = q.select(*lut_cols)
-
-    adc = None
-    for c in probes:
-        cell_sum = None
-        for m in range(n_m):
-            term = F.element_at(F.col(f"lut_{c}_{m}"), F.col(f"code_{m}"))
-            cell_sum = term if cell_sum is None else cell_sum + term
-        branch = F.when(F.col("cluster") == c, cell_sum)
-        adc = branch if adc is None else adc.when(F.col("cluster") == c, cell_sum)
-
-    scored = (
-        coded.where(F.col("cluster").isin(probes) & (F.col("id") != query_id))
-        .crossJoin(F.broadcast(qlut))
-        .select("id", F.round(adc, 6).alias("adc_dist"))
-    )
-    top = scored.orderBy(F.asc("adc_dist"), F.asc("id")).limit(k)
-    w = Window.orderBy(F.asc("adc_dist"), F.asc("id"))
-    return top.withColumn("rank", F.row_number().over(w).cast("int")).select(
-        "id", "adc_dist", "rank"
-    )
+    coded = coded_corpus_arrow(emb, coarse_cents, codebooks, id_col, vec_col)
+    qv = _query_vec(emb, query_id, id_col, vec_col)
+    return _adc_topk(coded, coarse_cents, codebooks, qv, query_id, k, n_probe)
 
 
 def persist_coded_corpus(
@@ -639,8 +605,6 @@ def persist_coded_corpus(
     (arrow_kernels.coded_corpus_arrow), replacing ~2k interpreted
     zip_with/aggregate folds per row; tests/kernel_reference.coded_corpus
     and the ann_ivfadc oracle gate pin the codes."""
-    from .arrow_kernels import coded_corpus_arrow
-
     coded = coded_corpus_arrow(emb, coarse_cents, codebooks, id_col, vec_col)
     (
         coded
@@ -670,58 +634,16 @@ def ann_ivfadc_from_store(
     lands in the parquet scan's PartitionFilters, so Spark LISTS only
     the n_probe probed `cluster=` directories — the scan is
     partition-pruned, not filtered after read (plan-asserted in tests).
-    Same arithmetic as ann_ivfadc_topk; the query vector arrives as a
-    literal (serving-path shape: the query never scans the corpus)."""
-    dsub = len(codebooks[0][0])
+    The scorer is ann_ivfadc_topk's (_adc_topk), so both return the same
+    rows; the query vector arrives as a literal (serving-path shape: the
+    query never scans the corpus)."""
     n_m = len(codebooks)
-    qv = [float(x) for x in query_vec]
-
-    def _fold_sq(xs: list[float], ys: list[float]) -> float:
-        acc = 0.0
-        for a, b in zip(xs, ys):
-            acc += (a - b) * (a - b)
-        return acc
-
-    probes = [
-        c
-        for _, c in sorted(
-            ((_fold_sq(qv, cv), j) for j, cv in enumerate(coarse_cents))
-        )[:n_probe]
-    ]
-    # LUTs are plain Python here (query vector is driver-side in the
-    # serving path); entries mirror the in-engine fold exactly —
-    # sequential accumulation, 6dp round
-    luts = {}
-    for c in probes:
-        qr = [a - b for a, b in zip(qv, coarse_cents[c])]
-        for m, book in enumerate(codebooks):
-            qsub = qr[m * dsub : (m + 1) * dsub]
-            luts[(c, m)] = [round(_fold_sq(qsub, cj), 6) for cj in book]
-
     # the writer's fixed schema: a zero-row store holds no parquet file
     # to infer it from
     schema = "id long, " + ", ".join(f"code_{m} int" for m in range(n_m)) + ", cluster int"
-    coded = spark.read.schema(schema).parquet(store_path).where(
-        F.col("cluster").isin(probes) & (F.col("id") != query_id)
-    )
-    adc = None
-    for c in probes:
-        cell_sum = None
-        for m in range(n_m):
-            lut_arr = F.array(*[F.lit(x) for x in luts[(c, m)]])
-            term = F.element_at(lut_arr, F.col(f"code_{m}"))
-            cell_sum = term if cell_sum is None else cell_sum + term
-        if adc is None:
-            adc = F.when(F.col("cluster") == c, cell_sum)
-        else:
-            adc = adc.when(F.col("cluster") == c, cell_sum)
-
-    scored = coded.select("id", F.round(adc, 6).alias("adc_dist"))
-    top = scored.orderBy(F.asc("adc_dist"), F.asc("id")).limit(k)
-    w = Window.orderBy(F.asc("adc_dist"), F.asc("id"))
-    return top.withColumn("rank", F.row_number().over(w).cast("int")).select(
-        "id", "adc_dist", "rank"
-    )
+    coded = spark.read.schema(schema).parquet(store_path)
+    qv = [float(x) for x in query_vec]
+    return _adc_topk(coded, coarse_cents, codebooks, qv, query_id, k, n_probe)
 
 
 def mmr_rerank(

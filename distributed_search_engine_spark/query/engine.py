@@ -73,14 +73,14 @@ class SearchIndex:
     postings_for_terms: object | None = None  # Callable[[list[str]], DataFrame]
     _avgdl: float | None = field(default=None, repr=False)
     # opt-in driver-side vocabulary, filled by cache_term_dict(): stem ->
-    # [terms] for the related-words expansion, term -> (idf, is_stop) for
-    # reference-mode scoring, and (registered in query/suggest.py for the
-    # term_stats frame) the sorted looksReasonable term list. With them a
-    # query plans with no Spark job (no related-words collect), its idf
-    # values are inlined into the scoring statement (no term_stats join), a
-    # query of unknown terms returns an empty local relation, and
-    # autocomplete / spellcheck_query on ``term_stats`` answer on the driver
-    # with no job. Only cache when the vocabulary fits the driver (the
+    # [terms] for the related-words expansion, term -> (idf, is_stop,
+    # idf_bm25) for reference- and BM25-mode scoring, and (registered in
+    # query/suggest.py for the term_stats frame) the sorted looksReasonable
+    # term list. With them a query plans with no Spark job (no
+    # related-words collect), its idf values are inlined into the scoring
+    # statement (no term_stats join), a query of unknown terms returns an
+    # empty local relation, and autocomplete / spellcheck_query on
+    # ``term_stats`` answer on the driver with no job. Only cache when the vocabulary fits the driver (the
     # reference holds its whole term dictionary in frontend memory,
     # SearchEngine.java:893-923 — same tradeoff); leave it uncached at web
     # scale and every lookup stays distributed.
@@ -90,17 +90,19 @@ class SearchIndex:
     def cache_term_dict(self) -> "SearchIndex":
         """Collect the vocabulary once for repeated-query workloads (bench /
         interactive frontends): the (stem -> terms) and (term -> idf,
-        is_stop) maps, and, from the same term_stats rows, the driver
-        dictionary that autocomplete and spellcheck_query use for this
-        ``term_stats`` frame for as long as it lives."""
+        is_stop, idf_bm25) maps, and, from the same term_stats rows, the
+        driver dictionary that autocomplete and spellcheck_query use for
+        this ``term_stats`` frame for as long as it lives."""
         from .suggest import register_vocabulary
 
         out: dict[str, list[str]] = {}
         for r in self.term_dict.select("stem", "term").collect():
             out.setdefault(r["stem"], []).append(r["term"])
         self._stem_map = out
-        rows = self.term_stats.select("term", "idf", "is_stop").collect()
-        self._term_stats = {r["term"]: (r["idf"], r["is_stop"]) for r in rows}
+        rows = self.term_stats.select("term", "idf", "is_stop", "idf_bm25").collect()
+        self._term_stats = {
+            r["term"]: (r["idf"], r["is_stop"], r["idf_bm25"]) for r in rows
+        }
         register_vocabulary(self.term_stats, [r["term"] for r in rows])
         return self
 
@@ -513,7 +515,7 @@ def _reference_frame(
                 b = ", ".join(map(str, hits.get(t, [])))
                 fields += f", 'b', {f'array({b})' if b else 'CAST(NULL AS ARRAY<INT>)'}"
             if inline_stats:
-                i, s = known[t]
+                i, s, _ = known[t]
                 fields += f", 'i', {_sql_double(i)}, 's', {str(bool(s)).lower()}"
             entries.setdefault(t, []).append(f"named_struct({fields})")
     exp_map = _sql_map([(t, f"array({', '.join(e)})") for t, e in entries.items()])
@@ -652,6 +654,27 @@ SELECT {head}doc_id, {score} AS score, tfidf, pagerank, title FROM (
         return spark.sql(sql)
 
 
+def _bm25_postings(index: SearchIndex, terms: list[str]) -> DataFrame:
+    """The posting rows of ``terms`` with their idf_bm25: carried by the
+    rows (segments), else inlined from the cache_term_dict() driver map
+    as a literal (no Spark job, as reference mode inlines idf), else from
+    a broadcast term_stats join. Rows of a term without stats drop out
+    on every path, as they do in the join."""
+    rows = index.lookup_postings(terms)
+    if "idf_bm25" in rows.columns:
+        return rows
+    known = index._term_stats
+    if known is None:
+        return rows.join(
+            F.broadcast(index.term_stats.select("term", "idf_bm25")), "term"
+        )
+    idf = [(t, _sql_double(known[t][2])) for t in dict.fromkeys(terms) if t in known]
+    idf_map = F.expr(f"CAST({_sql_map(idf)} AS MAP<STRING, DOUBLE>)")  # typed if empty
+    return rows.where(F.col("term").isin([t for t, _ in idf])).withColumn(
+        "idf_bm25", F.element_at(idf_map, F.col("term"))
+    )
+
+
 def _bm25_scores(
     spark: SparkSession,
     index: SearchIndex,
@@ -676,12 +699,8 @@ def _bm25_scores(
         for t, o, p in expansion:
             entries.setdefault(t, []).append(f"named_struct({key}'o', {slot[o]}, 'p', {p})")
     exp_map = F.expr(_sql_map([(t, f"array({', '.join(e)})") for t, e in entries.items()]))
-    base = index.lookup_postings(list(entries))
+    base = _bm25_postings(index, list(entries))
     cand = base.select("*", F.explode(F.element_at(exp_map, F.col("term"))).alias("x"))
-    if "idf_bm25" not in base.columns:
-        cand = cand.join(
-            F.broadcast(index.term_stats.select("term", "idf_bm25")), "term"
-        )
     best = [
         F.min(
             F.when(
@@ -734,9 +753,10 @@ def search_bm25_batch(
     scoring is one partial-aggregated groupBy, and top-k is a window
     PARTITIONED by query (bounded per query — never global) over the
     6dp-rounded score. Scores carry no PageRank blend. On a cached index
-    the set costs 4 Spark jobs whatever its size (term_stats broadcast,
-    scoring shuffle, window shuffle, result); ``search(mode="bm25")``
-    costs the same 4 for one query.
+    the set costs 3 Spark jobs whatever its size (scoring shuffle, window
+    shuffle, result: idf_bm25 is inlined from the cached term dict, see
+    _bm25_postings); ``search(mode="bm25")`` costs the same 3 for one
+    query.
 
     Queries that tokenize to nothing or to a lone stop word contribute no
     rows (Q2 short-circuit)."""
@@ -1319,17 +1339,11 @@ def search_rm3(
     rounding points."""
     avgdl = index.avgdl or 1.0
 
-    def bm25_contrib(p: DataFrame) -> DataFrame:
+    def bm25_contrib(lookup: list[str]) -> DataFrame:
         denom = F.col("tf") + BM25_K1 * (
             1.0 - BM25_B + BM25_B * F.col("doc_len") / F.lit(avgdl)
         )
-        out = p
-        if "idf_bm25" not in p.columns:
-            out = out.join(
-                F.broadcast(index.term_stats.select("term", "idf_bm25")),
-                "term",
-            )
-        return out.select(
+        return _bm25_postings(index, lookup).select(
             "term",
             "doc_id",
             (
@@ -1338,7 +1352,7 @@ def search_rm3(
         )
 
     first = (
-        bm25_contrib(index.lookup_postings(sorted(set(terms))))
+        bm25_contrib(sorted(set(terms)))
         .groupBy("doc_id")
         .agg(F.round(F.sum("contrib"), 6).alias("s6"))
     )
@@ -1370,13 +1384,9 @@ def search_rm3(
     exp_df = local_frame(
         spark, "term string, wn double", [(r["term"], r["w"] / wsum) for r in exp_rows]
     )
-    orig = bm25_contrib(
-        index.lookup_postings(sorted(set(terms)))
-    ).select("doc_id", "contrib")
+    orig = bm25_contrib(sorted(set(terms))).select("doc_id", "contrib")
     expn = (
-        bm25_contrib(
-            index.lookup_postings(sorted(r["term"] for r in exp_rows))
-        )
+        bm25_contrib(sorted(r["term"] for r in exp_rows))
         .join(F.broadcast(exp_df), "term")
         .select(
             "doc_id",
@@ -1404,10 +1414,10 @@ def explain_bm25(
 
     Terms are used stem-fixpoint as given (no expansion — explain shows
     the scorer, not the query rewriter; run expand_terms separately to
-    audit the rewrite). Plan: one pruned postings lookup + broadcast
-    term-stats join + a per-doc window sum (bounded by query length per
-    doc). All numeric outputs 6dp-rounded in-engine so the breakdown is
-    hash-stable across engines.
+    audit the rewrite). Plan: one pruned postings lookup with its
+    idf_bm25 (_bm25_postings) + a per-doc window sum (bounded by query
+    length per doc). All numeric outputs 6dp-rounded in-engine so the
+    breakdown is hash-stable across engines.
     """
     terms = tokenize_query(query_text)
     if not terms:
@@ -1417,11 +1427,7 @@ def explain_bm25(
             "idf_bm25 double, contrib double, score double",
         )
     avgdl = index.avgdl or 1.0
-    base = index.lookup_postings(sorted(set(terms)))
-    if "idf_bm25" not in base.columns:
-        base = base.join(
-            F.broadcast(index.term_stats.select("term", "idf_bm25")), "term"
-        )
+    base = _bm25_postings(index, sorted(set(terms)))
     tf = F.col("tf").cast("double")
     dl = F.col("doc_len").cast("double")
     denom = tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / F.lit(avgdl))

@@ -202,6 +202,40 @@ def assign_clusters(vecs, cents):
     return sorted(out)
 
 
+def residuals(vecs, cents):
+    """(id, residual v - c_cell, cell) with the cell of assign_clusters."""
+    out = []
+    for vid, v in vecs:
+        j, _ = _nearest(v, cents)
+        out.append((vid, [x - c for x, c in zip(v, cents[j])], j))
+    return sorted(out)
+
+
+def semantic_dedup(vecs, cents, threshold):
+    """Ids that survive keep-lowest-id SemDeDup: a vector goes when a
+    lower-id vector of its cell has cosine >= threshold with it (cosine =
+    sequential-fold dot / (sqrt(|a|^2) * sqrt(|b|^2)))."""
+
+    def fold(xs):
+        acc = 0.0
+        for x in xs:
+            acc += x
+        return acc
+
+    cells = [(vid, v, _nearest(v, cents)[0]) for vid, v in vecs]
+    losers = set()
+    for ia, va, ca in cells:
+        for ib, vb, cb in cells:
+            if ca != cb or not ia < ib:
+                continue
+            dot = fold(x * y for x, y in zip(va, vb))
+            na = math.sqrt(fold(x * x for x in va))
+            nb = math.sqrt(fold(y * y for y in vb))
+            if dot / (na * nb) >= threshold:
+                losers.add(ib)
+    return sorted(vid for vid, _ in vecs if vid not in losers)
+
+
 def update_centroids(vecs, cents):
     """(cluster, n, c0..c{dim-1}): member count and per-coordinate mean
     (exact sum / n, rounded to 6 decimals) of each non-empty cluster."""

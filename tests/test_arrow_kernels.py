@@ -155,9 +155,14 @@ def _vecs(df):
     return [(r[0], list(r[1])) for r in df.collect()]
 
 
-def _vec_variants(spark, kvecs):
-    """The vectors as given, over 16 partitions, and with no rows."""
+def _vec_variants(spark, kvecs, string_ids=False):
+    """The vectors as given, over 16 partitions, and with no rows; with
+    ``string_ids`` also with the ids as strings."""
     yield "as given", kvecs
+    if string_ids:
+        yield "string ids", kvecs.select(
+            F.concat(F.lit("v"), F.col("vec_id")).alias("vec_id"), "embedding"
+        )
     yield "16 partitions", kvecs.repartition(16)
     yield "no rows", spark.createDataFrame([], kvecs.schema)
 
@@ -285,3 +290,78 @@ def test_assign_clusters_kernel_keeps_string_ids(spark, kvecs):
     assert _rows(update_centroids(svecs, cents)) == _rows(
         update_centroids(kvecs, cents)
     )
+
+
+# ---------------------------------------------------------------------------
+# the kernel's other callers: k-means to convergence, SemDeDup, residuals
+# ---------------------------------------------------------------------------
+
+
+def test_kmeans_fit_assigns_through_the_kernel(spark, kvecs):
+    from distributed_search_engine_spark.operators.clustering import kmeans_fit
+
+    fits = {}
+    for name, df in _vec_variants(spark, kvecs, string_ids=True):
+        if name == "no rows":
+            with pytest.raises(ValueError, match="at least one"):
+                kmeans_fit(df, 4, max_iter=3, seed=5)
+            continue
+        cents, assignment, history = kmeans_fit(df, 4, max_iter=3, seed=5)
+        assert _rows(assignment) == R.assign_clusters(_vecs(df), cents), name
+        assert len(history) == 3 and history == sorted(history, reverse=True), name
+        fits[name] = cents
+    # ids do not enter the fit
+    assert fits["string ids"] == fits["as given"]
+
+
+def test_semantic_dedup_assigns_through_the_kernel(spark, kvecs):
+    from distributed_search_engine_spark.operators.clustering import (
+        seeded_centroids,
+        semantic_dedup,
+    )
+
+    cents = seeded_centroids(4, 16, seed=5)
+    for name, df in _vec_variants(spark, kvecs, string_ids=True):
+        got = semantic_dedup(df, cents, threshold=0.6)
+        assert got.schema["vec_id"].dataType == df.schema["vec_id"].dataType, name
+        want = R.semantic_dedup(_vecs(df), cents, 0.6)
+        assert sorted(r["vec_id"] for r in got.collect()) == want, name
+        assert name == "no rows" or len(want) < 800, name  # something goes
+
+
+def test_residuals_assign_through_the_kernel(spark, kvecs):
+    from distributed_search_engine_spark.operators.clustering import (
+        seeded_centroids,
+    )
+    from distributed_search_engine_spark.operators.similarity import residuals
+
+    cents = seeded_centroids(4, 16, seed=5)
+    for name, df in _vec_variants(spark, kvecs):
+        got = residuals(df, cents)
+        assert got.schema.simpleString() == (
+            "struct<id:bigint,r:array<double>,cluster:int>"
+        ), name
+        rows = sorted((r["id"], list(r["r"]), r["cluster"]) for r in got.collect())
+        assert rows == R.residuals(_vecs(df), cents), name
+
+
+def test_ragged_embeddings_raise_in_every_kernel_caller(spark):
+    from distributed_search_engine_spark.operators import clustering as C
+    from distributed_search_engine_spark.operators import similarity as S
+
+    ragged = spark.createDataFrame(
+        [(0, [0.0, 1.0]), (1, [1.0, 0.0, 2.0])], "vec_id long, embedding array<double>"
+    )
+    cents, books = [[0.0, 0.0], [1.0, 1.0]], [[[0.0, 0.0], [1.0, 1.0]]]
+    calls = {
+        "assign_clusters": lambda: C.assign_clusters(ragged, cents).collect(),
+        "kmeans_fit": lambda: C.kmeans_fit(ragged, 2, max_iter=1),
+        "semantic_dedup": lambda: C.semantic_dedup(ragged, cents).collect(),
+        "residuals": lambda: S.residuals(ragged, cents).collect(),
+        "pq_encode": lambda: S.pq_encode(ragged, books).collect(),
+        "ann_pq_adc_topk": lambda: S.ann_pq_adc_topk(ragged, books).collect(),
+        "ann_ivfadc_topk": lambda: S.ann_ivfadc_topk(ragged, cents, books).collect(),
+    }
+    for name, call in calls.items():
+        with pytest.raises(Exception, match="not uniformly sized"):
+            call()

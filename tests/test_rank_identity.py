@@ -182,9 +182,9 @@ def three_sources(spark, setup, tmp_path_factory):
     return {"uncached": sidx, "cached": cached, "segments": segged}, corpus
 
 
-def _full_frame(spark, sidx, query):
+def _full_frame(spark, sidx, query, mode="reference"):
     return sorted(
-        tuple(r) for r in search(spark, sidx, query, k=None, mode="reference").collect()
+        tuple(r) for r in search(spark, sidx, query, k=None, mode=mode).collect()
     )
 
 
@@ -208,6 +208,11 @@ def test_idf_sources_give_the_same_frame(spark, three_sources, query):
             for r in search(spark, sources[name], query, k=1000, mode="reference").collect()
         ]
         assert ranked == [d for d, _ in naive_search(corpus, query, k=1000)], (name, query)
+    # BM25 takes idf_bm25 from the same three sources: the join, the
+    # inlined driver map, the segment rows
+    bm25 = {name: _full_frame(spark, s, query, mode="bm25") for name, s in sources.items()}
+    for name, got in bm25.items():
+        assert got == bm25["uncached"], (name, query)
 
 
 def _collect_jobs(spark, df, group):
@@ -297,7 +302,8 @@ def test_batch_and_single_query_job_counts(spark, served_index):
     costs no more Spark jobs than a single query: five reference queries
     (one-term, multi-term, phrase) run no more jobs than one multi-term
     search(), and search(mode="bm25") no more than a batch of its one
-    query."""
+    query. BM25 on the cached index inlines idf_bm25 from the driver map
+    (no term_stats broadcast): 3 jobs each."""
     from distributed_search_engine_spark.query.engine import (
         search_bm25_batch,
         search_reference_batch,
@@ -326,3 +332,4 @@ def test_batch_and_single_query_job_counts(spark, served_index):
     )
     assert rows
     assert single <= batch, (single, batch)
+    assert (single, batch) == (3, 3), (single, batch)

@@ -207,12 +207,11 @@ def test_pq_adc_matches_hand_lookup(pq_emb):
 def test_pq_adc_plan_is_broadcast_no_shuffle_scan(pq_emb):
     books = [[[0.0, 0.0], [5.0, 5.0]], [[10.0, 10.0], [0.0, 0.0]]]
     plan = plan_of(S.ann_pq_adc_topk(pq_emb, books, query_id=0, k=3))
-    # the only join is the broadcast of the 1-row query lut frame; the
+    # the query's lookup tables are literals in the scan's projection, so
+    # the plan joins nothing (no broadcast of a lut frame either); the
     # corpus side is scanned exactly once, map-side
-    assert "CartesianProduct" not in plan
-    # formatted explain prints each node twice (tree + detail section)
-    assert plan.count("(9) BroadcastExchange") <= 1 and "BroadcastExchange" in plan
-    assert "SortMergeJoin" not in plan
+    assert "Join" not in plan and "CartesianProduct" not in plan
+    assert "BroadcastExchange" not in plan
 
 
 # ---------------------------------------------------------------------------
@@ -371,9 +370,7 @@ def test_ivfadc_store_partition_pruned_probe(spark, ivfadc_fixture, tmp_path):
     inmem = S.ann_ivfadc_topk(emb, coarse, books, query_id=0, k=5, n_probe=1)
     got = [(r["id"], r["adc_dist"]) for r in served.collect()]
     want = [(r["id"], r["adc_dist"]) for r in inmem.collect()]
-    assert [g[0] for g in got] == [w[0] for w in want]
-    for g, w in zip(got, want):
-        assert g[1] == pytest.approx(w[1], abs=1e-6)
+    assert got == want
 
     # the cluster filter must land in the scan's PartitionFilters (the
     # probe LISTS only the probed cluster= directories) — not a
@@ -386,6 +383,26 @@ def test_ivfadc_store_partition_pruned_probe(spark, ivfadc_fixture, tmp_path):
     empty = str(tmp_path / "ivfadc_empty")
     S.persist_coded_corpus(emb.limit(0), coarse, books, empty)
     assert S.ann_ivfadc_from_store(spark, empty, coarse, books, qv, k=5).collect() == []
+
+
+def test_ivfadc_store_and_in_memory_round_luts_alike(spark, tmp_path):
+    """A lookup entry on a HALF_UP boundary: ||q - 0||^2 = 2.45e-05 for
+    q = (0.0007, 0.0049). Spark's round takes it to 2.5e-05, Python's
+    round to 2.4e-05; the store and in-memory paths share one scorer, so
+    both answer 2.5e-05."""
+    emb = spark.createDataFrame(
+        [(0, [0.0007, 0.0049]), (1, [0.0, 0.0]), (2, [1.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    coarse, books = [[0.0, 0.0]], [[[0.0, 0.0], [1.0, 1.0]]]
+    store = str(tmp_path / "ivfadc_boundary")
+    S.persist_coded_corpus(emb, coarse, books, store)
+    served = S.ann_ivfadc_from_store(
+        spark, store, coarse, books, [0.0007, 0.0049], query_id=0, k=5, n_probe=1
+    ).collect()
+    inmem = S.ann_ivfadc_topk(emb, coarse, books, query_id=0, k=5, n_probe=1).collect()
+    assert [tuple(r) for r in served] == [tuple(r) for r in inmem]
+    assert (served[0]["id"], served[0]["adc_dist"]) == (1, 2.5e-05)
 
 
 # ---------------------------------------------------------------------------
