@@ -742,3 +742,39 @@ def trigram_postings_arrow(
 
     out_schema = f"doc_id {docs.schema[doc_id_col].dataType.simpleString()}, trigram string"
     return sel.mapInArrow(_kernel, schema=out_schema)
+
+
+# ---------------------------------------------------------------------------
+# title arrays: the Q11 title-boost inputs of query/engine's doc meta
+# ---------------------------------------------------------------------------
+
+
+def title_arrays_arrow(df: DataFrame, title_col: str = "title") -> DataFrame:
+    """``df``'s columns with their types, plus ``title_toks``, the
+    ``tokenize_py`` tokens of ``title_col``, and ``title_stems``, their
+    ``porter_stem`` stems (both array<string>; a NULL title has none).
+    Titles are at most 200 chars (title_col), so each is tokenized in
+    Python: the query-side tokenizer exactly, unicode whitespace
+    included, where the RE2 chain of _flat_tokens splits on ASCII
+    whitespace only."""
+    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+
+    arrays = ["title_toks", "title_stems"]
+    schema = StructType(
+        df.schema.fields + [StructField(a, ArrayType(StringType())) for a in arrays]
+    )
+
+    def _kernel(batch_iter):
+        import pyarrow as pa
+
+        from ..functions.stemmer import porter_stem
+
+        for batch in batch_iter:
+            toks = [T.tokenize_py(t or "") for t in batch.column(title_col).to_pylist()]
+            stems = [[porter_stem(w) for w in ts] for ts in toks]
+            yield pa.RecordBatch.from_arrays(
+                batch.columns + [pa.array(v, type=pa.list_(pa.string())) for v in (toks, stems)],
+                names=batch.schema.names + arrays,
+            )
+
+    return df.mapInArrow(_kernel, schema=schema)

@@ -24,6 +24,15 @@ merge and the matched-boost count; everything after it touches only
 candidate docs. With one query the key is a constant and that groupBy is
 the plan's one shuffle, keyed by doc_id.
 
+Titles, ranks and the Q11 title-boost inputs come from one per-index
+doc-meta frame, ``SearchIndex.doc_meta`` (doc_id, title, rank, title_toks,
+title_stems): one row per doc, built on first use and pinned by an eager
+local checkpoint, so no query plans the corpus or PageRank lineage. The
+title boost is SQL over its token arrays, so no query path runs a Python
+worker. The checkpoint's blocks live on the executors: after an executor
+is lost, the next query fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``
+until the ``SearchIndex`` is rebuilt.
+
 Deterministic tie-break: (score desc, doc_id asc); the reference leaves ties
 unspecified (SearchEngine.java:616, HashMap order) — SURVEY §4 item 5.
 """
@@ -62,7 +71,14 @@ class SearchIndex:
     terms instead of the whole postings table — the 100x-scale requirement
     for reference-mode queries. Rows it returns may carry idf/idf_bm25/
     is_stop already (segments store them); the term_stats join is then
-    skipped."""
+    skipped.
+
+    ``doc_meta`` is built from ``doc_stats`` and ``ranks`` on the first
+    query and held for the index's life: one row per doc (doc_id, title,
+    rank, title_toks, title_stems), in executor memory as a local
+    checkpoint. Executor loss drops it, and every later query fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` until the ``SearchIndex`` is
+    rebuilt."""
 
     postings: DataFrame | None
     term_stats: DataFrame
@@ -72,6 +88,7 @@ class SearchIndex:
     ranks: DataFrame | None = None  # (doc_id, rank)
     postings_for_terms: object | None = None  # Callable[[list[str]], DataFrame]
     _avgdl: float | None = field(default=None, repr=False)
+    _doc_meta: DataFrame | None = field(default=None, repr=False)
     # opt-in driver-side vocabulary, filled by cache_term_dict(): stem ->
     # [terms] for the related-words expansion, term -> (idf, is_stop,
     # idf_bm25) for reference- and BM25-mode scoring, and (registered in
@@ -122,6 +139,28 @@ class SearchIndex:
             row = self.doc_stats.agg(F.avg("doc_len").alias("a")).collect()[0]
             self._avgdl = float(row["a"] or 0.0)
         return self._avgdl
+
+    @property
+    def doc_meta(self) -> DataFrame:
+        """(doc_id, title, rank, title_toks, title_stems): doc_stats UNION
+        ALL ranks folded to one row per doc_id (max title, max rank), so a
+        ranked doc missing from doc_stats keeps its rank; the title arrays
+        are arrow_kernels.title_arrays_arrow's."""
+        if self._doc_meta is None:
+            from ..operators.arrow_kernels import title_arrays_arrow
+
+            meta = self.doc_stats.select(
+                "doc_id", "title", F.lit(None).cast("double").alias("rank")
+            )
+            if self.ranks is not None:
+                meta = meta.union(
+                    self.ranks.select("doc_id", F.lit(None).cast("string"), "rank")
+                )
+            folded = meta.groupBy("doc_id").agg(
+                F.max("title").alias("title"), F.max("rank").alias("rank")
+            )
+            self._doc_meta = title_arrays_arrow(folded).localCheckpoint(eager=True)
+        return self._doc_meta
 
 
 def tokenize_query(query: str) -> list[str]:
@@ -202,70 +241,7 @@ def _related_words(index: SearchIndex, stems: set[str]) -> dict[str, list[str]]:
     return out
 
 
-def title_boost_py(title: str, search_terms: list[str]) -> float:
-    """Q11 (SearchEngine.java:679-799) — exact port of getTitleBoost."""
-    if not title or not search_terms:
-        return 1.0
-    title_tokens = tokenize_py(title)
-    if not title_tokens:
-        return 1.0
-    title_stems = [porter_stem(t) for t in title_tokens]
-    term_positions: dict[str, list[int]] = {}
-    for term in search_terms:
-        positions = [j for j, tt in enumerate(title_tokens) if tt == term]
-        stem = porter_stem(term)
-        if stem:
-            for j, ts in enumerate(title_stems):
-                if ts == stem and j not in positions:
-                    positions.append(j)
-        if positions:
-            term_positions[term] = positions
-    if not term_positions:
-        return 1.0
-    matching = len(term_positions)
-    n = len(search_terms)
-
-    def in_order() -> bool:
-        if n < 2:
-            return False
-        earliest = []
-        for term in search_terms:
-            pos = term_positions.get(term)
-            if not pos:
-                return False
-            earliest.append(min(pos))
-        return all(earliest[i] < earliest[i + 1] for i in range(len(earliest) - 1))
-
-    if n == 1 and matching == 1:
-        pos = term_positions.get(search_terms[0], [])
-        if pos:
-            if 0 in pos:
-                return 3.5
-            if any(p < 3 for p in pos):
-                return 2.5
-            return 2.0
-    if n > 1 and matching == n:
-        ordered = in_order()
-        all_early = all(
-            any(p < 4 for p in term_positions.get(t, [])) for t in search_terms
-        )
-        if ordered and all_early:
-            return 4.0
-        if ordered:
-            return 3.0
-        if all_early:
-            return 2.5
-        return 2.0
-    base = 1.0 + 0.2 * matching
-    if in_order():
-        return base * (1.85 if matching == n else 1.30)
-    return base
-
-
 REFERENCE_SCHEMA = "doc_id string, score double, tfidf double, pagerank double, title string"
-TITLE_BOOST_UDF = "dse_title_boost"
-# session -> True once the title-boost UDF is registered in it
-_TITLE_BOOST_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 # index frame -> the temp-view name it is registered under (see _index_view)
 _INDEX_VIEWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _REGISTRY_LOCK = threading.Lock()
@@ -339,26 +315,6 @@ def _query_view(spark: SparkSession, df: DataFrame):
         yield name
     finally:
         _drop_view(spark, name)
-
-
-def _register_title_boost(spark: SparkSession) -> None:
-    """Session-scoped pandas UDF (title, query terms) -> Q11 boost; the
-    query terms are an argument, so one registration serves every query."""
-    with _REGISTRY_LOCK:
-        if spark in _TITLE_BOOST_SESSIONS:
-            return
-        import pandas as pd
-        from pyspark.sql.types import DoubleType
-
-        # no type hints: `pd` is function-local, so postponed-evaluation
-        # string annotations would not resolve in pandas_udf's inference
-        def _tboost(titles, terms):
-            return pd.Series(
-                [title_boost_py(t or "", list(ts)) for t, ts in zip(titles, terms)]
-            )
-
-        spark.udf.register(TITLE_BOOST_UDF, F.pandas_udf(_tboost, DoubleType()))
-        _TITLE_BOOST_SESSIONS[spark] = True
 
 
 def search(
@@ -439,7 +395,11 @@ def _reference_frame(
 ) -> DataFrame | None:
     """Reference mode (Q5-Q12) for parsed queries, keyed by query:
     ([query,] doc_id, score, tfidf, pagerank, title), or None when no query
-    can score. ``k`` is ``search``'s top-k (see ``_blend``).
+    can score. With ``k`` it is the top-k of each query: ``search``'s
+    ordered limit (see ``_blend``), or with ``batch`` the per-query window
+    of ``_top_k_per_query`` plus a rank column. A ranked batch distributes
+    the exploded postings by query, so the scoring group, the blend and
+    the window share that one exchange.
 
     The postings of every query's expanded and matched-boost terms are
     scanned once. An inlined map literal sends each term to its
@@ -452,10 +412,8 @@ def _reference_frame(
     and title-boost terms are per-query map literals; with one query
     (``batch=False``) the key is a constant, every lookup folds to a
     literal and the one shuffle is keyed by doc_id. The plan is written
-    as two statements, the scoring core and the blend (``_blend``):
-    analysis iterates to a fixed point over the whole tree, and the ranks
-    and doc_stats lineages are far deeper than the postings', so one
-    statement took ~1.5x longer to plan."""
+    as two statements, the scoring core and the blend (``_blend``, which
+    BM25 mode shares)."""
     known = index._term_stats
     queries = []
     for text, terms, expansion in parsed:
@@ -579,11 +537,11 @@ def _reference_frame(
         score = tiers if len(boosted) == len(queries) else f"IF({n} IS NULL, {score}, {tiers})"
     # Q11 title boost
     title_terms = _per_query(
-        {text: f"array({', '.join(map(_sql_str, terms))})" for text, terms, *_ in queries},
-        batch,
+        {text: _title_terms(terms) for text, terms, *_ in queries}, batch
     ) if use_title_boost else None
 
     key = "p.x.q AS query, " if batch else ""
+    by_query = " DISTRIBUTE BY x.q" if batch and k is not None else ""
     with contextlib.ExitStack() as views:
         if plain:
             p = _index_view(postings)
@@ -599,12 +557,49 @@ SELECT {"query, " if batch else ""}doc_id, {tfidf} AS tfidf{", matched" if boost
 FROM (
   SELECT {key}p.doc_id, {", ".join(aggs)}
   FROM (
-    SELECT *, explode(element_at({exp_map}, term)) AS x FROM {p}{term_filter}
+    SELECT *, explode(element_at({exp_map}, term)) AS x FROM {p}{term_filter}{by_query}
   ) p {stats_join}
   GROUP BY {"p.x.q, " if batch else ""}p.doc_id
 )
 WHERE {" AND ".join(where)}""")
-    return _blend(spark, index, core, score, title_terms, k)
+    if not batch:
+        return _blend(spark, index, core, score, title_terms, k)
+    out = _blend(spark, index, core, score, title_terms)
+    return out if k is None else _top_k_per_query(out, k)
+
+
+def _title_terms(terms: list[str]) -> str:
+    """SQL struct of one query's Q11 inputs: its distinct search terms
+    ``t`` in query order, their Porter stems ``s`` (NULL for an empty
+    stem) and ``n``, the number of search terms with repeats."""
+    distinct = list(dict.fromkeys(terms))
+    stems = [_sql_str(st) if (st := porter_stem(t)) else "CAST(NULL AS STRING)" for t in distinct]
+    return (
+        f"named_struct('t', array({', '.join(map(_sql_str, distinct))}), "
+        f"'s', array({', '.join(stems)}), 'n', {len(terms)})"
+    )
+
+
+# Q11 (SearchEngine.java:679-799) over the blend's row: tmin[i] is the
+# first title position where distinct term i or its stem occurs (NULL if
+# none), tmatch the number of terms that occur. One term: first word
+# 3.5, early (< 3) 2.5, else 2.0; every term of a repeat-free query:
+# first positions strictly in query order and all early (< 4) 4.0,
+# ordered 3.0, early 2.5, else 2.0; otherwise 1 + 0.2 per matching term
+# (the reference's in-order x1.85 / x1.30 branch needs every term
+# matched, which the tiers above already took). No match, a NULL title
+# or one with no tokens: 1.0.
+_TITLE_MIN = (
+    "zip_with(tq.t, tq.s, (qt, qs) -> array_min(transform(title_toks, "
+    "(w, j) -> IF(w = qt OR title_stems[j] = qs, j, NULL))))"
+)
+_TITLE_BOOST = """CASE WHEN tmatch = 0 THEN 1.0D
+  WHEN tq.n = 1 THEN CASE WHEN tmin[0] = 0 THEN 3.5D WHEN tmin[0] < 3 THEN 2.5D ELSE 2.0D END
+  WHEN tmatch = tq.n THEN CASE
+    WHEN array_sort(array_distinct(tmin)) = tmin AND forall(tmin, x -> x < 4) THEN 4.0D
+    WHEN array_sort(array_distinct(tmin)) = tmin THEN 3.0D
+    WHEN forall(tmin, x -> x < 4) THEN 2.5D ELSE 2.0D END
+  ELSE 1.0D + 0.2D * tmatch END"""
 
 
 def _blend(
@@ -616,39 +611,36 @@ def _blend(
     k: int | None = None,
 ) -> DataFrame:
     """Q9/Q11 over a scored frame ([query,] doc_id, tfidf[, matched]):
-    ([query,] doc_id, score, tfidf, pagerank, title). Titles and ranks
-    arrive through ONE broadcast, doc_stats UNION ALL ranks, and are
-    folded back to one row per scored doc by a group on its key that
-    needs no shuffle (the scored frame is already partitioned by it).
-    ``score`` is SQL over tfidf, pagerank, matched and query;
-    ``title_terms``, when given, is the SQL array of query terms for the
-    Q11 title boost. With ``k``, the frame is the Q12 deterministic top-k
-    of one query, (score desc, doc_id asc); without, it has no sort node."""
-    keys = ", ".join(f"g.{c}" for c in scores.columns if c in ("query", "doc_id"))
-    rest = "".join(
-        f"any_value(g.{c}) AS {c}, " for c in scores.columns if c not in ("query", "doc_id")
-    )
-    meta = (
-        "SELECT doc_id, title, CAST(NULL AS DOUBLE) AS rank "
-        f"FROM {_index_view(index.doc_stats)}"
-    )
-    if index.ranks is not None:
-        meta += f" UNION ALL SELECT doc_id, NULL, rank FROM {_index_view(index.ranks)}"
+    ([query,] doc_id, score, tfidf, pagerank, title). Titles, ranks and
+    title arrays come from ONE left join with the index's doc-meta frame
+    (``SearchIndex.doc_meta``), a checkpointed scan with one row per doc,
+    broadcast whenever it fits. ``score`` is SQL over tfidf, pagerank,
+    matched and query; ``title_terms``, when given, is the per-query SQL
+    struct of ``_title_terms``, and the Q11 title boost multiplies a
+    score it raises above 1.0 (``_TITLE_BOOST``, an expression over the
+    title arrays). With ``k``, the frame is the Q12 deterministic top-k
+    of one query, (score desc, doc_id asc); without, it has no sort
+    node."""
     head = "query, " if "query" in scores.columns else ""
+    cols = "".join(f"g.{c}, " for c in scores.columns)
+    out = f"SELECT {head}doc_id, {score} AS score, tfidf, pagerank, title"
     with _query_view(spark, scores) as g:
-        sql = f"""
-SELECT {head}doc_id, {score} AS score, tfidf, pagerank, title FROM (
-  SELECT {keys}, {rest}coalesce(max(m.rank), 0D) AS pagerank, max(m.title) AS title
-  FROM {g} g LEFT JOIN ({meta}) m ON m.doc_id = g.doc_id
-  GROUP BY {keys}
+        sql = (
+            f"SELECT {cols}coalesce(m.rank, 0D) AS pagerank, m.title, "
+            f"m.title_toks, m.title_stems FROM {g} g "
+            f"LEFT JOIN {_index_view(index.doc_meta)} m ON m.doc_id = g.doc_id"
+        )
+        if title_terms is None:
+            sql = f"{out} FROM ({sql})"
+        else:
+            sql = f"""
+SELECT {head}doc_id, IF(tb > 1.0D, score * tb, score) AS score, tfidf, pagerank, title FROM (
+  {out}, {_TITLE_BOOST} AS tb FROM (
+    SELECT *, size(filter(tmin, x -> x IS NOT NULL)) AS tmatch FROM (
+      SELECT *, {_TITLE_MIN} AS tmin FROM (SELECT *, {title_terms} AS tq FROM ({sql}))
+    )
+  )
 )"""
-        if title_terms is not None:
-            _register_title_boost(spark)
-            sql = (
-                f"SELECT {head}doc_id, IF(tb > 1.0D, score * tb, score) AS score, "
-                "tfidf, pagerank, title FROM ("
-                f"SELECT *, {TITLE_BOOST_UDF}(title, {title_terms}) AS tb FROM ({sql}))"
-            )
         if k is not None:
             sql += f" ORDER BY score DESC, doc_id ASC LIMIT {int(k)}"
         return spark.sql(sql)
@@ -784,12 +776,10 @@ def search_reference_batch(
     ``search(mode="reference")`` (pytest-asserted), whose scoring
     statement it is, keyed by query.
 
-    With k, the ranked candidates are gathered into one task for the
-    per-query window, as ``search``'s TakeOrdered gathers one query's:
-    the title-boost UDF hides the query partitioning from the planner, so
-    a window exchange would cost one more job. On a cached index with
-    ranks a batch of five costs 3 Spark jobs (scoring shuffle, the
-    titles-and-ranks broadcast, result), the same as one ``search()``.
+    With k, the scoring shuffle is keyed by query alone, so the per-query
+    window needs no exchange of its own: on a cached index with ranks a
+    batch of five costs 3 Spark jobs (scoring shuffle, the doc-meta
+    broadcast, result), the same as one ``search()``.
 
     ``k=None`` returns full scored frames (the gate/bench form); with k,
     rank is assigned per query over the 6dp-ROUNDED score (ties ->
@@ -799,7 +789,7 @@ def search_reference_batch(
     rows (Q2 short-circuit, SearchEngine.java:117-127)."""
     parsed = _parse_queries(index, queries)
     out = _reference_frame(
-        spark, index, parsed, all_matched_boost, use_title_boost, batch=True
+        spark, index, parsed, all_matched_boost, use_title_boost, batch=True, k=k
     )
     if out is None:
         return local_frame(
@@ -807,7 +797,7 @@ def search_reference_batch(
             "query string, doc_id string, score double, tfidf double, "
             "pagerank double, title string" + (", rank int" if k is not None else ""),
         )
-    return out if k is None else _top_k_per_query(out.coalesce(1), k)
+    return out
 
 
 def more_like_this(

@@ -6,9 +6,10 @@ no Spark in the computation: any disagreement with a kernel is a
 translation bug in one of them.
 
 Inputs are driver-side rows: ``docs`` is a list of (doc_id, text)
-pairs, ``vecs`` a list of (id, [float, ...]) pairs. The tokenizer is
-shared with the engine (functions.text.tokenize_py), as in
-tests/naive_reference.py; hashes are hashlib.md5.
+pairs, ``vecs`` a list of (id, [float, ...]) pairs. The tokenizer and
+the Porter stemmer are shared with the engine (functions.text.tokenize_py,
+functions.stemmer.porter_stem), as in tests/naive_reference.py; hashes
+are hashlib.md5.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ import math
 from decimal import ROUND_HALF_UP, Decimal
 from hashlib import md5
 
+from distributed_search_engine_spark.functions.stemmer import porter_stem
 from distributed_search_engine_spark.functions.text import tokenize_py
 
 
@@ -154,6 +156,16 @@ def trigrams(lowered_docs):
         for i in range(len(text) - 2):
             out.add((doc_id, text[i : i + 3]))
     return sorted(out)
+
+
+def title_arrays(titled_docs):
+    """(doc_id, title, title_toks, title_stems): each title's tokens and
+    their stems, none for a NULL title; doc ids keep their type."""
+    out = []
+    for doc_id, title in titled_docs:
+        toks = _tokens(title)
+        out.append((doc_id, title, toks, [porter_stem(t) for t in toks]))
+    return sorted(out, key=lambda r: r[0])
 
 
 def encode_positions(positions_lists):

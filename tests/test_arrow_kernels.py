@@ -129,6 +129,23 @@ def test_trigram_kernel_matches_jvm(spark, kdocs):
         assert _rows(TRI.trigram_postings(df)) == R.trigrams(lowered), name
 
 
+def test_title_arrays_kernel_matches_reference(spark, kdocs):
+    """The doc-meta title arrays, with the fixture texts as titles: the
+    other columns pass through with their types."""
+    from distributed_search_engine_spark.operators.arrow_kernels import title_arrays_arrow
+
+    for name, df, docs in _variants(spark, kdocs):
+        titled = df.withColumnRenamed("text", "title")
+        out = title_arrays_arrow(titled)
+        assert out.schema.fields[:2] == titled.schema.fields, name
+        assert out.columns[2:] == ["title_toks", "title_stems"], name
+        got = sorted(
+            ((r[0], r[1], list(r[2]), list(r[3])) for r in out.collect()),
+            key=lambda r: r[0],
+        )
+        assert got == R.title_arrays(docs), name
+
+
 # ---------------------------------------------------------------------------
 # vector assignment kernels (k-means argmin, IVFADC residual-PQ codes):
 # raw distances use the identical sequential float fold, PQ codes argmin

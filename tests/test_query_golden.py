@@ -14,11 +14,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from distributed_search_engine_spark.operators.postings import build_index
-from distributed_search_engine_spark.query.engine import (
-    SearchIndex,
-    search,
-    title_boost_py,
-)
+from distributed_search_engine_spark.query.engine import SearchIndex, search
+from tests.naive_reference import title_boost
 
 DOC1, DOC2 = "http://doc1.com", "http://doc2.com"
 
@@ -163,18 +160,18 @@ def test_stem_expansion_scores_once(spark, corpus_index):
 
 
 def test_title_boost_tiers():
-    assert title_boost_py("alpha ship", ["alpha"]) == 3.5  # first word
-    assert title_boost_py("big alpha ship", ["alpha"]) == 2.5  # early (<3)
-    assert title_boost_py("one two three alpha", ["alpha"]) == 2.0  # late
-    assert title_boost_py("nothing here", ["alpha"]) == 1.0
+    assert title_boost("alpha ship", ["alpha"]) == 3.5  # first word
+    assert title_boost("big alpha ship", ["alpha"]) == 2.5  # early (<3)
+    assert title_boost("one two three alpha", ["alpha"]) == 2.0  # late
+    assert title_boost("nothing here", ["alpha"]) == 1.0
     # multi-term: in order + all early
-    assert title_boost_py("alpha ship sails", ["alpha", "ship"]) == 4.0
+    assert title_boost("alpha ship sails", ["alpha", "ship"]) == 4.0
     # in order, not all early
-    assert title_boost_py("alpha one two three ship", ["alpha", "ship"]) == 3.0
+    assert title_boost("alpha one two three ship", ["alpha", "ship"]) == 3.0
     # all early, not in order
-    assert title_boost_py("ship alpha", ["alpha", "ship"]) == 2.5
+    assert title_boost("ship alpha", ["alpha", "ship"]) == 2.5
     # partial match: 1 of 2 -> 1.2
-    assert title_boost_py("alpha dock", ["alpha", "zzz"]) == 1.2
+    assert title_boost("alpha dock", ["alpha", "zzz"]) == 1.2
 
 
 def test_title_boost_applied_in_search(spark, corpus_index):

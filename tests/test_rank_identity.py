@@ -240,13 +240,64 @@ def served_index(spark, tmp_path_factory):
     ).cache_term_dict()
 
 
-def test_reference_plan_has_one_shuffle_and_no_rdd_scan(spark, served_index):
+def test_reference_plan_has_one_shuffle_and_one_rdd_scan(spark, served_index):
+    """The plan's one RDD-backed relation is the index's checkpointed
+    doc-meta frame: no per-query relation is an RDD."""
     df = search(spark, served_index, "spark shuffle", k=200, mode="reference")
     assert df.collect()
     nodes = _plan_nodes(df)
-    assert not any("ExistingRDD" in n or "LogicalRDD" in n for n in nodes), nodes
+    scans = [n for n in nodes if "ExistingRDD" in n or "LogicalRDD" in n]
+    assert len(scans) == 1 and "title_stems" in scans[0], scans
     shuffles = [n for n in nodes if n.startswith("Exchange")]
     assert len(shuffles) == 1 and "hashpartitioning(doc_id" in shuffles[0], shuffles
+
+
+def _plan_leaves(df):
+    """simpleString of every leaf of the executed plan, through adaptive
+    query stages."""
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        kids = node.children()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(node.plan())
+        elif kids.size() == 0:
+            out.append(node.simpleString(1000))
+        else:
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_reference_plans_run_no_python_and_blend_one_checkpointed_scan(
+    spark, served_index
+):
+    """A reference search() and a ranked search_reference_batch run no
+    Python UDF node, and the blend reads titles and ranks from one
+    checkpointed scan: the plan's leaves are the postings and it, with
+    no doc_stats or ranks scan."""
+    from distributed_search_engine_spark.query.engine import search_reference_batch
+
+    frames = {
+        "search": search(spark, served_index, "spark shuffle", k=200),
+        "batch": search_reference_batch(
+            spark, served_index, ["compute", "spark shuffle", "engine"], k=20
+        ),
+    }
+    for name, df in frames.items():
+        assert df.collect(), name
+        nodes = _plan_nodes(df)
+        python = [n for n in nodes if n.startswith(("ArrowEvalPython", "BatchEvalPython"))]
+        assert not python, (name, python)
+        leaves = sorted(_plan_leaves(df))
+        assert len(leaves) == 2, (name, leaves)
+        assert leaves[0].startswith("InMemoryTableScan") and "title" not in leaves[0], leaves
+        assert leaves[1].startswith("Scan ExistingRDD") and "title_stems" in leaves[1], leaves
+        if name == "batch":
+            shuffles = [n for n in nodes if n.startswith("Exchange")]
+            assert len(shuffles) == 1 and "hashpartitioning(x" in shuffles[0], shuffles
 
 
 def test_reference_job_counts_on_a_cached_index(spark, served_index):
@@ -310,7 +361,7 @@ def test_batch_and_single_query_job_counts(spark, served_index):
     )
 
     queries = ["compute", "spark shuffle", "alpha beta gamma", "engine", "data stream"]
-    for mode in ("reference", "bm25"):  # warm-up: UDF registration, avgdl
+    for mode in ("reference", "bm25"):  # warm-up: doc-meta frame, avgdl
         search(spark, served_index, "engine", k=20, mode=mode).collect()
     rows, single = _collect_jobs(
         spark, search(spark, served_index, "spark shuffle", k=200), "jobs-ref-single"
