@@ -853,8 +853,8 @@ _SUBSTRING_BATCH = ["data stream", "sort merge", "window", "zzzqqq", "ab"]
 
 
 def _q_substring_batch(spark, sf_dir):
-    # batch form: one job for the whole needle set (stats collect + one
-    # broadcast clause table + per-row needle verify); includes an
+    # batch form: one plan for the whole needle set (stats collect + one
+    # map-literal candidate step + per-row needle verify); includes an
     # absent-trigram needle (empty) and a sub-3-char full-scan needle
     from distributed_search_engine_spark.index import trigram as TRI
 
@@ -877,8 +877,8 @@ _REGEX_BATCH = [
 
 
 def _q_regex_batch(spark, sf_dir):
-    # batch form: one job for the whole pattern set (union clause table,
-    # per-row pattern-column verify)
+    # batch form: one plan for the whole pattern set (the same candidate
+    # step, per-row pattern-column verify)
     from distributed_search_engine_spark.index import trigram as TRI
     from distributed_search_engine_spark.index.regex_search import (
         regex_search_batch,
@@ -893,8 +893,8 @@ def _q_regex_batch(spark, sf_dir):
 
 
 def _q_regex_search(spark, sf_dir):
-    # Cox-style regex -> trigram CNF: two alternation clauses, broadcast
-    # clause table, exact (?i) verify on candidates only; the oracle is
+    # Cox-style regex -> trigram CNF: two alternation clauses, one
+    # candidate step, exact (?i) verify on candidates only; the oracle is
     # an INDEPENDENT full-scan RE2 regexp - equality proves losslessness
     from distributed_search_engine_spark.index import trigram as TRI
     from distributed_search_engine_spark.index.regex_search import regex_search

@@ -405,7 +405,7 @@ def main() -> None:
         # exact verify — tracks the window projection + distinct
         # exchange and the bounded candidate join round-over-round
         from distributed_search_engine_spark.index.trigram import (
-            _needle_trigrams,
+            _alt_trigrams,
             load_trigram_postings,
             store_trigram_postings,
             substring_search_batch,
@@ -434,7 +434,7 @@ def main() -> None:
             "read carefully before",
         ]
         union_grams = sorted(
-            {g for n in batch_needles for g in _needle_trigrams(n)}
+            {g for n in batch_needles for g in _alt_trigrams(n.lower())}
         )
         pruned = load_trigram_postings(
             spark, tri_dir, union_grams, 64
@@ -448,7 +448,6 @@ def main() -> None:
         # 3 patterns (clause compile -> union trigram partitions ->
         # candidates -> per-row pattern verify)
         from distributed_search_engine_spark.index.regex_search import (
-            _alt_trigrams,
             regex_search_batch,
             required_clauses,
         )

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..literals import array_map, local_frame
 from ..query.engine import BM25_B, BM25_K1
 
 
@@ -70,17 +71,20 @@ def search_bm25_champion(
     """(query, doc_id, score, rank): batch BM25 top-k over champion lists
     only — one job for the whole query set, same plan shape as
     search_bm25_batch (broadcast term map, partial-agg sum, per-query
-    bounded window). Terms are used as given (no stem expansion — the
+    bounded window), the query set entering as a term -> queries map
+    literal. Terms are used as given (no stem expansion — the
     champion tier serves the hot path; a miss falls through to the full
     index in a tiered deployment)."""
-    rows = [(" ".join(terms), t) for terms in queries for t in set(terms)]
-    if not rows:
-        return spark.createDataFrame(
-            [], "query string, doc_id string, score double, rank int"
-        )
-    qmap = spark.createDataFrame(rows, "query string, term string")
+    by_term: dict[str, list[str]] = {}
+    for terms in queries:
+        for t in set(terms):
+            by_term.setdefault(t, []).append(" ".join(terms))
+    if not by_term:
+        return local_frame(spark, "query string, doc_id string, score double, rank int")
+    queries_of = F.explode(array_map(by_term)[F.col("term")])
     agg = (
-        champions.join(F.broadcast(qmap), "term")
+        champions.where(F.col("term").isin(list(by_term)))
+        .select(queries_of.alias("query"), "doc_id", "contrib")
         .groupBy("query", "doc_id")
         .agg(F.round(F.sum("contrib"), 6).alias("score"))
     )

@@ -5,14 +5,13 @@ result page shows a token-window preview (SearchEngine.java snippet
 path); a source-code corpus wants the matching line plus surrounding
 lines, keyed for display as (doc, line_no).
 
-Plan shape: candidates come from the trigram index exactly as in
-:func:`trigram.substring_search` (rarest-trigram pruning, broadcast
-candidate join) — only candidate docs are line-split. The line explode
-is one Generate over candidate rows; the contains() filter is a
-map-side projection; context lines attach via a per-doc window over
-(doc_id, line_no) — bounded by the doc's own line count, never global.
-At 100 TB the per-query cost is ∝ candidate doc bytes, the same
-contract as substring_search, plus a candidate-only explode.
+Plan shape: candidate docs come from the trigram family's one candidate
+step (:func:`trigram._candidates`), and only they are line-split. The
+line explode is one Generate over candidate rows; the per-line match is
+a projection above it, so no barrier is needed; context lines attach via
+a per-doc window over (doc_id, line_no), which reuses the candidate
+join's doc_id partitioning. At 100 TB the per-query cost is ∝ candidate
+doc bytes, the same contract as substring_search.
 """
 
 from __future__ import annotations
@@ -20,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .trigram import _needle_trigrams, trigram_stats
+from .trigram import _candidates
 
 
 def grep_lines(
@@ -34,33 +33,12 @@ def grep_lines(
     """(doc_id, line_no, line, is_match): every line containing
     ``needle`` case-insensitively, plus ``context`` lines above and
     below (grep -C), 1-based line numbers, deduplicated where context
-    windows overlap. Only candidate docs (trigram pruning) are split.
-
-    Needles under 3 chars degrade to splitting every doc (documented,
-    same seam as substring_search); an absent trigram short-circuits
-    empty."""
-    grams = _needle_trigrams(needle)
-    keyed = docs.withColumn("doc_id", F.col(doc_id_col))
-    if grams:
-        stats = trigram_stats(postings.where(F.col("trigram").isin(grams)))
-        picked = [
-            r["trigram"]
-            for r in stats.orderBy(F.asc("df"), F.asc("trigram"))
-            .limit(4)
-            .collect()
-        ]
-        if len(picked) < len(grams) and len(picked) < 4:
-            keyed = keyed.where(F.lit(False))
-        else:
-            cand = (
-                postings.where(F.col("trigram").isin(picked))
-                .groupBy("doc_id")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .where(F.col("_n") == len(picked))
-                .select("doc_id")
-            )
-            keyed = keyed.join(cand, "doc_id")
-    lines = keyed.select(
+    windows overlap. Only candidate docs are split; needles under 3
+    chars split every doc."""
+    cand = _candidates(
+        docs, postings, {needle: [[needle.lower()]]}, "needle", 4, doc_id_col
+    )
+    lines = cand.select(
         "doc_id",
         F.posexplode(
             F.split(F.coalesce(F.col(content_col), F.lit("")), "\n")

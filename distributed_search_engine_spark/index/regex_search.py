@@ -26,24 +26,21 @@ The result is a CNF ``[[alt, ...], ...]``: every clause must hold, a
 clause holds when SOME alternative literal is contained. Any clause
 with an alternative shorter than 3 chars is dropped whole (dropping a
 REQUIREMENT is lossless — it only widens the candidate set; dropping an
-alternative would not be). An empty CNF degrades to the full exact scan
-(documented seam, same as sub-3-char needles in ``substring_search``).
+alternative would not be). An empty CNF is a full exact scan.
 
-100-TB shape: the clause table is a tiny literal DataFrame broadcast
-against the (trigram, doc_id) postings; candidate evaluation is two
-bounded aggregations (alt satisfied -> clause satisfied -> all clauses
-satisfied); the exact ``(?i)`` regex verify touches candidates only.
-The gate oracle is an INDEPENDENT full-scan ``regexp_matches`` in
-DuckDB (RE2) with no trigram machinery — equality proves the compiled
-requirement is lossless, not merely twin-identical.
+Search is the trigram family's one candidate step and verify
+(:mod:`trigram`) keyed by pattern, with the exact ``(?i)`` regex as the
+verify. The gate oracle is an INDEPENDENT full-scan ``regexp_matches``
+in DuckDB (RE2) with no trigram machinery — equality proves the
+compiled requirement is lossless, not merely twin-identical.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .trigram import trigram_stats
+from .trigram import _candidates, _verified
 
 # ---------------------------------------------------------------------------
 # parser: pattern -> AST
@@ -181,6 +178,11 @@ def _parse(pattern: str):
 # ---------------------------------------------------------------------------
 # requirement analysis: AST -> CNF [[alt, ...], ...] over lowercased
 # literal strings; every clause's every alternative is >= 3 chars.
+# A literal is lowercased one char at a time, the text as a whole (JVM
+# lower): they differ only on sigma, whose lowercase depends on its
+# neighbours (a word-final one becomes ς), so a sigma ends the run.
+
+_SIGMAS = set("Σσς")
 
 
 def _clauses(node) -> list[list[str]]:
@@ -207,7 +209,9 @@ def _clauses(node) -> list[list[str]]:
 
         for atom in node[1]:
             akind = atom[0]
-            if akind == "lit":
+            if akind == "lit" and atom[1] in _SIGMAS:
+                flush()  # lowercases by context in the text: not a literal
+            elif akind == "lit":
                 _, ch, lo, hi = atom
                 if lo >= 1 and hi == 1:
                     run.append(ch.lower())
@@ -235,10 +239,6 @@ def required_clauses(pattern: str) -> list[list[str]]:
     return [cl for cl in _clauses(_parse(pattern)) if min(map(len, cl)) >= 3]
 
 
-def _alt_trigrams(alt: str) -> list[str]:
-    return sorted({alt[i : i + 3] for i in range(len(alt) - 2)})
-
-
 def regex_search_batch(
     docs: DataFrame,
     postings: DataFrame,
@@ -247,112 +247,22 @@ def regex_search_batch(
     doc_id_col: str = "doc_id",
     content_col: str = "text",
 ) -> DataFrame:
-    """(pattern, doc_id, n_matches) for a whole pattern SET in ONE Spark
-    job — the batch form of :func:`regex_search` (the same amortization
-    substring_search_batch applies to needles).
-
-    All patterns' clause tables union into ONE broadcast frame keyed by
-    pattern id; candidate evaluation adds pattern_id to the two
-    aggregations; the exact verify matches a per-row PATTERN COLUMN
-    (Spark's regexp_count accepts a column regexp; per-pattern compiled
-    regex caching happens engine-side). Unprunable patterns take the
-    documented full-scan branch; a pattern with an absent required
-    literal contributes nothing."""
-    spark = SparkSession.getActiveSession() or docs.sparkSession
-    keyed = docs.withColumn("doc_id", F.col(doc_id_col))
-
-    def verify(frame: DataFrame) -> DataFrame:
-        n = F.regexp_count(
-            F.coalesce(F.col(content_col), F.lit("")),
-            F.concat(F.lit("(?i)"), F.col("pattern")),
-        )
-        barrier = F.when(
-            F.monotonically_increasing_id() >= 0, n
-        ).otherwise(F.lit(0))
-        return frame.select(
-            "pattern", "doc_id", barrier.alias("n_matches")
-        ).where("n_matches > 0")
-
-    compiled = {p: required_clauses(p) for p in dict.fromkeys(patterns)}
-    needed = sorted(
-        {
-            g
-            for clauses in compiled.values()
-            for cl in clauses
-            for a in cl
-            for g in _alt_trigrams(a)
-        }
+    """(pattern, doc_id, n_matches): every doc whose text matches a
+    pattern case-insensitively (Java ``(?i)``, ASCII case folding), with
+    its match count, for a whole pattern set in one plan. Candidates
+    come from each pattern's :func:`required_clauses`; an unprunable
+    pattern scans every doc, and one whose clause has no alternative in
+    the postings matches nothing. The verify takes the pattern from a
+    column (Spark's regexp_count accepts one)."""
+    cand = _candidates(
+        docs, postings, {p: required_clauses(p) for p in patterns}, "pattern",
+        prune_to, doc_id_col,
     )
-    df_by_gram = (
-        {
-            r["trigram"]: r["df"]
-            for r in trigram_stats(
-                postings.where(F.col("trigram").isin(needed))
-            ).collect()
-        }
-        if needed
-        else {}
+    count = F.regexp_count(
+        F.coalesce(F.col(content_col), F.lit("")),
+        F.concat(F.lit("(?i)"), F.col("pattern")),
     )
-    rows = []
-    fullscan: list[str] = []
-    for pat, clauses in compiled.items():
-        if not clauses:
-            fullscan.append(pat)
-            continue
-        pat_rows = []
-        satisfied = set()
-        for ci, clause in enumerate(clauses):
-            for ai, alt in enumerate(clause):
-                grams = _alt_trigrams(alt)
-                if any(g not in df_by_gram for g in grams):
-                    continue
-                picked = sorted(
-                    grams, key=lambda g: (df_by_gram[g], g)
-                )[:prune_to]
-                satisfied.add(ci)
-                pat_rows.extend(
-                    (pat, ci, ai, g, len(picked)) for g in picked
-                )
-        if len(satisfied) < len(clauses):
-            continue  # a clause lost every alternative: cannot match
-        rows.extend((r, len(clauses)) for r in pat_rows)
-
-    parts = []
-    if rows:
-        need = spark.createDataFrame(
-            [
-                (pat, ci, ai, g, an, ncl)
-                for (pat, ci, ai, g, an), ncl in rows
-            ],
-            "pattern string, clause_id int, alt_id int, trigram string,"
-            " alt_n int, n_clauses int",
-        )
-        cand = (
-            postings.join(F.broadcast(need), "trigram")
-            .groupBy(
-                "pattern", "doc_id", "clause_id", "alt_id", "alt_n",
-                "n_clauses",
-            )
-            .agg(F.count(F.lit(1)).alias("_got"))
-            .where(F.col("_got") == F.col("alt_n"))
-            .select("pattern", "doc_id", "clause_id", "n_clauses")
-            .distinct()
-            .groupBy("pattern", "doc_id", "n_clauses")
-            .agg(F.count(F.lit(1)).alias("_ncl"))
-            .where(F.col("_ncl") == F.col("n_clauses"))
-            .select("pattern", "doc_id")
-        )
-        parts.append(verify(keyed.join(cand, "doc_id")))
-    for pat in fullscan:
-        parts.append(verify(keyed.withColumn("pattern", F.lit(pat))))
-    if not parts:
-        return spark.createDataFrame(
-            [], "pattern string, doc_id string, n_matches int"
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _verified(cand, "pattern", "n_matches", count)
 
 
 def regex_search(
@@ -363,78 +273,7 @@ def regex_search(
     doc_id_col: str = "doc_id",
     content_col: str = "text",
 ) -> DataFrame:
-    """(doc_id, n_matches): every doc whose text matches ``pattern``
-    case-insensitively, found through the trigram index.
-
-    Each clause alternative keeps only its ``prune_to`` rarest trigrams
-    (one bounded collect against the stats table — lossless, dropping
-    requirements only widens candidates). Candidate evaluation is a
-    broadcast join of the clause table against the postings plus two
-    aggregations; the ``(?i)`` exact verify runs on candidates only.
-    Unprunable patterns degrade to the exact full scan."""
-    spark = SparkSession.getActiveSession() or docs.sparkSession
-    clauses = required_clauses(pattern)
-    ci_pat = f"(?i){pattern}"
-
-    def verify(frame: DataFrame) -> DataFrame:
-        # the exact regex runs AFTER any candidate join, so the (costly)
-        # engine match touches candidate rows only. The always-true
-        # nondeterministic wrapper on the projected column is
-        # load-bearing: with a plain deterministic projection Catalyst
-        # pushes the n_matches > 0 filter back through the join to the
-        # full docs scan (pushdown has no per-row cost model),
-        # re-running the regex on EVERY doc; a filter never pushes
-        # through a projection with a nondeterministic field. Locked by
-        # test_regex_plan_verifies_after_candidate_join.
-        n = F.regexp_count(
-            F.coalesce(F.col(content_col), F.lit("")), F.lit(ci_pat)
-        )
-        barrier = F.when(
-            F.monotonically_increasing_id() >= 0, n
-        ).otherwise(F.lit(0))
-        return frame.select(
-            "doc_id", barrier.alias("n_matches")
-        ).where("n_matches > 0")
-
-    keyed = docs.withColumn("doc_id", F.col(doc_id_col))
-    if not clauses:
-        return verify(keyed)
-    needed = sorted({g for cl in clauses for a in cl for g in _alt_trigrams(a)})
-    df_by_gram = {
-        r["trigram"]: r["df"]
-        for r in trigram_stats(
-            postings.where(F.col("trigram").isin(needed))
-        ).collect()
-    }
-    rows = []
-    for ci, clause in enumerate(clauses):
-        for ai, alt in enumerate(clause):
-            grams = _alt_trigrams(alt)
-            # a required trigram missing from the whole corpus kills this
-            # alternative outright — no doc can contain the literal
-            if any(g not in df_by_gram for g in grams):
-                continue
-            picked = sorted(grams, key=lambda g: (df_by_gram[g], g))[:prune_to]
-            rows.extend(
-                (ci, ai, g, len(picked)) for g in picked
-            )
-    clause_alts = {ci for ci, _, _, _ in rows}
-    if len(clause_alts) < len(clauses):
-        # some clause lost ALL alternatives -> pattern cannot match
-        return verify(keyed.where(F.lit(False)))
-    need = spark.createDataFrame(
-        rows, "clause_id int, alt_id int, trigram string, alt_n int"
-    )
-    cand = (
-        postings.join(F.broadcast(need), "trigram")
-        .groupBy("doc_id", "clause_id", "alt_id", "alt_n")
-        .agg(F.count(F.lit(1)).alias("_got"))
-        .where(F.col("_got") == F.col("alt_n"))
-        .select("doc_id", "clause_id")
-        .distinct()
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("_ncl"))
-        .where(F.col("_ncl") == len(clauses))
-        .select("doc_id")
-    )
-    return verify(keyed.join(cand, "doc_id"))
+    """(doc_id, n_matches): :func:`regex_search_batch` of one."""
+    return regex_search_batch(
+        docs, postings, [pattern], prune_to, doc_id_col, content_col
+    ).drop("pattern")

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..literals import array_map, local_frame
 from ..query.engine import BM25_B, BM25_K1
 from .codec import (
     BLOCK_SIZE,
@@ -96,8 +97,8 @@ def assign_docnums(doc_stats: DataFrame, n_partitions: int = 32) -> DataFrame:
     """doc_stats + dense docnum (long), deterministic given doc_id set.
 
     Two-phase: range partition by doc_id -> per-partition counts (tiny
-    collect) -> base offset + local rank within partition. Scales without a
-    global sort window."""
+    collect) -> base offset (a partition -> base map literal) + local rank
+    within partition. Scales without a global sort window."""
     parted = doc_stats.repartitionByRange(n_partitions, "doc_id").withColumn(
         "_pid", F.spark_partition_id()
     )
@@ -106,20 +107,14 @@ def assign_docnums(doc_stats: DataFrame, n_partitions: int = 32) -> DataFrame:
         r["_pid"]: r["c"]
         for r in parted.groupBy("_pid").agg(F.count(F.lit(1)).alias("c")).collect()
     }
-    bases, acc = {}, 0
-    for pid in sorted(counts):
-        bases[pid] = acc
-        acc += counts[pid]
-    base_df = parted.sparkSession.createDataFrame(
-        [(pid, b) for pid, b in bases.items()], "_pid int, _base long"
-    )
+    base, acc = [], 0
+    for pid in range(n_partitions):
+        base += [F.lit(pid), F.lit(acc).cast("long")]
+        acc += counts.get(pid, 0)
     w = Window.partitionBy("_pid").orderBy("doc_id")
-    out = (
-        parted.join(F.broadcast(base_df), "_pid")
-        .withColumn("docnum", F.row_number().over(w) - 1 + F.col("_base"))
-        .drop("_pid", "_base")
-    )
-    return out
+    return parted.withColumn(
+        "docnum", F.row_number().over(w) - 1 + F.create_map(*base)[F.col("_pid")]
+    ).drop("_pid")
 
 
 def _encode_partition(batch_iter, avgdl: float, rows_acc=None):
@@ -504,26 +499,24 @@ def read_segments_for_queries(
     n_partitions: int = 32,
 ) -> DataFrame:
     """Batch variant of read_segments_for_terms: ONE partition-pruned scan
-    for the union of all queries' terms, broadcast-joined with the tiny
-    (query_id, term) map so each (query, term) pair gets its own tagged
-    row — the input shape wand.distributed_topk_batch expects. A term
-    shared by several queries is scanned once and fanned out by the join."""
-    terms = sorted({t for ts in queries.values() for t in ts})
-    if not terms:
-        return spark.createDataFrame(
-            [],
+    for the union of all queries' terms, each row exploded through a
+    term -> query_ids map literal so each (query, term) pair gets its own
+    tagged row — the input shape wand.distributed_topk_batch expects. A
+    term shared by several queries is scanned once and fanned out."""
+    by_term: dict[str, list[str]] = {}
+    for qid, ts in queries.items():
+        for t in ts:
+            by_term.setdefault(t, []).append(qid)
+    if not by_term:
+        return local_frame(
+            spark,
             "query_id string, term string, idf_bm25 double, "
             "blocks array<struct<last_docnum: long, max_score: double, "
             "docs: binary, tfs: binary, dls: binary>>",
         )
-    base = read_segments_for_terms(spark, out_dir, terms, n_partitions)
-    mapping = spark.createDataFrame(
-        [(qid, t) for qid, ts in queries.items() for t in ts],
-        "query_id string, term string",
-    )
-    return base.join(F.broadcast(mapping), "term").select(
-        "query_id", "term", "idf_bm25", "blocks"
-    )
+    base = read_segments_for_terms(spark, out_dir, sorted(by_term), n_partitions)
+    qids = F.explode(array_map(by_term)[F.col("term")])
+    return base.select(qids.alias("query_id"), "term", "idf_bm25", "blocks")
 
 
 # ---------------------------------------------------------------------------

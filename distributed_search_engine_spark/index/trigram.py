@@ -7,30 +7,37 @@ answer it, trigram postings can:
 
   build: every distinct lowercased 3-char window of every doc ->
          (trigram, doc_id) postings + per-trigram df stats
-  query: a needle's candidates = docs containing its rarest trigrams
-         (a doc containing the needle necessarily contains EVERY needle
-         trigram under the same normalization, so pruning to any subset
-         is lossless); exact containment verify runs only on candidates.
+  query: one candidate step (``_candidates``) serves substring, regex
+         and grep search, single and batch alike: each key (needle or
+         pattern) brings a CNF of required literals, candidates are the
+         docs holding the rarest trigrams of every clause (a doc
+         containing a literal contains EVERY trigram of it under the
+         same normalization, so pruning to any subset is lossless), and
+         one exact verify (``_verified``) runs on candidates only.
 
 100-TB shape: the build is one map-side Arrow kernel (per-doc window
 slicing + dedup over JVM-lowercased text) with no exchange; the store
 write shuffles once, keyed by trigram hash — hot trigrams skew that
 key space far less than token postings (alphabet^3 keys, near-uniform
 over code).
-Query-side the rarest-q selection (a <=len(needle)-row bounded collect
-against the stats table) keeps the candidate join fan-in tiny — the
-Zoekt trick — and the exact verify touches only candidate rows. The
-gate oracle for search is an INDEPENDENT full-scan ``contains()`` in
-DuckDB: equality proves the pruning chain is lossless, not merely
-twin-identical.
+Query-side the rarest-q selection (one bounded collect against the
+stats table for a whole batch) keeps the candidate fan-in tiny — the
+Zoekt trick. The picks are a map literal in the plan, not a broadcast
+relation, and the candidate aggregations and the join with the docs
+share one exchange keyed by doc_id. The gate oracle for search is an
+INDEPENDENT full-scan ``contains()`` in DuckDB: equality proves the
+pruning chain is lossless, not merely twin-identical.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..literals import array_map
 
 
 def trigram_postings(
@@ -117,9 +124,110 @@ def trigram_stats(postings: DataFrame) -> DataFrame:
     )
 
 
-def _needle_trigrams(needle: str) -> list[str]:
-    s = needle.lower()
-    return sorted({s[i : i + 3] for i in range(len(s) - 2)})
+def _alt_trigrams(alt: str) -> list[str]:
+    """Distinct 3-char windows of an already lowercased literal."""
+    return sorted({alt[i : i + 3] for i in range(len(alt) - 2)})
+
+
+def _candidates(
+    docs: DataFrame,
+    postings: DataFrame,
+    requirements: dict[str, list[list[str]]],
+    key: str,
+    prune_to: int,
+    doc_id_col: str,
+) -> DataFrame:
+    """The docs rows, with ``doc_id`` and a ``key`` column, that may
+    satisfy their key's requirement: a CNF over lowercased literals (a
+    list of clauses, each a list of alternatives), which a doc satisfies
+    when for every clause some alternative is contained in its
+    lowercased text. A needle is ``[[needle.lower()]]``; a clause holding
+    an alternative under 3 chars is dropped (that only widens the
+    candidates), and a key left with no clause is a full scan.
+
+    One stats collect over every key's trigrams; each alternative keeps
+    its ``prune_to`` rarest, and a trigram absent from the postings kills
+    its alternative (a clause with none left, its key). The picks enter
+    the plan as one map literal from trigram to (key, clause, alternative)
+    entries, exploded next to the filtered postings; both candidate
+    aggregations and the join with the docs share one exchange keyed by
+    doc_id."""
+    keyed = docs.withColumn("doc_id", F.col(doc_id_col))
+    cnfs = {
+        k: [cl for cl in cnf if min(map(len, cl)) >= 3]
+        for k, cnf in requirements.items()
+    }
+    grams = sorted(
+        {g for cnf in cnfs.values() for cl in cnf for a in cl for g in _alt_trigrams(a)}
+    )
+    df_by_gram = (
+        {
+            r["trigram"]: r["df"]
+            for r in trigram_stats(postings.where(F.col("trigram").isin(grams))).collect()
+        }
+        if grams
+        else {}
+    )
+    entries: dict[str, list] = {}
+    fullscan = []
+    for k, cnf in cnfs.items():
+        if not cnf:
+            fullscan.append(k)
+            continue
+        picks = []
+        for ci, clause in enumerate(cnf):
+            alts = [
+                (ai, sorted(gs, key=lambda g: (df_by_gram[g], g))[:prune_to])
+                for ai, gs in enumerate(map(_alt_trigrams, clause))
+                if all(g in df_by_gram for g in gs)
+            ]
+            if not alts:
+                break  # no doc holds any alternative of this clause
+            picks += [(g, ci, ai, len(p)) for ai, p in alts for g in p]
+        else:
+            for g, ci, ai, alt_n in picks:
+                entries.setdefault(g, []).append(
+                    F.struct(
+                        F.lit(k).alias(key),
+                        F.lit(ci).alias("clause_id"),
+                        F.lit(ai).alias("alt_id"),
+                        F.lit(alt_n).alias("alt_n"),
+                        F.lit(len(cnf)).alias("n_clauses"),
+                    )
+                )
+    parts = []
+    if entries:
+        cand = (
+            postings.where(F.col("trigram").isin(list(entries)))
+            .select("doc_id", F.explode(array_map(entries)[F.col("trigram")]).alias("e"))
+            .select("doc_id", "e.*")
+            .repartition("doc_id")
+            .groupBy("doc_id", key, "clause_id", "alt_id", "alt_n", "n_clauses")
+            .agg(F.count(F.lit(1)).alias("_got"))
+            .where(F.col("_got") == F.col("alt_n"))
+            .groupBy("doc_id", key, "n_clauses")
+            .agg(F.count_distinct("clause_id").alias("_ncl"))
+            .where(F.col("_ncl") == F.col("n_clauses"))
+            .select("doc_id", key)
+        )
+        parts.append(keyed.join(cand, "doc_id"))
+    if fullscan:
+        parts.append(keyed.withColumn(key, F.explode(F.array(*map(F.lit, fullscan)))))
+    if not parts:
+        parts.append(keyed.where(F.lit(False)).withColumn(key, F.lit(None).cast("string")))
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
+def _verified(frame: DataFrame, key: str, name: str, count: Column) -> DataFrame:
+    """(key, doc_id, name) where ``count`` > 0 on a candidate row. The
+    always-true nondeterministic wrapper is the family's one verify
+    barrier: a filter never pushes through a projection with a
+    nondeterministic field. Without it Catalyst pushes ``name > 0``
+    below the projection into the candidate join's condition, so the
+    count runs twice per candidate row (and a predicate naming doc
+    columns only would sink into the full docs scan)."""
+    n = F.when(F.monotonically_increasing_id() >= 0, count).otherwise(F.lit(0))
+    return frame.select(key, "doc_id", n.alias(name)).where(F.col(name) > 0)
 
 
 def substring_search_batch(
@@ -130,85 +238,20 @@ def substring_search_batch(
     doc_id_col: str = "doc_id",
     content_col: str = "text",
 ) -> DataFrame:
-    """(needle, doc_id, n_occurrences) for a whole needle SET in ONE
-    Spark job — the batch-throughput form (amortizes the per-job floor
-    the same way search_bm25_batch does for term queries).
-
-    One stats collect for the union of every needle's trigrams; the
-    per-needle rarest-``prune_to`` choice happens driver-side; ONE
-    broadcast (needle, trigram) table joins the postings; candidates
-    verify with a per-row needle column (contains/replace accept
-    column patterns). Needles under 3 chars take the documented
-    full-scan branch; needles with an absent trigram return nothing
-    (no doc can contain them)."""
-    spark = SparkSession.getActiveSession() or docs.sparkSession
-    keyed = docs.withColumn("doc_id", F.col(doc_id_col))
-    text = F.lower(F.col(content_col))
-    by_needle = {n: _needle_trigrams(n) for n in dict.fromkeys(needles)}
-    allgrams = sorted({g for gs in by_needle.values() for g in gs})
-    df_by_gram = (
-        {
-            r["trigram"]: r["df"]
-            for r in trigram_stats(
-                postings.where(F.col("trigram").isin(allgrams))
-            ).collect()
-        }
-        if allgrams
-        else {}
+    """(needle, doc_id, n_occurrences): every doc whose lowercased text
+    contains a needle (lowercased), with its non-overlapping occurrence
+    count, for a whole needle set in one plan. Needles under 3 chars
+    scan every doc; a needle with a trigram absent from the postings
+    matches nothing; an empty needle raises ``ValueError``."""
+    if "" in needles:
+        raise ValueError("substring_search: empty needle")
+    cand = _candidates(
+        docs, postings, {n: [[n.lower()]] for n in needles}, "needle",
+        prune_to, doc_id_col,
     )
-    rows = []
-    fullscan: list[str] = []
-    for n, gs in by_needle.items():
-        if not gs:
-            fullscan.append(n)
-            continue
-        if any(g not in df_by_gram for g in gs):
-            continue  # an absent required trigram: no doc can match
-        picked = sorted(gs, key=lambda g: (df_by_gram[g], g))[:prune_to]
-        rows.extend((n, g, len(picked)) for g in picked)
-
-    def verify(frame: DataFrame) -> DataFrame:
-        pat = F.lower(F.col("needle"))
-        hit = F.when(
-            F.monotonically_increasing_id() >= 0, text.contains(pat)
-        ).otherwise(F.lit(False))
-        return (
-            frame.select(
-                "needle",
-                "doc_id",
-                (
-                    (F.length(text) - F.length(F.replace(text, pat)))
-                    / F.length(pat)
-                ).cast("int").alias("n_occurrences"),
-                hit.alias("_hit"),
-            )
-            .where("_hit")
-            .drop("_hit")
-        )
-
-    parts = []
-    if rows:
-        need = spark.createDataFrame(
-            rows, "needle string, trigram string, n_picked int"
-        )
-        cand = (
-            postings.join(F.broadcast(need), "trigram")
-            .groupBy("needle", "doc_id", "n_picked")
-            .agg(F.count(F.lit(1)).alias("_got"))
-            .where(F.col("_got") == F.col("n_picked"))
-            .select("needle", "doc_id")
-        )
-        parts.append(verify(keyed.join(cand, "doc_id")))
-    for n in fullscan:
-        parts.append(verify(keyed.withColumn("needle", F.lit(n))))
-    if not parts:
-        return spark.createDataFrame(
-            [], "needle string, doc_id string, n_occurrences int"
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    text, pat = F.lower(F.col(content_col)), F.lower(F.col("needle"))
+    count = (F.length(text) - F.length(F.replace(text, pat))) / F.length(pat)
+    return _verified(cand, "needle", "n_occurrences", count.cast("int"))
 
 
 def substring_search(
@@ -219,66 +262,7 @@ def substring_search(
     doc_id_col: str = "doc_id",
     content_col: str = "text",
 ) -> DataFrame:
-    """(doc_id, n_occurrences): every doc whose lowercased text contains
-    ``needle`` (lowercased), found through the trigram index.
-
-    Selection: the ``prune_to`` rarest needle trigrams by (df asc,
-    trigram asc) — a bounded <=len(needle)-row collect against the
-    stats table — then one semi-join-shaped candidate aggregation
-    (docs holding ALL selected trigrams) and an exact ``contains``
-    verify + occurrence count on candidates only. Needles shorter than
-    3 chars degrade to the full exact scan (documented seam)."""
-    grams = _needle_trigrams(needle)
-    text = F.lower(F.col(content_col))
-    pat = F.lit(needle.lower())
-
-    def verify(frame: DataFrame) -> DataFrame:
-        # the exact contains() + occurrence count runs AFTER any
-        # candidate join — CPU verify on candidate rows only. The
-        # always-true nondeterministic wrapper on _hit is load-bearing:
-        # with a plain deterministic projection Catalyst pushes the
-        # _hit filter back through the join to the full docs scan
-        # (pushdown has no per-row cost model), scanning every doc; a
-        # filter never pushes through a projection with a
-        # nondeterministic field — locked by
-        # test_substring_plan_verifies_after_join. (Column IO for the
-        # docs side still reads text — skipping bytes too takes a
-        # doc_id-clustered layout, the segments' docnum discipline.)
-        hit = F.when(
-            F.monotonically_increasing_id() >= 0, text.contains(pat)
-        ).otherwise(F.lit(False))
-        return (
-            frame.select(
-                "doc_id",
-                (
-                    (F.length(text) - F.length(F.replace(text, pat)))
-                    / F.length(pat)
-                ).cast("int").alias("n_occurrences"),
-                hit.alias("_hit"),
-            )
-            .where("_hit")
-            .drop("_hit")
-        )
-
-    keyed = docs.withColumn("doc_id", F.col(doc_id_col))
-    if not grams:
-        return verify(keyed)
-    stats = trigram_stats(postings.where(F.col("trigram").isin(grams)))
-    picked = [
-        r["trigram"]
-        for r in stats.orderBy(F.asc("df"), F.asc("trigram"))
-        .limit(prune_to)
-        .collect()
-    ]
-    if len(picked) < len(grams) and len(picked) < prune_to:
-        # a needle trigram absent from the whole corpus -> no doc can
-        # contain the needle
-        return verify(keyed.where(F.lit(False)))
-    cand = (
-        postings.where(F.col("trigram").isin(picked))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .where(F.col("_n") == len(picked))
-        .select("doc_id")
-    )
-    return verify(keyed.join(cand, "doc_id"))
+    """(doc_id, n_occurrences): :func:`substring_search_batch` of one."""
+    return substring_search_batch(
+        docs, postings, [needle], prune_to, doc_id_col, content_col
+    ).drop("needle")

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from ..functions.stemmer import porter_stem
 from ..functions.stopwords import STOP_WORDS
 from ..functions.text import tokenize_py
+from ..literals import _sql_double, _sql_str, local_frame
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -245,42 +246,6 @@ REFERENCE_SCHEMA = "doc_id string, score double, tfidf double, pagerank double, 
 # index frame -> the temp-view name it is registered under (see _index_view)
 _INDEX_VIEWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _REGISTRY_LOCK = threading.Lock()
-
-
-def local_frame(spark: SparkSession, schema: str, rows=()) -> DataFrame:
-    """Frame of a flat DDL schema ("name type, ...") holding ``rows``
-    (tuples of str / int / float values), planned as a local relation:
-    collecting it runs no Spark job, where ``createDataFrame(rows, schema)``
-    parallelizes an RDD and costs one."""
-    cols = [c.split() for c in schema.split(",")]
-    if not rows:
-        select = ", ".join(f"CAST(NULL AS {typ}) AS `{name}`" for name, typ in cols)
-        return spark.sql(f"SELECT {select} WHERE false")
-    select = ", ".join(
-        f"CAST(col{i} AS {typ}) AS `{name}`" for i, (name, typ) in enumerate(cols, 1)
-    )
-    values = ", ".join(
-        "(" + ", ".join(map(_sql_value, r)) + ")"
-        for r in rows
-    )
-    return spark.sql(f"SELECT {select} FROM VALUES {values}")
-
-
-def _sql_str(s: str) -> str:
-    """Spark SQL string literal."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _sql_double(x: float) -> str:
-    """Exact double literal: Spark SQL reads a bare ``1.5`` as DECIMAL, and
-    repr() round-trips every finite double."""
-    return f"{float(x)!r}D"
-
-
-def _sql_value(v: str | int | float) -> str:
-    if isinstance(v, str):
-        return _sql_str(v)
-    return _sql_double(v) if isinstance(v, float) else str(int(v))
 
 
 def _sql_map(entries: list[tuple[str, str]]) -> str:

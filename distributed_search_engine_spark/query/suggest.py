@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize_py
-from .engine import local_frame
+from ..literals import local_frame
 
 SUGGEST_LIMIT = 10  # SauronFrontend.java:67
 SPELL_MAX_DISTANCE = 2  # SearchEngine.java:997

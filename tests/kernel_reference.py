@@ -15,6 +15,7 @@ are hashlib.md5.
 from __future__ import annotations
 
 import math
+import re
 from decimal import ROUND_HALF_UP, Decimal
 from hashlib import md5
 
@@ -155,6 +156,47 @@ def trigrams(lowered_docs):
             continue
         for i in range(len(text) - 2):
             out.add((doc_id, text[i : i + 3]))
+    return sorted(out)
+
+
+def substring_matches(docs, needles):
+    """(needle, doc_id, n_occurrences): the non-overlapping occurrences
+    of each lowercased needle in each lowercased text, by full scan;
+    doc ids keep their type."""
+    out = []
+    for n in dict.fromkeys(needles):
+        for doc_id, text in docs:
+            c = text.lower().count(n.lower()) if text is not None else 0
+            if c:
+                out.append((n, doc_id, c))
+    return sorted(out)
+
+
+def regex_matches(docs, patterns):
+    """(pattern, doc_id, n_matches): non-overlapping matches of each
+    pattern over each text (NULL as ''), by full scan. Java's ``(?i)``
+    folds ASCII case only, as ``re.IGNORECASE | re.ASCII`` does."""
+    out = []
+    for p in dict.fromkeys(patterns):
+        cre = re.compile(p, re.IGNORECASE | re.ASCII)
+        for doc_id, text in docs:
+            c = sum(1 for _ in cre.finditer(text or ""))
+            if c:
+                out.append((p, doc_id, c))
+    return sorted(out)
+
+
+def grep_lines(docs, needle, context):
+    """(doc_id, line_no, line, is_match): each '\n'-separated line (1-based)
+    whose lowercase contains the lowercased needle, plus the lines
+    within ``context`` of one; a NULL text is one empty line."""
+    out = []
+    for doc_id, text in docs:
+        lines = (text or "").split("\n")
+        hits = [needle.lower() in ln.lower() for ln in lines]
+        for i, ln in enumerate(lines):
+            if any(hits[max(0, i - context) : i + context + 1]):
+                out.append((doc_id, i + 1, ln, hits[i]))
     return sorted(out)
 
 

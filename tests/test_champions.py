@@ -121,3 +121,26 @@ def test_champion_choice_is_deterministic(spark, idx):
         idx["postings"], idx["term_stats"], sidx.avgdl, 7
     ).orderBy("term", "doc_id").collect()
     assert [tuple(r) for r in c1] == [tuple(r) for r in c2]
+
+
+def test_champion_batch_job_count(spark, idx):
+    """The query set enters as a term -> queries map literal: three
+    Spark jobs (the (query, doc_id) sum's exchange, the per-query
+    window's exchange and the result), and no relation to broadcast,
+    which cost a fourth; no query gives an empty frame of the output
+    schema."""
+    from tests.spark_jobs import jobs_of
+
+    champs = champion_postings(
+        idx["postings"], idx["term_stats"], _sidx(idx).avgdl, 20
+    ).persist()
+    champs.count()
+    rows, jobs = jobs_of(
+        spark,
+        lambda: search_bm25_champion(spark, champs, QUERIES, k=10).collect(),
+        "champion-batch",
+    )
+    champs.unpersist()
+    assert rows and jobs == 3, jobs
+    empty = search_bm25_champion(spark, champs, [], k=10)
+    assert empty.collect() == [] and empty.columns == ["query", "doc_id", "score", "rank"]

@@ -15,6 +15,7 @@ from distributed_search_engine_spark.index.regex_search import (
     regex_search,
     required_clauses,
 )
+from tests import kernel_reference as R
 
 DOCS = [
     (1, "call memcpy(dst, src, n) then strcpy tail"),
@@ -72,6 +73,15 @@ def test_inline_flags_and_lookahead_are_tolerated():
 
 def test_nested_alternation():
     assert required_clauses(r"a(bc(def|ghi)jk)z") == [["def", "ghi"]]
+
+
+def test_sigma_ends_a_literal_run():
+    """The text is lowercased as a whole, where a word-final sigma becomes
+    ς, and a literal one char at a time (Σ -> σ): no run may hold one."""
+    assert required_clauses("ΟΔΟΣ") == [["οδο"]]
+    assert required_clauses("ΟΔΟΣ road") == [["οδο"], [" road"]]
+    assert required_clauses("ΣΊΣΥΦΟΣ") == [["υφο"]]
+    assert required_clauses("abcσdefςghi") == [["abc"], ["def"], ["ghi"]]
 
 
 def test_unbalanced_patterns_raise():
@@ -203,17 +213,20 @@ def test_regex_plan_verifies_after_candidate_join(spark):
     post = TRI.trigram_postings(docs)
     df = regex_search(docs, post, r"(memcpy|strcpy)\s*\(")
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # exactly ONE regex evaluation (a pushed-down filter would add a
-    # second on the docs scan), and it sits above the doc_id join
-    assert plan.count("regexp_extract_all") == 1
+    # exactly ONE regex evaluation, inside the one barrier (a filter
+    # pushed below the projection would evaluate it a second time), and
+    # it sits above the doc_id join
+    assert plan.count("regexp_extract_all") == 1, plan
+    assert plan.count("monotonically_increasing_id()") == 1, plan
     assert "Join" in plan
     assert plan.index("regexp_extract_all") < plan.index("Join")
 
 
 def test_batch_equals_per_pattern_loop(spark):
-    """regex_search_batch must reproduce the per-pattern results for
-    every pattern class: prunable, optional-group, unprunable
-    (full-scan branch), and absent-required-literal (empty)."""
+    """regex_search_batch must give the full-scan answer for every
+    pattern class: prunable, optional-group, unprunable (full-scan
+    branch), and absent-required-literal (empty), and so must each
+    single search."""
     docs = _docs(spark)
     post = TRI.trigram_postings(docs)
     from distributed_search_engine_spark.index.regex_search import (
@@ -230,9 +243,29 @@ def test_batch_equals_per_pattern_loop(spark):
         (r["pattern"], r["doc_id"]): r["n_matches"]
         for r in regex_search_batch(docs, post, pats).collect()
     }
-    want = {}
-    for p in pats:
-        for r in regex_search(docs, post, p).collect():
-            want[(p, r["doc_id"])] = r["n_matches"]
+    want = {(p, d): c for p, d, c in R.regex_matches(DOCS, pats)}
     assert got == want
     assert not any("qqqzzz" in p for p, _ in got)
+    for p in pats:
+        single = {
+            (p, r["doc_id"]): r["n_matches"]
+            for r in regex_search(docs, post, p).collect()
+        }
+        assert single == {k: c for k, c in want.items() if k[0] == p}, p
+
+
+def test_greek_sigma_patterns_equal_full_scan(spark):
+    """A word-final Σ lowercases to ς in the text: the trigram plan must
+    still find every doc a full-scan (?i) regex finds."""
+    rows = [
+        (1, "ΟΔΟΣ road"),
+        (2, "ΣΊΣΥΦΟΣ and ΟΔΟΣ"),
+        (3, "οδος lowercase"),
+        (4, "ΟΔΟΣΑ mid-word sigma"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    post = TRI.trigram_postings(docs)
+    for pat in ("ΟΔΟΣ", "ΟΔΟΣ road", "ΣΊΣΥΦΟΣ"):
+        got = sorted(map(tuple, regex_search(docs, post, pat).collect()))
+        want = [r[1:] for r in R.regex_matches(rows, [pat])]
+        assert got == want and want, pat

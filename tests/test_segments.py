@@ -46,6 +46,27 @@ def test_docnums_dense_and_deterministic(spark, built):
     assert j.where(F.col("docnum") != F.col("d2")).count() == 0
 
 
+def test_docnums_equal_a_global_row_number(spark, built):
+    """The two-phase assignment gives each doc_id the docnum a global
+    ``row_number() over (order by doc_id) - 1`` gives, also with more
+    range partitions than docs fill."""
+    from pyspark.sql import Window
+
+    _, idx, ds, _, _ = built
+    want = sorted(
+        map(
+            tuple,
+            idx["doc_stats"]
+            .select("doc_id", F.row_number().over(Window.orderBy("doc_id")) - 1)
+            .collect(),
+        )
+    )
+    assert sorted(map(tuple, ds.select("doc_id", "docnum").collect())) == want
+    wide = assign_docnums(idx["doc_stats"], n_partitions=200)
+    assert sorted(map(tuple, wide.select("doc_id", "docnum").collect())) == want
+    assert dict(ds.dtypes)["docnum"] == "bigint"
+
+
 def test_manifest_complete(built):
     *_, out = built
     done = read_manifest(out)
@@ -232,6 +253,30 @@ def test_segment_read_takes_the_stored_schema(spark, built):
     )
     plan = plan_of(seg)
     assert "part" in plan.split("PartitionFilters")[1][:200]
+
+
+def test_batch_segment_read_is_one_job(spark, built):
+    """read_segments_for_queries tags each (query, term) row through a
+    map literal: one Spark job (the pruned scan), no relation to
+    broadcast; a term repeated in a query is tagged once per repeat."""
+    from distributed_search_engine_spark.index.segments import (
+        read_segments_for_queries,
+    )
+    from tests.spark_jobs import jobs_of
+
+    *_, out = built
+    queries = {"a": ["spark", "compute"], "b": ["spark"], "c": ["spark", "spark"]}
+    rows, jobs = jobs_of(
+        spark,
+        lambda: read_segments_for_queries(spark, out, queries, N_PARTS).collect(),
+        "segments-fetch-batch",
+    )
+    assert jobs == 1, jobs
+    assert sorted((r["query_id"], r["term"]) for r in rows) == [
+        ("a", "compute"), ("a", "spark"), ("b", "spark"), ("c", "spark"), ("c", "spark"),
+    ]
+    empty = read_segments_for_queries(spark, out, {}, N_PARTS)
+    assert empty.collect() == [] and empty.columns == ["query_id", "term", "idf_bm25", "blocks"]
 
 
 def test_xxhash64_py_matches_spark(spark):

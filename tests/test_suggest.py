@@ -415,7 +415,7 @@ def test_spellcheck_of_a_very_long_word_keeps_it(spark, registered):
 def test_driver_levenshtein_equals_spark_levenshtein(spark, registered):
     """Distances to every dictionary term, non-ASCII words included:
     both count code points."""
-    from distributed_search_engine_spark.query.engine import local_frame
+    from distributed_search_engine_spark.literals import local_frame
     from distributed_search_engine_spark.query.suggest import (
         _VOCABULARIES,
         reasonable_terms,
